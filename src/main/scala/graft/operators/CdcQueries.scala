@@ -191,8 +191,10 @@ object CdcQueries {
     // common subtrees, so the whole synth→base64→JSON-decode→explode
     // chain ran once per branch (r19 plan audit: 3 customer scans → 1).
     // Batch-fixture-side only — the streaming pipeline's frames can't
-    // (and don't) checkpoint; there the source is consumed once per
-    // micro-batch plan.
+    // checkpoint. There the foreachBatch writers persist one decoded stage
+    // per micro-batch and read the source once; the plain
+    // CdcPipeline.writer/transform file-sink path still reads it once per
+    // branch (twice).
     CdcEnrich(changes(spark, dir).localCheckpoint(), snapshot)
       .select(
         col("attributes.type").as("attr_type"),

@@ -57,10 +57,24 @@ object ReplayBus {
     b.synchronized(b.lastOption.map(_.replayId).getOrElse(0L))
   }
 
-  /** Events with replayId in (from, to]. */
+  /** Events with replayId in (from, to]. ReplayIds ascend with the buffer
+    * index (`publish` appends last + 1), so both ends are binary-searched
+    * and only the slice between them is copied under the lock. */
   def range(topic: String, from: Long, to: Long): Seq[BusEvent] = {
     val b = buf(topic)
-    b.synchronized(b.filter(e => e.replayId > from && e.replayId <= to).toSeq)
+    b.synchronized {
+      // index of the first event whose replayId is > id
+      def after(id: Long): Int = {
+        var lo = 0
+        var hi = b.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (b(mid).replayId <= id) lo = mid + 1 else hi = mid
+        }
+        lo
+      }
+      b.view.slice(after(from), after(to)).toVector
+    }
   }
 
   def clear(topic: String): Unit = {

@@ -118,6 +118,24 @@ class CdcReplaySourceSpec extends SparkSpec {
       .option("topic", topic).option("replayFrom", "5").option("replayUntil", "15")
       .load().select("value").as[String].collect().sorted
     assert(sub.toSeq == (6 to 15).map(i => s"e$i").sorted)
+    // ReplayBus.range boundaries, against a filter over the whole topic
+    def ids(from: Long, to: Long) = ReplayBus.range(topic, from, to).map(_.replayId)
+    def expect(from: Long, to: Long) = (1L to 20L).filter(i => i > from && i <= to)
+    Seq((0L, 20L), (0L, 7L), (5L, 20L), (7L, 7L), (9L, 3L), (15L, 99L), (20L, 25L),
+        (0L, Long.MaxValue), (-2L, 4L)).foreach { case (from, to) =>
+      assert(ids(from, to) == expect(from, to), s"range($from, $to]")
+    }
+    assert(ReplayBus.range(topic, 3, 5).map(_.value) == Seq("e4", "e5"))
+    // past the tip through the batch read too
+    assert(spark.read.format("cdc-replay")
+      .option("topic", topic).option("replayFrom", "18").option("replayUntil", "99")
+      .load().select("value").as[String].collect().sorted.toSeq == Seq("e19", "e20"))
+    // after clear() ids restart at 1 and range sees only the new events
+    ReplayBus.clear(topic)
+    assert(ids(0, 20).isEmpty)
+    (1 to 5).foreach(i => ReplayBus.publish(topic, s"r$i"))
+    assert(ids(0, 20) == (1L to 5L))
+    assert(ReplayBus.range(topic, 2, 4).map(_.value) == Seq("r3", "r4"))
   }
 
   test("bootstrap handoff: a batch backfill to replayId X then a stream " +
@@ -330,6 +348,9 @@ class CdcReplaySourceSpec extends SparkSpec {
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom: Long => Unit = _ =>
       if (!crashed.getAndSet(true)) throw new RuntimeException("injected crash between sinks")
+    // the writer persists each staged micro-batch; it must be released
+    // whether the batch throws or completes
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     val q1 = readTopic(topic, "replayFrom" -> "-2").writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch(graft.streaming.CdcPipeline.writeBatchExactlyOnce(
@@ -338,6 +359,8 @@ class CdcReplaySourceSpec extends SparkSpec {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.awaitTermination()
     }
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "staged batch still persisted after the injected failure")
     // records landed before the crash; the DLQ write never ran
     assert(spark.read.json(s"$out/sfdc-cdc").count() == 2)
     assert(!new java.io.File(s"$out/dlq").exists())
@@ -348,6 +371,8 @@ class CdcReplaySourceSpec extends SparkSpec {
         readTopic(topic, "replayFrom" -> "-2"), snapshot, out, ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination()
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "staged batch still persisted after the replay")
     val vals = spark.read.json(s"$out/sfdc-cdc").select("value").as[String].collect()
     assert(vals.length == 2, s"record sink duplicated on replay: ${vals.length} rows")
     assert(vals.count(_.contains("Alice")) == 1 && vals.count(_.contains("Bob")) == 1)
