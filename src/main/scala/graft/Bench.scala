@@ -43,20 +43,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // override for the shuffle-partition scaling sweep (SURVEY.md §9):
-    // default ties shuffle width to core count, the local-mode optimum
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus)
       // the latency probes run ~70+ triggers per rate; the default
       // recentProgress window (100) must not evict their early batches
       .config("spark.sql.streaming.numRecentProgressUpdates", "400")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -73,9 +64,11 @@ object Bench {
       if (skipProbes) -1.0
       else try cdcThroughputSecs(spark, n) catch { case _: Throwable => -1.0 }
     def epsOnce(n: Int): Double = { val s = secsOnce(n); if (s > 0) n / s else -1.0 }
-    // warm-up is TWO probes (5k + 25k): ColdStartProfile shows the
-    // position effect is JIT compilation of the pipeline's hot paths
-    // (task CPU halves from probe 2 to probe 5 on identical code), and a
+    // warm-up is TWO probes (5k + 25k): the cold-start profile
+    // (SURVEY.md "CDC fresh-query cost"; its main is
+    // `git show 8c8f44f:src/main/scala/graft/ColdStartProfile.scala`)
+    // shows the position effect is JIT compilation of the pipeline's hot
+    // paths (task CPU halves from probe 2 to probe 5 on identical code), and a
     // 5k-event warm-up alone leaves the first timed probe paying ~0.3 s
     // of JIT. "Fresh" means a fresh streaming QUERY in a warm JVM — the
     // warm-up's job is to make the JVM actually warm. Best-of-3 mirrors
@@ -461,9 +454,10 @@ object Bench {
       s""""event":{"replayId":${i + 1}}}"""
 
   /** 4 partitions, not the default-parallelism 32: the snapshot is a
-    * 1000-row lookup table, and ColdStartProfile measured ~60 ms of
-    * per-task launch overhead at local[32] — 28 needless tasks were
-    * ~0.3 s of the fresh probe's fixed cost (r10 verdict task 2). */
+    * 1000-row lookup table, and the cold-start profile (SURVEY.md "CDC
+    * fresh-query cost") measured ~60 ms of per-task launch overhead at
+    * local[32] — 28 needless tasks were ~0.3 s of the fresh probe's fixed
+    * cost (r10 verdict task 2). */
   private def cdcSnapshot(spark: SparkSession) = {
     import org.apache.spark.sql.functions._
     spark.range(0, 1000, 1, 4)
@@ -474,9 +468,9 @@ object Bench {
   /** numShards=32 matches the probe's core count so the decode chain
     * parallelizes across all threads (the production default of 4 mirrors
     * the reference's Kinesis shard count; a throughput probe wants the
-    * ingest-cluster configuration). ColdStartProfile: 4→32 shards plus
-    * the 4-partition snapshot moved the fresh 50k probe 1.4 s → 0.87 s
-    * (37k → ~57k eps). */
+    * ingest-cluster configuration). Cold-start profile (SURVEY.md):
+    * 4→32 shards plus the 4-partition snapshot moved the fresh 50k probe
+    * 1.4 s → 0.87 s (37k → ~57k eps). */
   private def cdcThroughputSecs(spark: SparkSession, n: Int): Double = {
     import graft.sources.ReplayBus
     val topic = "bench_cdc"

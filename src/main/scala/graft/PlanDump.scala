@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan snapshot tool (optimization rounds): writes `explain("formatted")`
   * for every declared query (or the named subset) to <outDir>/<name>.txt.
   * The judge reads committed plans/r19/<query>_{before,after}.txt against
@@ -17,15 +15,8 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val all = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1434,9 +1434,10 @@ object Similarity {
 
   /** The build-degree cap — 64 since r18, so `2·log2 n` is the effective
     * default degree everywhere the fixtures (and any corpus below ~4
-    * billion vectors) can reach. The r17 corpus-scale probe
-    * (`graft.GraphServeScaleProbe`, SCALING.md "Graph-serve corpus-scale
-    * probe") measured the OLD cap of 20 as the BINDING constraint past
+    * billion vectors) can reach. The r17 corpus-scale probe (SCALING.md
+    * "Graph-serve corpus-scale probe"; its main is kept in git history,
+    * `git show 8c8f44f:src/main/scala/graft/GraphServeScaleProbe.scala`)
+    * measured the OLD cap of 20 as the BINDING constraint past
     * ~2000 vectors: `min(20, 2·log2 n)` saturates at n ≥ 1024, the graph
     * gets relatively sparser as the corpus grows, and serve recall at the
     * shipped operating point collapsed to 0.300 at 4990 vectors — while
@@ -1447,7 +1448,7 @@ object Similarity {
     * at 1e8+ vectors) and binds only past n ≈ 2^32. Gate corpora (490,
     * 1990) build at 16/20 under EITHER cap — bit-identical oracle
     * builds; the twins render the same `least(64, …)`.
-    * [[setDegreeCapOverride]] still lets a deployment — and the probe —
+    * [[setDegreeCapOverride]] still lets a deployment — and the specs —
     * PIN a different cap per (session, dir) without touching gated
     * builds (no override ⇒ default behavior). */
   private val DegreeCap = 64
@@ -1496,7 +1497,8 @@ object Similarity {
 
   /** The twin's rendering of [[buildDegree]]: `deg(k)`. Interpolates
     * [[DegreeCap]] so the engine's default and the twin cannot drift
-    * (overrides are probe-only — see [[setDegreeCapOverride]]). */
+    * (overrides are never set on gated dirs — see
+    * [[setDegreeCapOverride]]). */
   private val degCteSql: String =
     s"""deg AS (SELECT least($DegreeCap, greatest(8,
        |          2 * (length(bin(CAST(count(*) AS BIGINT))) - 1))) AS k
@@ -1782,8 +1784,10 @@ object Similarity {
     * by α would INVERT the relaxation on obtuse pairs.
     *
     * MEASURED AND PINNED AT 1.0 (r15 verdict task 4 hypothesized α≈1.2;
-    * the AlphaProbe sweep at sf0.1 — fresh JVM per α so session caches
-    * cannot mix builds, ss17 serve settings fixed — refuted it):
+    * an α sweep at sf0.1 — fresh JVM per α so session caches cannot mix
+    * builds, ss17 serve settings fixed — refuted it; SURVEY.md records
+    * the run, `git show 8c8f44f:src/main/scala/graft/AlphaProbe.scala`
+    * the sweep main):
     *
     *   α        0.7    0.8    0.9    0.95   1.0    1.1    ≥1.2
     *   recall   0.533  0.533  0.533  0.633  0.667  0.567  0.600
@@ -1794,13 +1798,10 @@ object Similarity {
     * edges are the problem diversification exists to fix); below 1.0 the
     * over-pruning the relaxation was meant to correct gets worse. The
     * r15 recall task was closed on the serve side instead — see
-    * [[ServeEntries]]' operating-point note. A build knob, kept for
-    * corpora whose sim distribution differs from the fixture's: override
-    * via GRAFT_DIVERSIFY_ALPHA only in a fresh session (build and DuckDB
-    * twin read this constant once, so Spark and oracle cannot disagree
-    * within a JVM). */
-  private[graft] val DiversifyAlpha: Double =
-    sys.env.get("GRAFT_DIVERSIFY_ALPHA").map(_.toDouble).getOrElse(1.0)
+    * [[ServeEntries]]' operating-point note. The build and the DuckDB
+    * twin both interpolate this constant, so Spark and oracle cannot
+    * disagree. */
+  private[graft] val DiversifyAlpha = 1.0
 
   /** The diversified graph caches per (session, dir) alongside the
     * descent graph it prunes. Evicted by [[clearExemplars]]. */
@@ -2272,46 +2273,6 @@ object Similarity {
         col("cos_sim"), coalesce(col("hit"), lit(false)).as("in_exact"),
         col("visited_count"))
       .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** PROBE-ONLY serve evaluation over an ARBITRARY query frame
-    * `(query_id, q)` — the instrument behind `graft.GraphServeScaleProbe`'s
-    * ≥30-query fixture (r18 verdict task 2: the 10 fixture queries give
-    * recall@3 granularity 0.033, too coarse to adjudicate one-notch knee
-    * brackets). Walks the SAME cached default adjacency and the SAME
-    * [[serveWalk]] the gated ss17 path walks (queries are independent in
-    * the walk — per-query frontiers — so serving 30 queries in one
-    * traversal is exactly 3× the gated serve, not a different algorithm),
-    * then audits against the exact brute-force top-[[AnnTopK]] of the
-    * SAME query frame. Returns one row per served neighbor:
-    * (query_id, neighbor_id, in_exact, visited_count). */
-  private[graft] def serveProbeEval(spark: SparkSession, dir: String,
-                                    q: DataFrame, beam: Int, entries: Int,
-                                    hops: Int): DataFrame = {
-    val qq = q.localCheckpoint()
-    val visited = serveUnion(serveVisitedByHopFrames(corpus(spark, dir), qq,
-      exemplarsOf(spark, dir).filter(col("cell") >= NumQueries),
-      serveAdjacency(spark, dir), beam, entries, hops))
-    val vis = visited.groupBy(col("query_id"))
-      .agg(count(lit(1)).as("visited_count"))
-    val top = visited.groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.topK(
-        col("score"), col("node_id"), AnnTopK).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.id").as("neighbor_id"))
-    val exW = Window.partitionBy(col("query_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    val exact = corpus(spark, dir).crossJoin(broadcast(qq))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Dedup.cosine(col("q"), col("v")).as("s"))
-      .withColumn("rn", row_number().over(exW))
-      .filter(col("rn") <= AnnTopK)
-      .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    top.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .join(vis, "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        coalesce(col("hit"), lit(false)).as("in_exact"),
-        col("visited_count"))
   }
 
   /** Shared serve-twin CTEs: the diversified adjacency (embedding the

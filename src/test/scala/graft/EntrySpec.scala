@@ -66,4 +66,22 @@ class EntrySpec extends SparkSpec {
     }.map(_._1)
     assert(empty.isEmpty, s"queries with empty results at sf0.001: $empty")
   }
+
+  test("sessions are built only through GraftSession — a private builder " +
+      "config would let one entry point drift from the oracle settings") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // assembled at runtime so this file does not match its own pattern
+    val builderCall = ("SparkSession" + """\s*\.\s*builder""").r
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
+    val hits = roots.flatMap { root =>
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.flatMap(f => builderCall.findAllIn(Files.readString(f))
+      .map(_ => f.getFileName.toString))
+    assert(hits == Seq("GraftSession.scala"),
+      s"session builders outside GraftSession: ${hits.mkString(", ")}")
+  }
 }

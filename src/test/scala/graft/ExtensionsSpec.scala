@@ -1,26 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.extensions.GraftExtensions
-
 /** GraftExtensions must expose the native expressions as SQL functions. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    // getOrCreate would return the shared suite session WITHOUT applying
-    // extensions — force a fresh session (same SparkContext is reused)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class ExtensionsSpec extends SparkSpec {
 
   test("cosine_sim and dot_product are callable from SQL") {
     val r = spark.sql(

@@ -6,14 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for suites — one session per JVM (Spark reuses the
   * active session across suites via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
-    .withExtensions(new graft.extensions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
