@@ -266,7 +266,6 @@ object TextHashUtil {
     val h = gramHashes60(words, k)
     val nGrams = h.length
     // sliding minimum via monotonic deque (indices, increasing values)
-    val nWin = math.max(nGrams - w + 1, 1)
     val deque = new Array[Int](nGrams)
     var head = 0
     var tail = 0 // exclusive

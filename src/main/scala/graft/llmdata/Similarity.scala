@@ -1920,24 +1920,22 @@ object Similarity {
 
   /** Serve beam width: at each hop only the [[ServeBeam]] best NEW nodes
     * per query stay on the frontier (the bounded frontier of best-first
-    * search / HNSW's ef parameter). */
-  private val ServeBeam = 9
-
-  /** Serve beam budget as a FUNCTION of corpus size — deliberately
-    * CONSTANT (= [[ServeBeam]]), and documented as such next to the two
-    * budgets that do scale ([[degreeOf]], [[serveHopsOf]]), because the
-    * r17 corpus-scale probe measured it: once build degree follows
-    * 2·log2 n (see [[degreeOf]]), beam 9 holds the iso-recall band at
-    * every corpus size probed (0.833 @ 490/deg 16, 0.800 @ 1990/deg 20,
-    * 0.767 @ 4990/deg 24 — SCALING.md part 2), and the iso-recall
-    * visited fraction FALLS monotonically (59.6% → 23.3% → 17.7%). The
-    * cap-20 retune grid shows the counterfactual: with degree frozen the
-    * beam must grow ~linearly in n/2^10 (beam 24 × entries 8 at 4990)
-    * and the visited fraction plateaus at ~23% instead of falling —
-    * i.e. beam-widening is the EXPENSIVE substitute for the degree the
-    * build should have had. Spec-pinned with the (degree, beam, hops)
-    * triple at the probe corpora (LlmDataSpec). */
-  private[graft] def serveBeamOf(n: Long): Int = ServeBeam
+    * search / HNSW's ef parameter).
+    *
+    * Deliberately CONSTANT in corpus size, unlike the two budgets that do
+    * scale ([[degreeOf]], [[serveHopsOf]]), because the r17 corpus-scale
+    * probe measured it: once build degree follows 2·log2 n (see
+    * [[degreeOf]]), beam 9 holds the iso-recall band at every corpus size
+    * probed (0.833 @ 490/deg 16, 0.800 @ 1990/deg 20, 0.767 @ 4990/deg 24
+    * — SCALING.md part 2), and the iso-recall visited fraction FALLS
+    * monotonically (59.6% → 23.3% → 17.7%). The cap-20 retune grid shows
+    * the counterfactual: with degree frozen the beam must grow ~linearly
+    * in n/2^10 (beam 24 × entries 8 at 4990) and the visited fraction
+    * plateaus at ~23% instead of falling — i.e. beam-widening is the
+    * EXPENSIVE substitute for the degree the build should have had.
+    * Spec-pinned with the (degree, beam, hops) triple at the probe
+    * corpora (LlmDataSpec). */
+  private[graft] val ServeBeam = 9
 
   /** Serve hop budget scales with the corpus, with a MEASURED knee at
     * n = 2048: hops(n) = ⌊log2 n⌋ − 4 below it (4 at the 490-vector
@@ -1961,24 +1959,6 @@ object Similarity {
     val lg = 63 - java.lang.Long.numberOfLeadingZeros(n)
     math.min(ServeHopsCap, math.max(2, lg - (if (n < 2048L) 4 else 2)))
   }
-
-  /** Entry-point budget as a function of corpus size — CONSTANT
-    * (= [[ServeEntries]]) since r19, like the beam and for the same
-    * reason: the sharper 30-query probe fixture (granularity 0.011)
-    * measured the entries ladder FLAT at both post-knee corpora —
-    * 9990: entries 2/3/4/5 read 0.744/0.744/0.767/0.711; 19990: entries
-    * 2/4/5/6/8 read 0.767/0.778/0.767/0.778/0.778 — every step within
-    * ~2 pairs (≈1σ of a 90-pair binomial), while visited cost rises
-    * monotonically (5.58% → 6.40% across the 19990 ladder). r18's
-    * +2-per-octave slope past 8192 (anchored on 2 → 0.600 at 9990) was
-    * an artifact of the 10-query instrument's 0.033 granularity and is
-    * corrected in print (SCALING.md part 5); the codebook-dilution
-    * mechanism it assumed is real geometry but its recall effect at
-    * these scales is below measurement noise, and the walk's OWN hops ×
-    * beam budget dominates entry placement once the build degree scales
-    * (2·log2 n — the r18 finding this one rhymes with: budget belongs
-    * in the structure, not the frontier). */
-  private[graft] def serveEntriesOf(n: Long): Int = ServeEntries
 
   /** Engine-side hop-budget safety cap (binds only past n = 2^16
     * vectors; a deployment at 1e8+ vectors raises it with the twin
@@ -2032,8 +2012,24 @@ object Similarity {
     * walk keeps are the ones it actually expands, and the third was
     * pure visited cost at this corpus. ss19's sweep carries the
     * operating point and its rejected neighbors under the oracle
-    * gate. */
-  private val ServeEntries = 2
+    * gate.
+    *
+    * CONSTANT in corpus size since r19, like the beam and for the same
+    * reason: the sharper 30-query probe fixture (granularity 0.011)
+    * measured the entries ladder FLAT at both post-knee corpora —
+    * 9990: entries 2/3/4/5 read 0.744/0.744/0.767/0.711; 19990: entries
+    * 2/4/5/6/8 read 0.767/0.778/0.767/0.778/0.778 — every step within
+    * ~2 pairs (≈1σ of a 90-pair binomial), while visited cost rises
+    * monotonically (5.58% → 6.40% across the 19990 ladder). r18's
+    * +2-per-octave slope past 8192 (anchored on 2 → 0.600 at 9990) was
+    * an artifact of the 10-query instrument's 0.033 granularity and is
+    * corrected in print (SCALING.md part 5); the codebook-dilution
+    * mechanism it assumed is real geometry but its recall effect at
+    * these scales is below measurement noise, and the walk's OWN hops ×
+    * beam budget dominates entry placement once the build degree scales
+    * (2·log2 n — the r18 finding this one rhymes with: budget belongs
+    * in the structure, not the frontier). */
+  private[graft] val ServeEntries = 2
 
   /** The undirected serve adjacency caches per (session, dir) alongside
     * the descent graph it is derived from — it IS the index artifact the
@@ -2089,9 +2085,8 @@ object Similarity {
         math.max(MaxServeHops, serveHops(spark, dir))))
 
   private def standardVisited(spark: SparkSession, dir: String): DataFrame = {
-    val n = corpusCount(spark, dir)
     // visited after `serveHops` hops = entry piece + pieces 1..serveHops
-    serveUnion(servePieces(spark, dir, serveBeamOf(n), serveEntriesOf(n))
+    serveUnion(servePieces(spark, dir, ServeBeam, ServeEntries)
       .take(serveHops(spark, dir) + 1))
   }
 
@@ -2153,8 +2148,7 @@ object Similarity {
     serveCore(spark, dir,
       undirected(current.select(col("src_id"), col("neighbor_id")))
         .localCheckpoint(),
-      serveBeamOf(corpusCount(spark, dir)), serveHops(spark, dir),
-      serveEntriesOf(corpusCount(spark, dir)))
+      ServeBeam, serveHops(spark, dir), ServeEntries)
   }
 
   /** One bounded traversal at (beam, entries) to `hops` depth, returning
@@ -2420,13 +2414,12 @@ object Similarity {
       .select(col("cell").as("node_id"))
     val entry = sqOf(q.select(col("query_id")).crossJoin(broadcast(exCells)))
       .withColumn("rn", row_number().over(entW))
-      .filter(col("rn") <= serveEntriesOf(corpusCount(spark, dir))).drop("rn")
+      .filter(col("rn") <= ServeEntries).drop("rn")
     // the SQ-scored walk caches per (session, dir) like ss17's exact
     // walk — one traversal per battery, assemblies re-read it
     val visited = sqVisitedCache.get(spark, dir)(
       serveUnion(serveWalk(entry, serveAdjacency(spark, dir),
-        serveBeamOf(corpusCount(spark, dir)),
-        serveHops(spark, dir), sqOf)))
+        ServeBeam, serveHops(spark, dir), sqOf)))
     val vis = visited.groupBy(col("query_id"))
       .agg(count(lit(1)).as("visited_count"))
     val short = visited.groupBy(col("query_id"))
@@ -3043,7 +3036,7 @@ object Similarity {
     * would hide a half-applied probe session) — fail loudly AT THE
     * FORMULA, not as a downstream hash mismatch: a probe override left
     * set on the dir, or a future gate fixture large enough that the
-    * corpus-scaled budgets outgrow the twin's static unroll, both surface
+    * corpus-scaled hop budget outgrows the twin's static unroll, both surface
     * here by name instead of as an inscrutable oracle diff. */
   private def gatedGraph(name: String, serve: Boolean)(
       f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
@@ -3055,14 +3048,13 @@ object Similarity {
           "(clearDegreeCapOverride first, or serve via graphServeOver)")
       if (serve) {
         val n = corpusCount(spark, dir)
-        val (h, e) = (serveHopsOf(n), serveEntriesOf(n))
-        if (h > MaxServeHops || e != ServeEntries)
+        val h = serveHopsOf(n)
+        if (h > MaxServeHops)
           throw new IllegalStateException(
             s"$name is oracle-gated but $dir has corpus n=$n, whose " +
-            s"corpus-scaled serve budgets (hops $h, entries $e) exceed " +
-            s"the twin's static unroll ($MaxServeHops hops, " +
-            s"$ServeEntries entries) — raise MaxServeHops/the entry " +
-            "unroll in the twin SQL and re-time the baseline")
+            s"corpus-scaled serve hop budget ($h) exceeds the twin's " +
+            s"static unroll ($MaxServeHops hops) — raise MaxServeHops " +
+            "in the twin SQL and re-time the baseline")
       }
       f(spark, dir)
     }

@@ -84,7 +84,7 @@ object CdcMaterialize {
     * reader therefore first tries to complete the interrupted swap —
     * rename the NEWEST staging generation into place — before concluding
     * there is no prior state. */
-  private def mergeState(stateDir: String, batch: DataFrame, batchId: Long)(
+  private[operators] def mergeState(stateDir: String, batch: DataFrame, batchId: Long)(
       merge: Option[DataFrame] => DataFrame): Unit = {
     val spark = batch.sparkSession
     val tmp = s"$stateDir.staging-$batchId"

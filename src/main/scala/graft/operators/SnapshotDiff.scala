@@ -72,7 +72,10 @@ object SnapshotDiff {
     * diff the incoming snapshot against the persisted previous one, append
     * the resulting change events (tagged with the snapshot version) to an
     * event LEDGER, then swap the state to the new snapshot. The first
-    * snapshot is the initial load — every row emits as CREATE.
+    * snapshot is the initial load — every row emits as CREATE. The read
+    * and the swap are [[CdcMaterialize.mergeState]]'s: only a MISSING
+    * state counts as the initial load; an unreadable one throws, so a
+    * damaged state is never silently re-emitted as CREATEs and replaced.
     *
     * Idempotence: a REPLAYED trigger (at-least-once delivery) diffs the
     * snapshot against the state it already produced — an identical-
@@ -85,26 +88,25 @@ object SnapshotDiff {
     * this operator is the seam where that transport plugs in. */
   def foreachBatchReconcile(stateDir: String, ledgerDir: String, key: String,
       valueCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val snap = batch.drop("version")
     val ver = batch.agg(max(col("version"))).head().getLong(0)
-    val prev =
-      try Some(spark.read.parquet(stateDir)) catch { case _: Exception => None }
-    val events = prev match {
-      case Some(p) => diff(p, snap, key, valueCols)
-      case None => // initial load: everything is a CREATE
-        val sorted = valueCols.sorted
-        snap.select(col(key) +: lit("CREATE").as("change_type") +:
-          lit("").as("changed_fields") +:
-          sorted.flatMap(c => Seq(
-            lit(null).cast(snap.schema(c).dataType).as(s"old_$c"),
-            col(c).as(s"new_$c"))): _*)
+    CdcMaterialize.mergeState(stateDir, batch, batchId) { prev =>
+      val events = prev match {
+        case Some(p) => diff(p, snap, key, valueCols)
+        case None => // initial load: everything is a CREATE
+          val sorted = valueCols.sorted
+          snap.select(col(key) +: lit("CREATE").as("change_type") +:
+            lit("").as("changed_fields") +:
+            sorted.flatMap(c => Seq(
+              lit(null).cast(snap.schema(c).dataType).as(s"old_$c"),
+              col(c).as(s"new_$c"))): _*)
+      }
+      // events first — the ledger append completes before mergeState
+      // stages and swaps in the new state
+      events.withColumn("version", lit(ver))
+        .write.mode("append").parquet(ledgerDir)
+      snap
     }
-    // events first — the append fully consumes `prev` before the swap
-    // deletes the files it read; `snap` reads only the batch
-    events.withColumn("version", lit(ver))
-      .write.mode("append").parquet(ledgerDir)
-    snap.write.mode("overwrite").parquet(stateDir)
   }
 
   /** The reconciliation ledger with the at-least-once dedupe applied:

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twins of the batch event analytics (EventsAnalytics): the same
   * logical operations expressed over an unbounded source. The reference has
@@ -188,93 +188,5 @@ object EventStreamOps {
             closed.reverseIterator
           }
       }
-  }
-
-  /** Gap sessionization on Spark 4's `transformWithState` (arbitrary
-    * stateful processing v2) — the THIRD implementation of the same
-    * session semantics, alongside [[sessionize]] (flatMapGroupsWithState)
-    * and `sessionWindowAgg` (native session_window), and the one a new
-    * deployment should reach for: typed per-key state handles (ValueState
-    * here; List/Map state without serializing a whole blob per update),
-    * first-class event-time TIMERS (registered/deleted explicitly — the
-    * GroupStateTimeout machinery made explicit), and state-schema
-    * evolution support. Runtime contract: transformWithState REQUIRES the
-    * RocksDB state-store provider — the config RocksDbStateSpec already
-    * pins for the rest of the streaming tier.
-    *
-    * Semantics are [[sessionize]]'s exactly (same sort, same fold, same
-    * close-at-watermark rule via a timer at last+gap); the parity spec
-    * replays one fixture through both and asserts identical session sets.
-    *
-    * Scale: state = one SessionState per open (user) partition-local in
-    * RocksDB; one timer per open session (deleted and re-registered as the
-    * session extends), fired by the watermark — O(active users), never
-    * O(events). */
-  class SessionTwsProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, SessionOut] {
-    @transient private var state: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionState]("session",
-        org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var closed = List.empty[SessionOut]
-      var cur = if (state.exists()) Some(state.get()) else None
-      val hadTimer = cur.map(_.last + gapMs)
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= gapMs =>
-            cur = Some(s.copy(last = math.max(s.last, t), nEvents = s.nEvents + 1))
-          case Some(s) =>
-            closed ::= SessionOut(userId, s.start, s.last, s.nEvents)
-            cur = Some(SessionState(t, t, 1))
-          case None =>
-            cur = Some(SessionState(t, t, 1))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        val want = s.last + gapMs
-        if (!hadTimer.contains(want)) {
-          hadTimer.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(want)
-        }
-      }
-      closed.reverseIterator
-    }
-
-    override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] = {
-      if (!state.exists()) Iterator.empty
-      else {
-        val s = state.get()
-        // only close if THIS timer is the session's live close time (a
-        // stale timer from an extended session deletes itself above, but
-        // replay interleavings make the guard cheap insurance)
-        if (s.last + gapMs == expiredTimerInfo.getExpiryTimeInMs) {
-          state.clear()
-          Iterator.single(SessionOut(userId, s.start, s.last, s.nEvents))
-        } else Iterator.empty
-      }
-    }
-  }
-
-  /** [[sessionize]] re-expressed on transformWithState — see
-    * [[SessionTwsProcessor]] for the why and the runtime contract. */
-  def sessionizeTws(
-      events: Dataset[Event],
-      gapMs: Long = 30 * 60 * 1000L,
-      watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTwsProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append(),
-        implicitly[org.apache.spark.sql.Encoder[SessionOut]])
   }
 }

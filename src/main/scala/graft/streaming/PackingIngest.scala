@@ -81,9 +81,9 @@ object PackingIngest {
     * exploded into the same per-bin document segments
     * [[graft.llmdata.Curation.writeShardFiles]] emits — the shard is the
     * identical seeded (source, bin) hash, recomputed (never joined) — and
-    * written with the exactlyOnceBatchWrite idiom: `partitionBy(shard,
-    * batch_id)` + dynamic partition overwrite, so a replayed batch
-    * rewrites exactly its own partitions with the identical rows (the
+    * written through [[CdcPipeline.exactlyOnceBatchWrite]] under
+    * `batch_id=<n>/shard=<s>/` (dynamic partition overwrite), so a replayed
+    * batch rewrites exactly its own partitions with the identical rows (the
     * packer's placements are state-replay-deterministic). Segments are
     * append-only — a bin spanning micro-batches accumulates its segments
     * across batch partitions without conflict — so the reader is a plain
@@ -98,7 +98,7 @@ object PackingIngest {
                                 batchId: Long): Unit = {
     if (batch.isEmpty) return
     val budget = lit(Budget)
-    batch.toDF()
+    val segments = batch.toDF()
       .select(col("source"), col("doc_id"), col("tok_offset"), col("n_bpe"),
         explode(sequence(col("start_bin"), col("end_bin"))).as("bin"))
       .select(col("source"), col("bin"), col("doc_id"),
@@ -110,11 +110,7 @@ object PackingIngest {
           - greatest(col("bin") * budget, col("tok_offset"))).as("seg_len"))
       .withColumn("shard",
         graft.llmdata.Curation.shardOf(graft.llmdata.Curation.epochHash(0)))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard", "batch_id")
-      .parquet(out)
+    CdcPipeline.exactlyOnceBatchWrite(segments, batchId, Seq("shard")).parquet(out)
   }
 
   /** The stateful packer: keyed by source, state = (next free token

@@ -215,14 +215,14 @@ class CdcReplaySourceSpec extends SparkSpec {
     val snapshot = Seq(("001A", "Alice Corp")).toDF("Id", "Name")
     val out = Files.createTempDirectory("writer_out").toString
     val ckpt = Files.createTempDirectory("writer_ckpt").toString
-    val q = graft.streaming.CdcPipeline.writer(
+    val q = graft.streaming.CdcPipeline.writerExactlyOnce(
         readTopic(topic, "replayFrom" -> "-2"), snapshot, out, ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    // reference layout: <out>/sfdc-cdc/entityName=<entity>/*.json
-    val base = new java.io.File(s"$out/sfdc-cdc")
-    val dirs = base.listFiles().filter(_.isDirectory).map(_.getName)
-      .filterNot(_ == "_spark_metadata").sorted
+    // reference layout under the batch partition:
+    // <out>/sfdc-cdc/batch_id=<n>/entityName=<entity>/*.json
+    val base = new java.io.File(s"$out/sfdc-cdc/batch_id=0")
+    val dirs = base.listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.toSeq == Seq("entityName=Account", "entityName=Contact"))
     val rows = spark.read.json(s"$out/sfdc-cdc").select("value").as[String].collect()
     assert(rows.length == 2)
@@ -247,7 +247,7 @@ class CdcReplaySourceSpec extends SparkSpec {
     val out = Files.createTempDirectory("dlq_out").toString
     val ckpt = Files.createTempDirectory("dlq_ckpt").toString
     def runOnce(): Unit = {
-      val q = graft.streaming.CdcPipeline.writerWithDlq(
+      val q = graft.streaming.CdcPipeline.writerExactlyOnce(
           readTopic(topic, "replayFrom" -> "-2"), snapshot, out, ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -272,65 +272,12 @@ class CdcReplaySourceSpec extends SparkSpec {
     assert(spark.read.json(s"$out/dlq").count() == 2)
   }
 
-  test("writerWithDlq exactly-once: a crash BETWEEN the two sinks replays without duplicating") {
+  test("writerExactlyOnce: crash between sinks replays without duplicates and WITHOUT markers") {
     // foreachBatch is at-least-once per sink: a crash after the record
     // write but before the DLQ write replays the WHOLE batch (same
-    // batchId) on restart. The per-(sink, batchId) commit markers must
-    // make the replay skip the already-committed record sink and complete
-    // only the missing DLQ write — the delivery contract stated in
-    // idempotentSinkWrite's scaladoc, adjudicated here with a real kill.
-    val topic = "t_dlq_crash"
-    ReplayBus.clear(topic)
-    def env(id: Long, rid: String): String =
-      s"""{"schema":"fp","payload":{"ChangeEventHeader":{"commitNumber":1,""" +
-        s""""commitUser":"u","sequenceNumber":1,"entityName":"Account",""" +
-        s""""changeType":"CREATE","changedFields":[],"changeOrigin":"t",""" +
-        s""""transactionKey":"tk","commitTimestamp":1583300894000,""" +
-        s""""recordIds":["$rid"]}},"event":{"replayId":$id}}"""
-    ReplayBus.publish(topic, env(1, "001A"))
-    ReplayBus.publish(topic, """{"oops""")                       // -> dlq_bad_json
-    ReplayBus.publish(topic, env(2, "001B"))
-    val snapshot = Seq(("001A", "Alice"), ("001B", "Bob")).toDF("Id", "Name")
-    val out = Files.createTempDirectory("dlq_crash_out").toString
-    val ckpt = Files.createTempDirectory("dlq_crash_ckpt").toString
-    // attempt 1: injected failure between the record write and the DLQ
-    // write — exactly the window where a naive two-sink foreachBatch
-    // duplicates on replay
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val boom: Long => Unit = _ =>
-      if (!crashed.getAndSet(true)) throw new RuntimeException("injected crash between sinks")
-    val q1 = readTopic(topic, "replayFrom" -> "-2").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(graft.streaming.CdcPipeline.writeBatchWithDlq(
-        snapshot, out, betweenSinks = boom) _)
-      .trigger(Trigger.AvailableNow()).start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.awaitTermination()
-    }
-    // records landed before the crash; the DLQ write never ran
-    assert(spark.read.json(s"$out/sfdc-cdc").count() == 2)
-    assert(!new java.io.File(s"$out/dlq").exists())
-    // attempt 2: restart the PRODUCTION writer on the same checkpoint —
-    // the batch replays under its original batchId
-    val q2 = graft.streaming.CdcPipeline.writerWithDlq(
-        readTopic(topic, "replayFrom" -> "-2"), snapshot, out, ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    // record sink NOT duplicated (marker skipped it); DLQ completed
-    val vals = spark.read.json(s"$out/sfdc-cdc").select("value").as[String].collect()
-    assert(vals.length == 2, s"record sink duplicated on replay: ${vals.length} rows")
-    assert(vals.count(_.contains("Alice")) == 1 && vals.count(_.contains("Bob")) == 1)
-    val dlq = spark.read.json(s"$out/dlq").select("reason").as[String].collect()
-    assert(dlq.toSeq == Seq("dlq_bad_json"))
-  }
-
-  test("writerExactlyOnce: crash between sinks replays without duplicates and WITHOUT markers") {
-    // the marker protocol above leaves one residual window (crash between
-    // a sink's data write and its marker). The batch_id partition-
-    // overwrite target closes it: replaying a batch rewrites its own
-    // partition, so no duplicate is POSSIBLE and no marker exists to
-    // race. Same kill, same replay — but the no-duplicate outcome holds
-    // with zero _commits machinery.
+    // batchId) on restart. The batch_id partition-overwrite target makes
+    // that replay rewrite its own partition, so no duplicate is POSSIBLE
+    // and no commit marker is needed.
     val topic = "t_eo_crash"
     ReplayBus.clear(topic)
     def env(id: Long, rid: String): String =

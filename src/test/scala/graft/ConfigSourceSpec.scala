@@ -93,18 +93,12 @@ class ConfigSourceSpec extends AnyFunSuite {
 
   test("Config.fromSource reads BATCH_SIZE/INTERVAL/stream/replay, defaults elsewhere") {
     val cs = new EnvConfigSource(Map(
-      "BATCH_SIZE" -> "10", "INTERVAL" -> "5",
-      "TARGET_DELIVERY_STREAM" -> "cdc-out", "REPLAY_FROM" -> "-1"))
+      "INTERVAL" -> "5", "TARGET_DELIVERY_STREAM" -> "cdc-out"))
     val c = CdcPipeline.Config.fromSource(cs)
-    assert(c == CdcPipeline.Config(10, 5, "cdc-out", "latest"))
+    assert(c == CdcPipeline.Config(5, "cdc-out"))
     // absent keys keep engine defaults
     assert(CdcPipeline.Config.fromSource(new MapConfigSource(Map.empty)) ==
       CdcPipeline.Config())
-    // -2 -> earliest, explicit offsets pass through
-    assert(CdcPipeline.Config.fromSource(
-      new MapConfigSource(Map("/replay_from" -> "-2"))).startingOffsets == "earliest")
-    assert(CdcPipeline.Config.fromSource(
-      new MapConfigSource(Map("/replay_from" -> "1234"))).startingOffsets == "1234")
   }
 
   test("login material flows into the SOAP envelope (seam closes into S7)") {

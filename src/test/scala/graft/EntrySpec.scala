@@ -71,17 +71,25 @@ class EntrySpec extends SparkSpec {
       "config would let one entry point drift from the oracle settings") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    // assembled at runtime so this file does not match its own pattern
-    val builderCall = ("SparkSession" + """\s*\.\s*builder""").r
+    // one decision, one home: each pattern may appear in exactly one file,
+    // once. Assembled at runtime so this file does not match its own
+    // patterns.
+    val homes = Seq(
+      ("SparkSession" + """\s*\.\s*builder""").r -> "GraftSession.scala",
+      // the batch_id partition overwrite (CdcPipeline.exactlyOnceBatchWrite)
+      ("partitionOverwriteMode" + """"\s*,\s*"dynamic""").r -> "CdcPipeline.scala")
     val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
-    val hits = roots.flatMap { root =>
+    val sources = roots.flatMap { root =>
       val walk = Files.walk(root)
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    }.flatMap(f => builderCall.findAllIn(Files.readString(f))
-      .map(_ => f.getFileName.toString))
-    assert(hits == Seq("GraftSession.scala"),
-      s"session builders outside GraftSession: ${hits.mkString(", ")}")
+    }.map(f => f.getFileName.toString -> Files.readString(f))
+    for ((pattern, home) <- homes) {
+      val hits = sources.flatMap { case (name, text) =>
+        pattern.findAllIn(text).map(_ => name)
+      }
+      assert(hits == Seq(home), s"'$pattern' outside $home: ${hits.mkString(", ")}")
+    }
   }
 }

@@ -2996,8 +2996,8 @@ class LlmDataSpec extends SparkSpec {
       "measured constants (SCALING.md 'Graph-serve corpus-scale probe')") {
     import graft.llmdata.Similarity
     def budget(n: Long) =
-      (Similarity.degreeOf(n), Similarity.serveBeamOf(n),
-        Similarity.serveEntriesOf(n), Similarity.serveHopsOf(n))
+      (Similarity.degreeOf(n), Similarity.ServeBeam,
+        Similarity.ServeEntries, Similarity.serveHopsOf(n))
     // the three r17 probe corpora plus the r18/r19 octave extensions,
     // each pinned at its measured iso-recall point: build degree
     // 2·log2 n; hop depth log2 n − 4 below the 2048 knee (gate corpora —
@@ -3039,13 +3039,12 @@ class LlmDataSpec extends SparkSpec {
     } finally Similarity.clearDegreeCapOverride(spark, d)
     // the r18 ADVICE assertion: every dir the oracle gate (sf0.001/sf0.01
     // at 490 corpus vectors, sf0.1 at 1990) can read satisfies
-    // hops ≤ 6 (the twin unroll) and entries == 2 at the DEFAULT
-    // formulas — the runtime guard above enforces the same contract for
+    // hops ≤ 6 (the twin unroll) at the DEFAULT formula and the twin's
+    // 2 entries — the runtime guard above enforces the hop contract for
     // any future, larger gate fixture
-    for (n <- Seq(490L, 990L, 1990L)) {
+    for (n <- Seq(490L, 990L, 1990L))
       assert(Similarity.serveHopsOf(n) <= 6, s"n=$n outgrew the twin unroll")
-      assert(Similarity.serveEntriesOf(n) == 2, s"n=$n entries formula moved")
-    }
+    assert(Similarity.ServeEntries == 2, "entries constant moved")
   }
 
   test("dd6: hashed-gram pipeline equals an unhashed string-gram derivation " +

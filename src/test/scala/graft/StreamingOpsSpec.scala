@@ -482,6 +482,24 @@ class StreamingOpsSpec extends SparkSpec {
       "restarted reconciliation must emit the identical event ledger")
   }
 
+  test("snapshot reconciliation: an unreadable state throws instead of " +
+      "re-emitting the snapshot as an initial load") {
+    import graft.operators.SnapshotDiff
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("snap_bad")
+    val state = Files.createDirectories(root.resolve("state"))
+    val stateFile = state.resolve("part-00000.parquet")
+    Files.writeString(stateFile, "not parquet")
+    val ledger = root.resolve("ledger")
+    val batch = Seq(("k1", "a", 1.0, 1L)).toDF("id", "name", "bal", "version")
+    intercept[Exception] {
+      SnapshotDiff.foreachBatchReconcile(state.toString, ledger.toString, "id",
+        Seq("name", "bal"))(batch, 0L)
+    }
+    assert(!Files.exists(ledger), "no CREATE events may reach the ledger")
+    assert(Files.readString(stateFile) == "not parquet", "state must not be replaced")
+  }
+
   test("composition: cdc decode -> bloom-gated admission -> scd2 state across a restart") {
     // The full ingest composition the engine exists for: a replayable CDC
     // bus delivers document change events; each micro-batch is decoded
@@ -863,52 +881,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(custom == native,
       "custom-state sessions (end = last event) must map onto native " +
         "session windows (end = last event + gap)")
-  }
-
-  test("sessionizeTws: the transformWithState sessionizer matches " +
-      "flatMapGroupsWithState exactly, incl. the timer-driven close") {
-    implicit val ctx = spark.sqlContext
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(ProviderKey)
-    // transformWithState REQUIRES the RocksDB provider (its documented
-    // runtime contract — the config RocksDbStateSpec pins anyway)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batches = Seq(
-        Seq(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:05:00")),
-        Seq(ev(3, "2024-01-01 12:00:00")),
-        // user 2 advances the watermark past 12:00+gap so user 1's open
-        // session closes via TIMER, not via a successor event
-        Seq(ev(10, "2024-01-01 13:00:00", user = 2L)),
-        Seq(ev(11, "2024-01-01 13:01:00", user = 2L)))
-      def run(name: String,
-          f: org.apache.spark.sql.Dataset[Event] =>
-            org.apache.spark.sql.Dataset[EventStreamOps.SessionOut]) = {
-        val stream = MemoryStream[Event]
-        val q = f(stream.toDS()).writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-        try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-        finally q.stop()
-        spark.table(name)
-          .select($"user_id", $"session_start_ms", $"session_end_ms", $"n_events")
-          .as[(Long, Long, Long, Long)].collect().toSet
-      }
-      val viaFmgws = run("tws_parity_a",
-        ds => EventStreamOps.sessionize(ds, gapMs = 10 * 60 * 1000L,
-          watermarkDelay = "0 seconds"))
-      val viaTws = run("tws_parity_b",
-        ds => EventStreamOps.sessionizeTws(ds, gapMs = 10 * 60 * 1000L,
-          watermarkDelay = "0 seconds"))
-      assert(viaTws == viaFmgws, s"tws $viaTws != fmgws $viaFmgws")
-      // the timer really fired: user 1's 12:00 singleton is closed
-      assert(viaTws.exists { case (u, s, _, n) => u == 1L && n == 1L &&
-        s == Timestamp.valueOf("2024-01-01 12:00:00").getTime })
-      assert(viaTws.size == 2, "user 2's session stays open (watermark short)")
-    } finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
   }
 
   test("sessionize: gap splits sessions; in-batch ordering is by (ts, id)") {
