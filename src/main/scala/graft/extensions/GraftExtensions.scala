@@ -1,12 +1,11 @@
 package graft.extensions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftColumn, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 
-import org.apache.spark.sql.catalyst.expressions.Literal
-
-import graft.functions.{BpeDecodeBytes, BpeEncode, BpeEncodeBytes, CosineSimilarity, DamerauLevenshtein, DecodedPhash, DotProduct, HammingDistance, HyperplaneLshCode, JaccardSimilarity, JaroWinklerSim, MinHashSignature, PayloadPhash, SimHashBits, StubReencodeExpr, WinnowFingerprints}
+import graft.functions.{CosineSimilarity, DotProduct, LshFunctions, TextHashFunctions => F}
 
 /** SparkSessionExtensions entry point: registers graft's native SQL
   * functions so `spark.sql("SELECT cosine_sim(a, b) ...")` works too.
@@ -27,36 +26,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         FunctionIdentifier(name),
         new ExpressionInfo(clazz.getName, name),
         build))
+    // a Column-API def of graft.functions, registered under its SQL name
+    def native(name: String, build: Seq[Expression] => Column): Unit =
+      reg(name, classOf[StaticInvoke], args => GraftColumn.expr(build(args)))
+    def c(e: Expression): Column = GraftColumn.of(e)
 
     reg("cosine_sim", classOf[CosineSimilarity], args => CosineSimilarity(args(0), args(1)))
     reg("dot_product", classOf[DotProduct], args => DotProduct(args(0), args(1)))
-    reg("simhash32", classOf[SimHashBits], args => SimHashBits(args(0), 32))
-    reg("simhash64", classOf[SimHashBits], args => SimHashBits(args(0), 64))
-    reg("minhash_sig", classOf[MinHashSignature],
-      args => MinHashSignature(args(0), intArg(args(1), "minhash_sig")))
-    reg("hamming", classOf[HammingDistance], args => HammingDistance(args(0), args(1)))
-    reg("jaccard", classOf[JaccardSimilarity], args => JaccardSimilarity(args(0), args(1)))
-    reg("lsh_code", classOf[HyperplaneLshCode], args => HyperplaneLshCode(args(0)))
-    reg("phash64", classOf[PayloadPhash],
-      args => PayloadPhash(args(0), intArg(args(1), "phash64")))
-    reg("decoded_phash64", classOf[DecodedPhash],
-      args => DecodedPhash(args(0), intArg(args(1), "decoded_phash64")))
-    reg("stub_reencode", classOf[StubReencodeExpr], args => StubReencodeExpr(args(0)))
-    reg("damerau", classOf[DamerauLevenshtein],
-      args => DamerauLevenshtein(args(0), args(1)))
-    reg("jaro_winkler", classOf[JaroWinklerSim],
-      args => JaroWinklerSim(args(0), args(1)))
-    reg("winnow_fps", classOf[WinnowFingerprints],
-      args => WinnowFingerprints(args(0), intArg(args(1), "winnow_fps"),
-        intArg(args(2), "winnow_fps")))
-    reg("bpe_encode", classOf[BpeEncode], args =>
-      if (args.length > 1) BpeEncode(args(0), intArg(args(1), "bpe_encode"))
-      else BpeEncode(args(0)))
-    reg("bpe_encode_bytes", classOf[BpeEncodeBytes], args =>
-      if (args.length > 1)
-        BpeEncodeBytes(args(0), intArg(args(1), "bpe_encode_bytes"))
-      else BpeEncodeBytes(args(0)))
-    reg("bpe_decode_bytes", classOf[BpeDecodeBytes],
-      args => BpeDecodeBytes(args(0)))
+    native("simhash32", a => F.simhash32(c(a(0))))
+    native("simhash64", a => F.simhash64(c(a(0))))
+    native("minhash_sig", a => F.minhashSig(c(a(0)), intArg(a(1), "minhash_sig")))
+    native("hamming", a => F.hamming(c(a(0)), c(a(1))))
+    native("jaccard", a => F.jaccard(c(a(0)), c(a(1))))
+    native("lsh_code", a => LshFunctions.lshCode(c(a(0))))
+    native("phash64", a => F.phash64(c(a(0)), intArg(a(1), "phash64")))
+    native("decoded_phash64",
+      a => F.decodedPhash64(c(a(0)), intArg(a(1), "decoded_phash64")))
+    native("stub_reencode", a => F.stubReencode(c(a(0))))
+    native("damerau", a => F.damerau(c(a(0)), c(a(1))))
+    native("jaro_winkler", a => F.jaroWinkler(c(a(0)), c(a(1))))
+    native("winnow_fps", a => F.winnowFps(c(a(0)), intArg(a(1), "winnow_fps"),
+      intArg(a(2), "winnow_fps")))
+    native("bpe_encode", a =>
+      if (a.length > 1) F.bpeEncode(c(a(0)), intArg(a(1), "bpe_encode"))
+      else F.bpeEncode(c(a(0))))
+    native("bpe_encode_bytes", a =>
+      if (a.length > 1) F.bpeEncodeBytes(c(a(0)), intArg(a(1), "bpe_encode_bytes"))
+      else F.bpeEncodeBytes(c(a(0))))
+    native("bpe_decode_bytes", a => F.bpeDecodeBytes(c(a(0))))
   }
 }

@@ -2,11 +2,7 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM core of the BYTE-level BPE tokenizer apply (tx30) — the
@@ -162,64 +158,4 @@ object BpeBytesUtil {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `bpe_encode_bytes(text[, n_merges])` → array<string> of byte-level
-  * BPE tokens under the first-`n_merges` prefix of the trained byte
-  * table (default: the mid-band [[graft.llmdata.BpeMergesBytes.BandN]]);
-  * see [[BpeBytesUtil]]. */
-case class BpeEncodeBytes(child: Expression, nMerges: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if nMerges > 0 &&
-      nMerges <= graft.llmdata.BpeMergesBytes.Full.length =>
-      TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode_bytes: merge-table prefix $nMerges out of range 1..${graft.llmdata.BpeMergesBytes.Full.length}")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode_bytes requires string, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode_bytes"
-
-  override def nullSafeEval(text: Any): Any =
-    BpeBytesUtil.encodeText(text.asInstanceOf[UTF8String], nMerges)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.BpeBytesUtil.encodeText($a, $nMerges)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeBytes =
-    copy(child = newChild)
-}
-
-object BpeEncodeBytes {
-  /** Default table: the mid-band prefix (see [[graft.llmdata.BpeMergesBytes]]). */
-  def apply(child: Expression): BpeEncodeBytes =
-    BpeEncodeBytes(child, graft.llmdata.BpeMergesBytes.BandN)
-}
-
-/** `bpe_decode_bytes(tokens)` → string: the byte-level DETOKENIZER —
-  * see [[BpeBytesUtil.decodeText]]. Stateless (no vocab, no table), so
-  * unlike [[BpeDecodeIds]] it is registrable on the SQL surface. */
-case class BpeDecodeBytes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_decode_bytes requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_decode_bytes"
-
-  override def nullSafeEval(tokens: Any): Any =
-    BpeBytesUtil.decodeText(tokens.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.BpeBytesUtil.decodeText($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeDecodeBytes =
-    copy(child = newChild)
 }

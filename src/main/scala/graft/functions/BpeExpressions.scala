@@ -29,12 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.llmdata.BpeMerges.BandN]]) and `bpe_encode(text, n)` an
   * explicit n-merge prefix (the cross-domain audit runs the full
   * realistic-size table where it is non-degenerate). The table is a
-  * few-thousand-entry constant that ships inside the expression itself,
+  * few-thousand-entry constant compiled into this object,
   * i.e. the degenerate best case of a broadcast: zero shuffle, zero
   * build side, the encode runs scan-side inside WholeStageCodegen.
   *
   * Scale shape: the classic vocabulary trick (encode DISTINCT words,
-  * join back) would cost two shuffles at 100 TB; instead the expression
+  * join back) would cost two shuffles at 100 TB; instead the encoder
   * memoizes per-word encodings in a bounded per-JVM cache
   * ([[BpeUtil.MemoCap]] entries per table — natural-language
   * vocabularies are Heaps-law sublinear, so the hot head fits), which
@@ -239,40 +239,6 @@ object BpeUtil {
   }
 }
 
-/** `bpe_encode(text[, n_merges])` → array<string> of BPE tokens under the
-  * first-`n_merges` prefix of the trained table (default: the mid-band
-  * [[graft.llmdata.BpeMerges.BandN]]); see [[BpeUtil]]. */
-case class BpeEncode(child: Expression, nMerges: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if nMerges > 0 &&
-      nMerges <= graft.llmdata.BpeMerges.Full.length =>
-      TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode: merge-table prefix $nMerges out of range 1..${graft.llmdata.BpeMerges.Full.length}")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode requires string, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  override def nullSafeEval(text: Any): Any =
-    BpeUtil.encodeText(text.asInstanceOf[UTF8String], nMerges)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.BpeUtil.encodeText($a, $nMerges)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-object BpeEncode {
-  /** Default table: the mid-band prefix (see [[graft.llmdata.BpeMerges]]). */
-  def apply(child: Expression): BpeEncode =
-    BpeEncode(child, graft.llmdata.BpeMerges.BandN)
-}
-
 /** `bpe_decode_ids(ids)` → string: the DETOKENIZER — token ids back to
   * their concatenated text through the inverse vocab (ids are dense
   * 0-based ranks, so the inverse is an array INDEX, not a map probe).
@@ -315,8 +281,9 @@ case class BpeDecodeIds(child: Expression, vocab: Map[String, Int])
     copy(child = newChild)
 }
 
-/** `bpe_encode_ids(text)` → array<int> of token IDS: [[BpeEncode]]'s merge
-  * walk composed with a token→id vocab lookup in ONE scan-side pass
+/** `bpe_encode_ids(text)` → array<int> of token IDS: the
+  * [[TextHashFunctions.bpeEncode]] merge walk composed with a token→id
+  * vocab lookup in ONE scan-side pass
   * (tx33 / cur16 — the id-level payload a training shard actually loads).
   *
   * The vocab is DATA-derived (built from the corpus by

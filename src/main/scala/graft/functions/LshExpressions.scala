@@ -4,19 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftColumn}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Random-hyperplane LSH code as a native expression.
+/** Random-hyperplane LSH code as a native function.
   *
   * The composable form (8 hyperplanes × 64 `lit(sign) * element_at(v, i)`
   * terms) builds a ~1000-node expression tree whose analysis/codegen cost
   * dwarfs the actual arithmetic on small inputs and bloats generated
-  * methods on large ones. This expression is one tight loop.
+  * methods on large ones. This is one tight loop.
   *
   * Hyperplane signs are derived from md5("hp:<j>:<d>") — top bit of the
   * first digest byte — the same deterministic derivation the DuckDB oracle
@@ -37,8 +34,8 @@ object HyperplaneLsh {
     }
   }
 
-  /** 8-char '0'/'1' code of a float/double vector. */
-  def code(v: ArrayData, isFloat: Boolean): UTF8String = {
+  /** 8-char '0'/'1' code of a double vector. */
+  def code(v: ArrayData): UTF8String = {
     val n = math.min(v.numElements(), Dim)
     val out = new Array[Byte](NumHyperplanes)
     var j = 0
@@ -47,8 +44,7 @@ object HyperplaneLsh {
       var dot = 0.0
       var d = 0
       while (d < n) {
-        val x = if (isFloat) v.getFloat(d).toDouble else v.getDouble(d)
-        dot += s(d) * x
+        dot += s(d) * v.getDouble(d)
         d += 1
       }
       out(j) = if (dot > 0) '1'.toByte else '0'.toByte
@@ -58,33 +54,10 @@ object HyperplaneLsh {
   }
 }
 
-case class HyperplaneLshCode(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lsh_code requires array<float> or array<double>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lsh_code"
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(v: Any): Any =
-    HyperplaneLsh.code(v.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      v => s"graft.functions.HyperplaneLsh.code($v, $isFloat)")
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneLshCode =
-    copy(child = newChild)
-}
-
 object LshFunctions {
+  /** `lsh_code(v)` over array<double>; an array<float> argument is widened
+    * by Spark's implicit cast, which is exact, so the code is the same. */
   def lshCode(v: Column): Column =
-    GraftColumn.of(HyperplaneLshCode(GraftColumn.expr(v)))
+    GraftColumn.staticCall(HyperplaneLsh, "code", StringType, Seq(v),
+      Seq(ArrayType(DoubleType)), returnsNull = false)
 }

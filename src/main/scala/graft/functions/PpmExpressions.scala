@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** A REAL (non-stub) decoded-domain codec: binary PPM (P6), the simplest
   * honest image container — hand-rolled here because the sandbox ships no
@@ -17,7 +14,8 @@ import org.apache.spark.sql.types._
   * contract — `decode(reencode(x)) == decode(x)` while nearly every FILE
   * byte differs — is reproduced by a real format, where a re-serialize
   * with a different header (added comment) changes the byte stream but
-  * provably not the pixel plane. [[PpmPixels]] and [[PpmReencode]] slot
+  * provably not the pixel plane. `ppm_pixels` and `ppm_reencode`
+  * ([[TextHashFunctions.ppmPixels]], [[TextHashFunctions.ppmReencode]]) slot
   * into exactly the shape [[graft.llmdata.Multimodal.StubCodec]]
   * occupies: scan-side native expressions, payload bytes never shuffle,
   * malformed payloads decode to NULL (the DLQ-friendly contract) instead
@@ -103,6 +101,12 @@ object PpmUtil {
     out.toArray(new Array[Array[Byte]](out.size))
   }
 
+  /** [[framePlanes]] as Catalyst array<binary> data (null if malformed). */
+  def framePlaneArray(b: Array[Byte]): ArrayData = {
+    val fs = framePlanes(b)
+    if (fs == null) null else new GenericArrayData(fs.asInstanceOf[Array[AnyRef]])
+  }
+
   /** The decoded pixel plane (width·height·3 raw RGB bytes), or null. */
   def pixels(b: Array[Byte]): Array[Byte] = {
     val hd = parseHeader(b)
@@ -173,102 +177,4 @@ object PpmUtil {
     System.arraycopy(b, hd(2), out, header.length, need)
     out
   }
-}
-
-/** `ppm_pixels(payload)` → binary pixel plane (null if not valid P6). */
-case class PpmPixels(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ppm_pixels requires binary, got ${t.catalogString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // malformed payloads decode to null
-  override def prettyName: String = "ppm_pixels"
-  override def nullSafeEval(payload: Any): Any =
-    PpmUtil.pixels(payload.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PpmUtil.pixels($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PpmPixels =
-    copy(child = newChild)
-}
-
-/** `ppm_resize_half(payload)` → the box-downsampled P6 file (null if not
-  * valid P6): see [[PpmUtil.resizeHalf]]. */
-case class PpmResizeHalf(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ppm_resize_half requires binary, got ${t.catalogString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ppm_resize_half"
-  override def nullSafeEval(payload: Any): Any =
-    PpmUtil.resizeHalf(payload.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PpmUtil.resizeHalf($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PpmResizeHalf =
-    copy(child = newChild)
-}
-
-/** `ppm_frame_planes(payload)` → array<binary> of decoded per-frame
-  * pixel planes of a concatenated-P6 stream (null if any frame is
-  * malformed): see [[PpmUtil.framePlanes]]. */
-case class PpmFramePlanes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ppm_frame_planes requires binary, got ${t.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "ppm_frame_planes"
-  override def nullSafeEval(payload: Any): Any = {
-    val fs = PpmUtil.framePlanes(payload.asInstanceOf[Array[Byte]])
-    if (fs == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      fs.asInstanceOf[Array[AnyRef]])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val fs = ctx.freshName("frames")
-      s"""
-      byte[][] $fs = graft.functions.PpmUtil.framePlanes($c);
-      if ($fs == null) { ${ev.isNull} = true; }
-      else { ${ev.value} =
-        new org.apache.spark.sql.catalyst.util.GenericArrayData((Object[]) $fs); }
-      """
-    })
-  override protected def withNewChildInternal(newChild: Expression): PpmFramePlanes =
-    copy(child = newChild)
-}
-
-/** `ppm_reencode(payload)` → re-serialized P6 with an added header
-  * comment: identical pixel plane, different file bytes (null if not
-  * valid P6). */
-case class PpmReencode(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ppm_reencode requires binary, got ${t.catalogString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ppm_reencode"
-  override def nullSafeEval(payload: Any): Any =
-    PpmUtil.reencode(payload.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PpmUtil.reencode($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PpmReencode =
-    copy(child = newChild)
 }

@@ -4,16 +4,14 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftColumn}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM helpers shared by the native text-hash expressions and the generated
-  * code (static calls keep the expressions inside WholeStageCodegen without
-  * inlining the md5 loops into generated Java). Semantics are EXACTLY the
+/** JVM helpers behind the native text-hash functions ([[TextHashFunctions]]:
+  * static calls keep them inside WholeStageCodegen without inlining the md5
+  * loops into generated Java). Semantics are EXACTLY the
   * composable-column forms they replace (md5 hex, lexicographic min,
   * MSB-first bits) so results stay bit-identical with the DuckDB oracles.
   */
@@ -594,539 +592,230 @@ object TextHashUtil {
   }
 }
 
-/** Native SimHash of a token array (bit width 32 or 64) — replaces nbits
-  * interpreted `aggregate` higher-order calls per row with one JVM loop
-  * (SURVEY.md §7.3 rationale; bit parity asserted by the dd4/dd5 oracle
-  * checks). 64-bit is the scale default: banded 4×16 it yields 65,536
-  * bucket values per block vs 32-bit's 256, keeping near-dup candidate
-  * buckets O(n/65536) instead of O(n/256). */
-case class SimHashBits(child: Expression, nbits: Int) extends UnaryExpression {
-  require(nbits == 32 || nbits == 64, s"simhash width must be 32 or 64, got $nbits")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash$nbits requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = s"simhash$nbits"
-
-  override def nullSafeEval(tokens: Any): Any =
-    TextHashUtil.simhashBits(tokens.asInstanceOf[ArrayData], nbits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextHashUtil.simhashBits($a, $nbits)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashBits =
-    copy(child = newChild)
-}
-
-/** Native 64-bit payload perceptual hash — the binary-input twin of
-  * [[SimHashBits]] for mm5's overlapping-window signatures: one JVM loop
-  * with a reused window buffer instead of hex(payload) + a ~len-element
-  * gram array per row (the composable form's cold build was ~10 s at
-  * sf0.1; parity with it is spec-asserted and the oracle is unchanged). */
-case class PayloadPhash(child: Expression, windowBytes: Int)
-    extends UnaryExpression {
-  require(windowBytes >= 1, s"window must be >= 1 byte, got $windowBytes")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"phash64 requires binary, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "phash64"
-
-  override def nullSafeEval(payload: Any): Any =
-    TextHashUtil.phash64(payload.asInstanceOf[Array[Byte]], windowBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextHashUtil.phash64($a, $windowBytes)")
-
-  override protected def withNewChildInternal(newChild: Expression): PayloadPhash =
-    copy(child = newChild)
-}
-
-/** Native stub-codec re-encode (mm6's variant builder) — the codec seam's
-  * byte transform as one codegen'd JVM loop. The composable twin
-  * ([[graft.llmdata.Multimodal.reencodedHex]]) pays an O(len) substr per
-  * output char (O(len²)/row); parity with it and with the JVM
-  * StubCodec.reencode path is spec-asserted. */
-case class StubReencodeExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"stub_reencode requires binary, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "stub_reencode"
-
-  override def nullSafeEval(payload: Any): Any =
-    TextHashUtil.stubReencode(payload.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextHashUtil.stubReencode($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): StubReencodeExpr =
-    copy(child = newChild)
-}
-
-/** Native decoded-domain perceptual hash — [[PayloadPhash]]'s twin with the
-  * stub decode fused in front (signal = high nibble per byte), for mm6's
-  * signatures. */
-case class DecodedPhash(child: Expression, windowChars: Int)
-    extends UnaryExpression {
-  require(windowChars >= 1, s"window must be >= 1 char, got $windowChars")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"decoded_phash64 requires binary, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "decoded_phash64"
-
-  override def nullSafeEval(payload: Any): Any =
-    TextHashUtil.decodedPhash64(payload.asInstanceOf[Array[Byte]], windowChars)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextHashUtil.decodedPhash64($a, $windowChars)")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodedPhash =
-    copy(child = newChild)
-}
-
-/** Native MinHash signature of a shingle array (k seed-tagged md5 minima).
-  */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(grams: Any): Any =
-    TextHashUtil.minhashSig(grams.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextHashUtil.minhashSig($a, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** Native winnowing fingerprints of a word array (sorted distinct window
-  * minima of k-gram hashes) — see [[TextHashUtil.winnowFps]]. */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fps requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fps"
-
-  override def nullSafeEval(words: Any): Any =
-    TextHashUtil.winnowFps(words.asInstanceOf[ArrayData], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextHashUtil.winnowFps($a, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-}
-
-/** Native content-defined chunking of a binary payload: array of
-  * (md5-hex, byte-len) chunk structs — see [[TextHashUtil.cdcChunks]]. */
-case class CdcChunkList(child: Expression, divisor: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks requires binary, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("h", StringType, nullable = false),
-      StructField("len", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "cdc_chunks"
-
-  override def nullSafeEval(payload: Any): Any =
-    TextHashUtil.cdcChunks(payload.asInstanceOf[Array[Byte]], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextHashUtil.cdcChunks($a, $divisor)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunkList =
-    copy(child = newChild)
-}
-
-/** Native hamming distance between equal-length strings (bit strings here).
-  * Replaces `size(filter(sequence(1,n), i -> substr(a,i,1) <> substr(b,i,1)))`
-  * — per-character interpreted lambdas over millions of candidate pairs. */
-case class HammingDistance(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hamming requires (string, string), got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hamming"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.hamming(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.hamming($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HammingDistance =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native Jaccard similarity of two distinct-element string arrays:
-  * |A∩B| / (|A|+|B|-|A∩B|) in one hash-set pass — identical integer counts
-  * (and the identical final double division) as
-  * `size(array_intersect)/size(array_union)` on distinct inputs. */
-case class JaccardSimilarity(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"jaccard requires (array<string>, array<string>), got " +
-        s"${l.catalogString}, ${r.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.jaccardDistinct(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.jaccardDistinct($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Jaccard over SORTED distinct array<long> (hashed shingles): a merge
-  * walk instead of a per-pair hash-set build — same |A∩B|/(|A|+|B|-|A∩B|)
-  * math as [[JaccardSimilarity]], an order of magnitude cheaper on the
-  * million-pair verification stage. Inputs MUST be sorted ascending and
-  * distinct (callers sort once per document, not once per pair). */
-case class JaccardSortedLong(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sorted requires (array<bigint>, array<bigint>), got " +
-        s"${l.catalogString}, ${r.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_sorted"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.jaccardSortedLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.jaccardSortedLong($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardSortedLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** k-word gram hashes as a native codegen expression — array<long> of
-  * 60-bit md5-prefix hashes (the winnowing convention), one JVM loop per
-  * row. Replaces an interpreted `transform(sequence(...), i -> conv(
-  * substring(md5(concat_ws(' ', ...)), 1, 15), 16, 10))` tree evaluated
-  * per gram (cur11's feature stream). */
-case class GramHashArray(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"gram width must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"gram_hashes requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = s"gram_hashes$k"
-
-  override def nullSafeEval(words: Any): Any =
-    TextHashUtil.gramHashes(words.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"graft.functions.TextHashUtil.gramHashes($w, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashArray =
-    copy(child = newChild)
-}
-
-/** i<j candidate pairs off a sorted capped posting list — see
-  * [[TextHashUtil.sortedPairs]]. Output array<struct<doc_a,doc_b>>;
-  * i<j positions of a sorted array ⇒ doc_a < doc_b, so each bucket is
-  * bounded at C(cap, 2) pairs with no per-element lambda frames (the
-  * composable nested transform interpreted ~1.3M struct builds per dd6
-  * run at sf0.1). */
-case class SortedPairGen(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sorted_pairs requires array<bigint>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false))), containsNull = false)
-  // nullSafeEval returns null for n<2 buckets (the COMMON case) even when
-  // the child is non-nullable (Collect.nullable = false feeds this via
-  // slice∘sort_array∘collect_list) — without this override the expression
-  // would report child.nullable and nullSafeCodeGen's non-nullable branch
-  // would emit `false = true;` (a codegen compile error → silent
-  // interpreted fallback), and IsNull/IsNotNull could mis-fold (r19
-  // ADVICE).
-  override def nullable: Boolean = true
-  override def prettyName: String = "sorted_pairs"
-
-  override def nullSafeEval(docs: Any): Any =
-    TextHashUtil.sortedPairs(docs.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData r =
-        graft.functions.TextHashUtil.sortedPairs($d);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): SortedPairGen =
-    copy(child = newChild)
-}
-
-/** Sorted distinct 60-bit gram-hash SET of an array<string> — see
-  * [[TextHashUtil.hashedGramSet]]; the per-document side input of the
-  * sorted-merge verify tier (dd6/dd20). */
-case class HashedGramSet(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_gram_set requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hashed_gram_set"
-
-  override def nullSafeEval(grams: Any): Any =
-    TextHashUtil.hashedGramSet(grams.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, g => s"graft.functions.TextHashUtil.hashedGramSet($g)")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedGramSet =
-    copy(child = newChild)
-}
-
-/** tx15's classifier fold as a native codegen expression — one JVM loop
-  * per row instead of an interpreted `aggregate` lambda evaluating two
-  * md5 column-expression trees per token (the §7.3 rationale; bit parity
-  * is pinned by the tx15/cur5/cur5b/cur6 oracle hashes, which this
-  * expression feeds unchanged). */
-case class ClfScoreTotal(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"clf_total requires array<string>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  // clfTotal returns null on a null token element regardless of the
-  // child's nullability — same latent codegen/null-folding mismatch as
-  // SortedPairGen (r19 ADVICE); report nullable unconditionally.
-  override def nullable: Boolean = true
-  override def prettyName: String = "clf_total"
-
-  override def nullSafeEval(tokens: Any): Any =
-    TextHashUtil.clfTotal(tokens.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => s"""
-      java.lang.Double r = graft.functions.TextHashUtil.clfTotal($t);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ClfScoreTotal =
-    copy(child = newChild)
-}
-
-/** Intersection count over SORTED distinct array<long> — the merge-walk
-  * primitive of [[JaccardSortedLong]] returning the raw |A∩B| so a
-  * verifier can derive directed containments AND Jaccard from one walk
-  * (dd20's three `array_intersect` evaluations per pair collapsed to one
-  * codegen call). Inputs MUST be sorted ascending and distinct. */
-case class IntersectCountSorted(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"inter_sorted requires (array<bigint>, array<bigint>), got " +
-        s"${l.catalogString}, ${r.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "inter_sorted"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.interSortedLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.interSortedLong($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntersectCountSorted =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native unrestricted Damerau-Levenshtein distance — the linkage metric
-  * that charges an adjacent-character SWAP (the classic hand-entry typo)
-  * one edit where plain Levenshtein charges two. Spark ships `levenshtein`
-  * but no Damerau variant; this is the (b)-tier custom-Expression path
-  * (compose > Expression > custom plan) with codegen via a static JVM
-  * call, so the fm4 verification stage stays inside WholeStageCodegen. */
-case class DamerauLevenshtein(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"damerau requires (string, string), got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "damerau"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.damerauLevenshtein(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.damerauLevenshtein($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DamerauLevenshtein =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native Jaro-Winkler similarity — the record-linkage metric built for
-  * short name fields (Winkler 1990, census record linkage), codegen'd like
-  * [[DamerauLevenshtein]]. Spark ships levenshtein but neither Jaro nor
-  * Jaro-Winkler; DuckDB's built-in `jaro_winkler_similarity` is the fm6
-  * oracle twin. */
-case class JaroWinklerSim(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler requires (string, string), got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHashUtil.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHashUtil.jaroWinkler($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Column-API entry points. */
+/** Column-API entry points of the native helpers: each is one
+  * [[GraftColumn.staticCall]] (Spark's `StaticInvoke`) of a helper in
+  * [[TextHashUtil]], [[PpmUtil]], [[WavUtil]], [[BpeUtil]] or
+  * [[BpeBytesUtil]]. Codegen emits the direct static call, so each stays
+  * inside WholeStageCodegen; constant parameters travel as literals.
+  * Native rather than composable for the SURVEY.md §7.3 reason: the
+  * composable forms interpret a lambda (or an md5 expression tree) per
+  * element per row. */
 object TextHashFunctions {
-  def simhash32(tokens: Column): Column =
-    GraftColumn.of(SimHashBits(GraftColumn.expr(tokens), 32))
-  def simhash64(tokens: Column): Column =
-    GraftColumn.of(SimHashBits(GraftColumn.expr(tokens), 64))
+  private val Strings = ArrayType(StringType)
+  private val Longs = ArrayType(LongType)
+  private val LongSet = ArrayType(LongType, containsNull = false)
+
+  /** A constant parameter as a Catalyst literal (a `lit` column would stay
+    * an unconverted column node on the SQL surface). */
+  private def lit(n: Int): Column = GraftColumn.of(Literal(n))
+
+  private def util(fn: String, out: DataType, args: Seq[Column],
+      inputTypes: Seq[DataType], returnsNull: Boolean = false): Column =
+    GraftColumn.staticCall(TextHashUtil, fn, out, args, inputTypes, returnsNull)
+
+  /** Native SimHash of a token array (bit width 32 or 64) — replaces
+    * nbits interpreted `aggregate` calls per row with one JVM loop (bit
+    * parity asserted by the dd4/dd5 oracle checks). 64-bit is the scale
+    * default: banded 4×16 it yields 65,536 bucket values per block vs
+    * 32-bit's 256, keeping near-dup candidate buckets O(n/65536) instead
+    * of O(n/256). */
+  def simhash32(tokens: Column): Column = simhash(tokens, 32)
+  def simhash64(tokens: Column): Column = simhash(tokens, 64)
+  private def simhash(tokens: Column, nbits: Int): Column =
+    util("simhashBits", StringType, Seq(tokens, lit(nbits)), Seq(Strings, IntegerType))
+
+  /** Native MinHash signature of a shingle array (k seed-tagged md5 minima). */
   def minhashSig(grams: Column, numHashes: Int): Column =
-    GraftColumn.of(MinHashSignature(GraftColumn.expr(grams), numHashes))
-  def phash64(payload: Column, windowBytes: Int): Column =
-    GraftColumn.of(PayloadPhash(GraftColumn.expr(payload), windowBytes))
+    util("minhashSig", Strings, Seq(grams, lit(numHashes)), Seq(Strings, IntegerType))
+
+  /** Native 64-bit payload perceptual hash — the binary-input twin of
+    * simhash64 for mm5's overlapping-window signatures: one JVM loop with
+    * a reused window buffer instead of hex(payload) + a ~len-element gram
+    * array per row (the composable form's cold build was ~10 s at sf0.1;
+    * parity with it is spec-asserted and the oracle is unchanged). */
+  def phash64(payload: Column, windowBytes: Int): Column = {
+    require(windowBytes >= 1, s"window must be >= 1 byte, got $windowBytes")
+    util("phash64", StringType, Seq(payload, lit(windowBytes)), Seq(BinaryType, IntegerType))
+  }
+
+  /** Native stub-codec re-encode (mm6's variant builder) — the codec
+    * seam's byte transform as one JVM loop. The composable twin
+    * ([[graft.llmdata.Multimodal.reencodedHex]]) pays an O(len) substr per
+    * output char (O(len²)/row); parity with it and with the JVM
+    * StubCodec.reencode path is spec-asserted. */
   def stubReencode(payload: Column): Column =
-    GraftColumn.of(StubReencodeExpr(GraftColumn.expr(payload)))
-  def decodedPhash64(payload: Column, windowChars: Int): Column =
-    GraftColumn.of(DecodedPhash(GraftColumn.expr(payload), windowChars))
+    util("stubReencode", BinaryType, Seq(payload), Seq(BinaryType))
+
+  /** Native decoded-domain perceptual hash — [[phash64]]'s twin with the
+    * stub decode fused in front (signal = high nibble per byte), for
+    * mm6's signatures. */
+  def decodedPhash64(payload: Column, windowChars: Int): Column = {
+    require(windowChars >= 1, s"window must be >= 1 char, got $windowChars")
+    util("decodedPhash64", StringType, Seq(payload, lit(windowChars)),
+      Seq(BinaryType, IntegerType))
+  }
+
+  /** Native hamming distance between equal-length strings (bit strings
+    * here). Replaces `size(filter(sequence(1,n), i -> substr(a,i,1) <>
+    * substr(b,i,1)))` — per-character interpreted lambdas over millions of
+    * candidate pairs. */
   def hamming(a: Column, b: Column): Column =
-    GraftColumn.of(HammingDistance(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("hamming", LongType, Seq(a, b), Seq(StringType, StringType))
+
+  /** Native Jaccard similarity of two distinct-element string arrays:
+    * |A∩B| / (|A|+|B|-|A∩B|) in one hash-set pass — identical integer
+    * counts (and the identical final double division) as
+    * `size(array_intersect)/size(array_union)` on distinct inputs. */
   def jaccard(a: Column, b: Column): Column =
-    GraftColumn.of(JaccardSimilarity(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("jaccardDistinct", DoubleType, Seq(a, b), Seq(Strings, Strings))
+
+  /** Jaccard over SORTED distinct array<long> (hashed shingles): a merge
+    * walk instead of a per-pair hash-set build — same math as [[jaccard]],
+    * an order of magnitude cheaper on the million-pair verification stage.
+    * Inputs MUST be sorted ascending and distinct (callers sort once per
+    * document, not once per pair). */
   def jaccardSorted(a: Column, b: Column): Column =
-    GraftColumn.of(JaccardSortedLong(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("jaccardSortedLong", DoubleType, Seq(a, b), Seq(Longs, Longs))
+
+  /** Intersection count over SORTED distinct array<long> — the merge-walk
+    * primitive of [[jaccardSorted]] returning the raw |A∩B| so a verifier
+    * can derive directed containments AND Jaccard from one walk (dd20's
+    * three `array_intersect` evaluations per pair collapsed to one call).
+    * Inputs MUST be sorted ascending and distinct. */
   def interSorted(a: Column, b: Column): Column =
-    GraftColumn.of(IntersectCountSorted(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("interSortedLong", LongType, Seq(a, b), Seq(Longs, Longs))
+
+  /** tx15's classifier fold as one JVM loop per row instead of an
+    * interpreted `aggregate` lambda evaluating two md5 column-expression
+    * trees per token (bit parity is pinned by the tx15/cur5/cur5b/cur6
+    * oracle hashes, which this call feeds unchanged). Null on a null token
+    * element whatever the input's nullability, so the result is nullable. */
   def clfTotal(tokens: Column): Column =
-    GraftColumn.of(ClfScoreTotal(GraftColumn.expr(tokens)))
+    util("clfTotal", DoubleType, Seq(tokens), Seq(Strings), returnsNull = true)
+
+  /** k-word gram hashes: array<long> of 60-bit md5-prefix hashes (the
+    * winnowing convention), one JVM loop per row. Replaces an interpreted
+    * `transform(sequence(...), i -> conv(substring(md5(concat_ws(' ',
+    * ...)), 1, 15), 16, 10))` tree evaluated per gram (cur11's feature
+    * stream). */
   def gramHashes(words: Column, k: Int): Column =
-    GraftColumn.of(GramHashArray(GraftColumn.expr(words), k))
+    util("gramHashes", LongSet, Seq(words, lit(k)), Seq(Strings, IntegerType))
+
+  /** Sorted distinct 60-bit gram-hash SET of an array<string> — the
+    * per-document side input of the sorted-merge verify tier (dd6/dd20). */
   def hashedGramSet(grams: Column): Column =
-    GraftColumn.of(HashedGramSet(GraftColumn.expr(grams)))
+    util("hashedGramSet", LongSet, Seq(grams), Seq(Strings))
+
+  /** i<j candidate pairs off a sorted capped posting list as
+    * array<struct<doc_a,doc_b>>; i<j positions of a sorted array ⇒
+    * doc_a < doc_b, so each bucket is bounded at C(cap, 2) pairs with no
+    * per-element lambda frames (the composable nested transform
+    * interpreted ~1.3M struct builds per dd6 run at sf0.1). Null for
+    * buckets of fewer than 2 elements (the COMMON case) even when the
+    * input is non-nullable, so the result is nullable. */
   def sortedPairs(docs: Column): Column =
-    GraftColumn.of(SortedPairGen(GraftColumn.expr(docs)))
+    util("sortedPairs",
+      ArrayType(StructType(Seq(
+        StructField("doc_a", LongType, nullable = false),
+        StructField("doc_b", LongType, nullable = false))), containsNull = false),
+      Seq(docs), Seq(Longs), returnsNull = true)
+
+  /** Native unrestricted Damerau-Levenshtein distance — the linkage metric
+    * that charges an adjacent-character SWAP (the classic hand-entry typo)
+    * one edit where plain Levenshtein charges two. Spark ships
+    * `levenshtein` but no Damerau variant; a static JVM call keeps the fm4
+    * verification stage inside WholeStageCodegen. */
   def damerau(a: Column, b: Column): Column =
-    GraftColumn.of(DamerauLevenshtein(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("damerauLevenshtein", LongType, Seq(a, b), Seq(StringType, StringType))
+
+  /** Native Jaro-Winkler similarity — the record-linkage metric built for
+    * short name fields (Winkler 1990, census record linkage). Spark ships
+    * levenshtein but neither Jaro nor Jaro-Winkler; DuckDB's built-in
+    * `jaro_winkler_similarity` is the fm6 oracle twin. */
   def jaroWinkler(a: Column, b: Column): Column =
-    GraftColumn.of(JaroWinklerSim(GraftColumn.expr(a), GraftColumn.expr(b)))
+    util("jaroWinkler", DoubleType, Seq(a, b), Seq(StringType, StringType))
+
+  /** Native winnowing fingerprints of a word array (sorted distinct window
+    * minima of k-gram hashes) — see [[TextHashUtil.winnowFps]]. */
   def winnowFps(words: Column, k: Int, w: Int): Column =
-    GraftColumn.of(WinnowFingerprints(GraftColumn.expr(words), k, w))
+    util("winnowFps", LongSet, Seq(words, lit(k), lit(w)),
+      Seq(Strings, IntegerType, IntegerType))
+
+  /** Native content-defined chunking of a binary payload: array of
+    * (md5-hex, byte-len) chunk structs — see [[TextHashUtil.cdcChunks]]. */
   def cdcChunks(payload: Column, divisor: Int): Column =
-    GraftColumn.of(CdcChunkList(GraftColumn.expr(payload), divisor))
-  def ppmPixels(payload: Column): Column =
-    GraftColumn.of(PpmPixels(GraftColumn.expr(payload)))
-  def ppmReencode(payload: Column): Column =
-    GraftColumn.of(PpmReencode(GraftColumn.expr(payload)))
-  def ppmResizeHalf(payload: Column): Column =
-    GraftColumn.of(PpmResizeHalf(GraftColumn.expr(payload)))
+    util("cdcChunks",
+      ArrayType(StructType(Seq(
+        StructField("h", StringType, nullable = false),
+        StructField("len", LongType, nullable = false))), containsNull = false),
+      Seq(payload, lit(divisor)), Seq(BinaryType, IntegerType))
+
+  // The real codecs below decode malformed payloads to null (the
+  // DLQ-friendly contract), so their results are nullable.
+
+  private def ppm(fn: String, out: DataType, payload: Column): Column =
+    GraftColumn.staticCall(PpmUtil, fn, out, Seq(payload), Seq(BinaryType),
+      returnsNull = true)
+
+  /** The decoded pixel plane of a P6 payload (null if not valid P6). */
+  def ppmPixels(payload: Column): Column = ppm("pixels", BinaryType, payload)
+
+  /** Re-serialized P6 with an added header comment: identical pixel plane,
+    * different file bytes (null if not valid P6). */
+  def ppmReencode(payload: Column): Column = ppm("reencode", BinaryType, payload)
+
+  /** The box-downsampled P6 file (null if not valid P6): see
+    * [[PpmUtil.resizeHalf]]. */
+  def ppmResizeHalf(payload: Column): Column = ppm("resizeHalf", BinaryType, payload)
+
+  /** array<binary> of decoded per-frame pixel planes of a concatenated-P6
+    * stream (null if any frame is malformed): see [[PpmUtil.framePlanes]]. */
   def ppmFramePlanes(payload: Column): Column =
-    GraftColumn.of(PpmFramePlanes(GraftColumn.expr(payload)))
+    ppm("framePlaneArray", ArrayType(BinaryType, containsNull = false), payload)
+
+  /** struct(sample_rate INT, n_samples INT, energy BIGINT, peak_abs INT,
+    * zero_crossings INT) — null if the payload is not canonical PCM16 mono
+    * WAVE: see [[WavUtil.features]]. */
+  def wavFeatures(payload: Column): Column =
+    GraftColumn.staticCall(WavUtil, "featureRow",
+      StructType(Seq(
+        StructField("sample_rate", IntegerType, nullable = false),
+        StructField("n_samples", IntegerType, nullable = false),
+        StructField("energy", LongType, nullable = false),
+        StructField("peak_abs", IntegerType, nullable = false),
+        StructField("zero_crossings", IntegerType, nullable = false))),
+      Seq(payload), Seq(BinaryType), returnsNull = true)
+
+  /** array<string> of BPE tokens under the first-`nMerges` prefix of the
+    * trained table (default: the mid-band
+    * [[graft.llmdata.BpeMerges.BandN]]); see [[BpeUtil]]. The prefix is
+    * checked here because the SQL surface passes it in. */
+  def bpeEncode(text: Column, nMerges: Int = graft.llmdata.BpeMerges.BandN): Column = {
+    val full = graft.llmdata.BpeMerges.Full.length
+    require(nMerges > 0 && nMerges <= full,
+      s"bpe_encode: merge-table prefix $nMerges out of range 1..$full")
+    GraftColumn.staticCall(BpeUtil, "encodeText",
+      ArrayType(StringType, containsNull = false), Seq(text, lit(nMerges)),
+      Seq(StringType, IntegerType), returnsNull = false)
+  }
+
+  /** array<string> of byte-level BPE tokens under the first-`nMerges`
+    * prefix of the trained byte table (default: the mid-band
+    * [[graft.llmdata.BpeMergesBytes.BandN]]); see [[BpeBytesUtil]]. */
+  def bpeEncodeBytes(text: Column,
+      nMerges: Int = graft.llmdata.BpeMergesBytes.BandN): Column = {
+    val full = graft.llmdata.BpeMergesBytes.Full.length
+    require(nMerges > 0 && nMerges <= full,
+      s"bpe_encode_bytes: merge-table prefix $nMerges out of range 1..$full")
+    GraftColumn.staticCall(BpeBytesUtil, "encodeText",
+      ArrayType(StringType, containsNull = false), Seq(text, lit(nMerges)),
+      Seq(StringType, IntegerType), returnsNull = false)
+  }
+
+  /** The byte-level DETOKENIZER — see [[BpeBytesUtil.decodeText]].
+    * Stateless (no vocab, no table), so unlike [[BpeDecodeIds]] it is
+    * registrable on the SQL surface. */
+  def bpeDecodeBytes(tokens: Column): Column =
+    GraftColumn.staticCall(BpeBytesUtil, "decodeText", StringType, Seq(tokens),
+      Seq(Strings), returnsNull = false)
 }

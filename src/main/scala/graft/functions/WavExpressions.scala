@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types._
 
 /** A REAL audio codec for the multimodal tier: canonical RIFF/WAVE with
   * 16-bit PCM (the `.wav` everyone means), hand-rolled like the P6 codec
@@ -82,48 +79,12 @@ object WavUtil {
     if (i != b.length) return null // trailing garbage
     result // null when no data chunk was found
   }
-}
 
-/** `wav_features(payload)` → struct(sample_rate INT, n_samples INT,
-  * energy BIGINT, peak_abs INT, zero_crossings INT) — null if the
-  * payload is not canonical PCM16 mono WAVE: see [[WavUtil.features]]. */
-case class WavFeatures(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"wav_features requires binary, got ${t.catalogString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("n_samples", IntegerType, nullable = false),
-    StructField("energy", LongType, nullable = false),
-    StructField("peak_abs", IntegerType, nullable = false),
-    StructField("zero_crossings", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "wav_features"
-
-  override def nullSafeEval(payload: Any): Any = {
-    val f = WavUtil.features(payload.asInstanceOf[Array[Byte]])
-    if (f == null) null else WavFeatures.toRow(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val fs = ctx.freshName("wavf")
-      s"""
-      long[] $fs = graft.functions.WavUtil.features($c);
-      if ($fs == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = graft.functions.WavFeatures.toRow($fs); }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WavFeatures =
-    copy(child = newChild)
-}
-
-object WavFeatures {
-  /** Shared by eval and codegen: feature vector → InternalRow. */
-  def toRow(f: Array[Long]): GenericInternalRow =
-    new GenericInternalRow(Array[Any](
+  /** [[features]] as the `wav_features` struct row (null if malformed). */
+  def featureRow(b: Array[Byte]): InternalRow = {
+    val f = features(b)
+    if (f == null) null
+    else new GenericInternalRow(Array[Any](
       f(0).toInt, f(1).toInt, f(2), f(3).toInt, f(4).toInt))
+  }
 }

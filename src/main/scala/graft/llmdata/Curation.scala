@@ -939,9 +939,6 @@ object Curation {
     * Same staleness contract as every SessionCache user. */
   private val dsirModelCache = new SessionCache[Array[(Long, Long)]](_ => ())
 
-  private[llmdata] def clearDsirModel(spark: SparkSession): Unit =
-    dsirModelCache.clear(spark)
-
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     // transform-then-explode, not explode-then-project: measured at
@@ -949,7 +946,7 @@ object Curation {
     // that duplicates (doc_id, source, lang, _w) across 10M position
     // rows (1.5 s) — the bigram md5 is cheap relative to the row fanout,
     // the opposite trade from mm8's per-byte extraction. r19: the hash
-    // array itself now comes from the native GramHashArray expression
+    // array itself now comes from the native TextHashFunctions.gramHashes
     // (one JVM loop per row — winnowing's 60-bit md5-prefix convention,
     // bit-identical to the conv(substring(md5(concat_ws(...)))) tree it
     // replaces) instead of an interpreted per-gram lambda; only the
@@ -957,7 +954,7 @@ object Curation {
     val feats = docs
       .withColumn("_w", split(col("text"), " "))
       // mirror the twin's WHERE len(w) >= 2: a 1-word doc yields no
-      // bigram (GramHashArray returns empty below k words; the filter
+      // bigram (gramHashes returns empty below k words; the filter
       // keeps the plan aligned with the twin's WHERE)
       .filter(size(col("_w")) >= 2)
       .select(col("doc_id"), col("source"), col("lang"),

@@ -93,26 +93,13 @@ object Dedup {
     docs.withColumn("_w", words).select(col("doc_id"), sh.as("grams"))
   }
 
-  /** Release this session's pinned dedup caches (shingle tables, the
-    * confirmed minhash-pair set, and the IVF codebooks) — e.g. before a
-    * phase that needs the storage memory, after a dedup pass completes, or
-    * after rewriting the parquet under a dir this session already read.
-    * Subsequent queries transparently rebuild them. */
-  def uncacheShingles(spark: SparkSession): Unit = {
-    gramsCache.clear(spark)
-    hashedGramsCache.clear(spark)
-    sigCache.clear(spark)
-    pairsCache.clear(spark)
-    bandCandsCache.clear(spark)
-    ivfPairsCache.clear(spark)
-    winnowCache.clear(spark)
-    textLabelsCache.clear(spark)
-    embLabelsCache.clear(spark)
-    Similarity.clearExemplars(spark)
-    Multimodal.clearSignatures(spark)
-    TextAnalysis.clearVocab(spark)
-    Curation.clearDsirModel(spark)
-  }
+  /** Release this session's entries in EVERY session cache (shingle
+    * tables, pair sets, signatures, codebooks, graph indexes, vocabularies
+    * — [[SessionCache.clearAll]]) — e.g. before a phase that needs the
+    * storage memory, after a dedup pass completes, or after rewriting the
+    * parquet under a dir this session already read. Subsequent queries
+    * transparently rebuild them. */
+  def uncacheShingles(spark: SparkSession): Unit = SessionCache.clearAll(spark)
 
   /** Exact Jaccard on distinct shingle arrays — native one-pass expression
     * (same counts and division as size(array_intersect)/size(array_union),
@@ -179,7 +166,7 @@ object Dedup {
 
   /** MinHash signature: per seed, the minimum md5 over shingles of the
     * seed-tagged shingle (`md5(seed || ':' || gram)`) — computed by the
-    * native MinHashSignature expression (one JVM loop instead of k
+    * native TextHashFunctions.minhashSig (one JVM loop instead of k
     * interpreted array_min(transform(...)) passes; bit-identical). */
   private def minhashSig(grams: Column): Column =
     graft.functions.TextHashFunctions.minhashSig(grams, NumHashes)
@@ -243,7 +230,7 @@ object Dedup {
   /** [[cappedBucketPairs]] WITHOUT the dedup — for verifiers whose
     * per-pair check is cheaper than the full-pair-set exchange a distinct
     * costs (dd6), which dedupe the (tiny) verified output instead.
-    * Pairs come from the native SortedPairGen expression (one JVM pass
+    * Pairs come from the native TextHashFunctions.sortedPairs (one JVM pass
     * per bucket; the composable nested transform interpreted ~1.3M
     * per-element lambda frames per dd6 run); single-doc buckets yield a
     * null array → explode_outer's null row → dropped by the verify
@@ -417,7 +404,7 @@ object Dedup {
 
   /** 64-bit SimHash over whitespace tokens (md5-derived bits, frequency
     * weighted): pure per-row map — no shuffle at all. Computed by the
-    * native SimHashBits expression (one JVM loop; the composable form —
+    * native TextHashFunctions.simhash64 (one JVM loop; the composable form —
     * interpreted `aggregate` folds over the token hashes — benchmarked 60×
     * slower at sf0.1 already at 32 bits). */
   def simhashOf(docs: DataFrame): DataFrame =
@@ -1784,8 +1771,8 @@ object Dedup {
     * read the cached rows instead of re-hashing every gram per consumer. */
   private val winnowCache = SessionCache.persisted()
 
-  /** (doc_id, fps) via the native [[graft.functions.WinnowFingerprints]]
-    * expression — sorted distinct window minima, one codegen'd JVM pass.
+  /** (doc_id, fps) via the native [[graft.functions.TextHashFunctions.winnowFps]]
+    * — sorted distinct window minima, one codegen'd JVM pass.
     * The composable HOF twin [[winnowFpsComposable]] is the A/B parity
     * baseline (bit-identity spec-asserted); interpreted, it cost ~20 ms
     * PER DOCUMENT (a lambda frame per window element + a fresh slice

@@ -360,19 +360,11 @@ object Multimodal {
   /** Session-level signature cache: the corpus+variant phash table is the
     * "materialize once per corpus snapshot" artifact (same contract and
     * staleness caveat as Dedup's gramsCache — rewrite the parquet under
-    * `dir` within a session and you must [[clearSignatures]] first). At
+    * `dir` within a session and you must `Dedup.uncacheShingles` first). At
     * sf0.1 the signature pass is ~10 s of md5 windows over every payload;
     * recomputing it per query run is exactly the round-2 leak-class
     * mistake in reverse — pay the scan once, reuse the 70-byte rows. */
   private val phashCache = SessionCache.persisted()
-
-  /** Drop this session's cached phash signatures (companion of
-    * [[graft.llmdata.Dedup.uncacheShingles]], which calls it). */
-  def clearSignatures(spark: SparkSession): Unit = {
-    phashCache.clear(spark)
-    decodedPhashCache.clear(spark)
-    ppmPhashCache.clear(spark)
-  }
 
   private def signatures(spark: SparkSession, dir: String): DataFrame =
     phashCache.get(spark, dir) {
@@ -628,7 +620,7 @@ object Multimodal {
   /** mm6 over a REAL codec (r15 verdict task 6): the decoded-domain
     * duplicate class driven through the hand-rolled P6 decoder
     * ([[graft.functions.PpmUtil]]) instead of the stub. The corpus is
-    * every synthesized PPM plus its [[graft.functions.PpmReencode]]
+    * every synthesized PPM plus its [[graft.functions.PpmUtil.reencode]]
     * re-serialization (different file bytes — even a different LENGTH,
     * which the stub's in-place nibble rewrite could not produce — same
     * pixel plane), each hashed by `phash64(ppm_pixels(content))`: a real
@@ -890,8 +882,8 @@ object Multimodal {
   private val CdcCutDivisor = 32
 
   /** Content-defined chunk rows (media_id, h, len) over a (media_id,
-    * text) frame — the battery path: ONE native codegen expression
-    * ([[graft.functions.CdcChunkList]]) does the whole rolling-hash scan
+    * text) frame — the battery path: ONE native codegen call
+    * ([[graft.functions.TextHashFunctions.cdcChunks]]) does the whole rolling-hash scan
     * + cut + md5 pass per document in a single JVM loop over the payload
     * BYTES, then a plain explode of the chunk structs. Replaces the
     * staged explode form (one generated row per payload byte through six
@@ -1061,9 +1053,7 @@ object Multimodal {
     * real media columns the patch count reads parquet column METADATA
     * (byte length), never the payload. */
   def interleavedPacking(spark: SparkSession, dir: String): DataFrame = {
-    val toks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val toks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.load(spark, dir, "documents")
@@ -1345,9 +1335,7 @@ object Multimodal {
     * Scale posture: one scan, the whole parse+fold inside codegen, five
     * small columns out — payload bytes never move. */
   def wavAudioFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val f = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.WavFeatures(
-        org.apache.spark.sql.GraftColumn.expr(col("content"))))
+    val f = graft.functions.TextHashFunctions.wavFeatures(col("content"))
     wavMediaTable(spark, dir)
       .select(col("media_id"), f.as("f"))
       .select(col("media_id"), col("f.sample_rate"), col("f.n_samples"),

@@ -1,6 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped materialization cache — the "materialize once per corpus
   * snapshot" artifact store behind the shingle/pair/signature/codebook/
@@ -10,14 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frame bound to another's stopped context), sweep entries of stopped
   * sessions, release storage on clear — cannot drift between copies.
   *
+  * Every cache registers itself at construction, and
+  * [[SessionCache.clearAll]] (reached via `Dedup.uncacheShingles`) clears
+  * them all, so a new cache cannot be left off a hand-kept release list.
+  *
   * Staleness contract (shared by every user): the key is (session, logical
   * key), not a data fingerprint — rewrite the parquet under a cached dir
   * within a live session and the cache keeps serving the old snapshot
-  * until `clear` (reachable via `Dedup.uncacheShingles`).
+  * until `clearAll`.
   */
 private[graft] final class SessionCache[V](onRemove: V => Unit) {
   private val entries =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), V]
+
+  SessionCache.registry.add(this)
 
   /** Fetch-or-build. Entries of stopped sessions are swept first; their
     * contexts (and any pinned storage) are already gone, so `onRemove` is
@@ -28,14 +35,34 @@ private[graft] final class SessionCache[V](onRemove: V => Unit) {
   }
 
   /** Drop this session's entries, releasing each via `onRemove`. */
-  def clear(spark: SparkSession): Unit =
+  private def clear(spark: SparkSession): Unit =
     entries.keys.filter(_._1 eq spark).foreach { k =>
       entries.remove(k).foreach(onRemove)
     }
 }
 
 private[graft] object SessionCache {
-  /** The common case: cached PERSISTED DataFrames, unpersisted on clear. */
-  def persisted(): SessionCache[DataFrame] =
-    new SessionCache[DataFrame](_.unpersist(blocking = false))
+  private val registry =
+    new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_]]()
+
+  /** Clear this session's entries in every cache constructed so far. One
+    * list, so caches that share checkpointed leaves (a union over another
+    * cache's walk pieces) are always released together. */
+  def clearAll(spark: SparkSession): Unit =
+    registry.forEach(_.clear(spark))
+
+  /** Release a cached frame's storage: unpersist the frame, then the RDD
+    * behind every `LogicalRDD` leaf of its plan. A `localCheckpoint()`ed
+    * frame is such a leaf, and `Dataset.unpersist` alone frees neither it
+    * nor a union or persisted frame built over it — those blocks stay in
+    * `getPersistentRDDs` until the session ends. */
+  def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.logical
+      .collectWithSubqueries { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  /** The common case: cached DataFrames, storage released on clear. */
+  def persisted(): SessionCache[DataFrame] = new SessionCache[DataFrame](release)
 }

@@ -90,7 +90,7 @@ object Similarity {
   private[llmdata] def hyperplaneSigns: Array[Array[Double]] =
     graft.functions.HyperplaneLsh.signs
 
-  /** 8-bit LSH code via the native HyperplaneLshCode expression. (The
+  /** 8-bit LSH code via the native [[graft.functions.LshFunctions.lshCode]]. (The
     * composable form — 8×64 `lit(sign) * element_at` terms — was a ~1000-
     * node tree whose analysis/codegen time dominated the query.) */
   def lshCode(v: Column): Column = graft.functions.LshFunctions.lshCode(v)
@@ -299,32 +299,11 @@ object Similarity {
     * Staleness contract (same as Dedup's gramsCache): the key is the
     * LOGICAL plan, not a data fingerprint — if the parquet under `dir` is
     * rewritten within a live session, IVF assignment keeps the codebook it
-    * trained on the old data until [[clearExemplars]] is called. That is
+    * trained on the old data until `Dedup.uncacheShingles` is called. That is
     * deliberate: a stable codebook is what makes incremental assignment
     * reproducible; re-train explicitly when the corpus changes. */
   private val exemplarCache =
     new SessionCache[Array[(Long, Array[Double])]](_ => ())
-
-  /** Drop this session's trained codebooks and encoded PQ index (see
-    * staleness contract above). The companion of
-    * [[Dedup.uncacheShingles]], which also calls this. */
-  def clearExemplars(spark: SparkSession): Unit = {
-    exemplarCache.clear(spark)
-    // corpus-size cache too: buildDegree/serveHops derive from it, and a
-    // corpus rewrite under a cached dir would otherwise leave the engine
-    // at a stale degree while the twin's deg/hcfg CTEs count live
-    corpusCounts.clear(spark)
-    pqCodesCache.clear(spark)
-    ivfPqIndexCache.clear(spark)
-    sqIndexCache.clear(spark)
-    knnGraphCache.clear(spark)
-    seedGraphCache.clear(spark)
-    knnDescentCache.clear(spark)
-    divGraphCache.clear(spark)
-    serveGraphCache.clear(spark)
-    serveStatesCache.clear(spark)
-    sqVisitedCache.clear(spark)
-  }
 
   private def collectedExemplars(exemplars: DataFrame): Array[(Long, Array[Double])] =
     exemplarCache.get(exemplars.sparkSession,
@@ -604,7 +583,7 @@ object Similarity {
     * artifacts: ss5 serves it and ss16's descent round reads it as the
     * seed — without the cache each min-of-3 bench pass re-ran the
     * per-cell all-pairs build (the graph IS the persisted index artifact
-    * at scale). Evicted by [[clearExemplars]]. */
+    * at scale). Evicted by `Dedup.uncacheShingles`. */
   private val knnGraphCache = SessionCache.persisted()
 
   def knnGraph(spark: SparkSession, dir: String): DataFrame =
@@ -734,7 +713,7 @@ object Similarity {
   /** The PQ INDEX is a build-once artifact (FAISS trains and encodes once,
     * then serves many queries) — cache the encoded corpus per (session,
     * dir) like the shingle/pair/exemplar tables; same staleness contract,
-    * released by [[clearExemplars]]. */
+    * released by `Dedup.uncacheShingles`. */
   private val pqCodesCache = SessionCache.persisted()
 
   private def pqCodesCached(spark: SparkSession, dir: String): DataFrame =
@@ -1457,7 +1436,7 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
 
   /** Override the build-degree cap for one (session, dir) — callers must
-    * clear the index caches (`clearExemplars`) first if a graph was
+    * clear the index caches (`Dedup.uncacheShingles`) first if a graph was
     * already built, or the cached build keeps the old degree. PROBE /
     * DEPLOYMENT PINNING ONLY: the SQL twins always render the default
     * `least($DegreeCap, …)`, so an override left set on an oracle-gated
@@ -1482,7 +1461,7 @@ object Similarity {
 
   /** Corpus sizes, keyed (session, dir) like every other index cache so
     * the staleness contract is uniform: a corpus rewrite under a cached
-    * dir serves stale until THIS session's `clearExemplars`, and clearing
+    * dir serves stale until THIS session's `Dedup.uncacheShingles`, and clearing
     * one session never drops another's counts (r13 ADVICE — the old
     * JVM-global dir-keyed map had both scopes wrong). The count is
     * metadata-only, so per-session recount is one footer read. */
@@ -1621,7 +1600,7 @@ object Similarity {
 
   /** The refined descent graph caches per (session, dir) like the ss5
     * seed: ss16 serves it and ss17's graph search reads it as the index.
-    * Evicted by [[clearExemplars]]. */
+    * Evicted by `Dedup.uncacheShingles`. */
   private val knnDescentCache = SessionCache.persisted()
 
   /** ss16: one NN-DESCENT round over the corpus-scaled in-cell seed
@@ -1804,7 +1783,7 @@ object Similarity {
   private[graft] val DiversifyAlpha = 1.0
 
   /** The diversified graph caches per (session, dir) alongside the
-    * descent graph it prunes. Evicted by [[clearExemplars]]. */
+    * descent graph it prunes. Evicted by `Dedup.uncacheShingles`. */
   private val divGraphCache = SessionCache.persisted()
 
   /** ss18: EDGE DIVERSIFICATION — the NSG/HNSW edge-selection pass that
@@ -2067,11 +2046,10 @@ object Similarity {
     * ss19 reads every prefix of every swept setting — so each setting's
     * hop chain executes once per battery no matter how many consumers
     * measure it (r13 verdict task 2: the sweep used to re-run the
-    * standard walk it shared with ss17). Each piece is checkpointed, so
-    * the cache release actually unpersists the pinned blocks (the old
-    * cumulative-union states were not themselves persisted). */
+    * standard walk it shared with ss17). Each piece is checkpointed;
+    * [[SessionCache.release]] frees each piece's blocks. */
   private val serveStatesCache = new SessionCache[Seq[DataFrame]](
-    _.foreach(_.unpersist(blocking = false)))
+    _.foreach(SessionCache.release))
 
   private def servePieces(spark: SparkSession, dir: String,
                           beam: Int, entries: Int): Seq[DataFrame] =
@@ -2372,6 +2350,9 @@ object Similarity {
     * vectors. */
   private val DiskRefineR = 10
 
+  /** The SQ-scored walk's visited union (ss21); its checkpointed pieces
+    * are the union's `LogicalRDD` leaves, which [[SessionCache.release]]
+    * frees. */
   private val sqVisitedCache = SessionCache.persisted()
 
   /** ss21: COMPRESSED-SCORED GRAPH SERVE WITH EXACT REFINE — the DiskANN

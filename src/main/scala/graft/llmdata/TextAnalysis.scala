@@ -744,7 +744,7 @@ object TextAnalysis {
     //   conv(substring(md5(concat("w:", conv(substring(md5(tok),1,3),16,10))),1,3),16,10)
     //     .cast(Double) / ClfBuckets - 0.5
     val nw = size(col("_w"))
-    // the fold runs as the native ClfScoreTotal expression — one codegen
+    // the fold runs as the native TextHashFunctions.clfTotal — one codegen
     // JVM loop per row (1 md5 per token + a precomputed 4096-entry weight
     // table holding exactly the column expression above) instead of an
     // interpreted `aggregate` lambda evaluating two md5 expression trees
@@ -1397,9 +1397,7 @@ object TextAnalysis {
     * U+001F; words containing it are opaque single tokens on both
     * sides, and the fixture corpus contains none. */
   def bpeEncodeTokens(spark: SparkSession, dir: String): DataFrame = {
-    val tokens = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val tokens = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), tokens.as("tokens"))
@@ -1652,9 +1650,7 @@ object TextAnalysis {
     * explode on this so the packer's ORDER BY never rides into the
     * shard plan as a dead mid-plan exchange. */
   private[graft] def bpePackingCore(spark: SparkSession, dir: String): DataFrame = {
-    val toks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val toks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     t(spark, dir, "documents")
@@ -1733,9 +1729,7 @@ object TextAnalysis {
     bpeVocabCore(spark, dir).orderBy(col("token_id"))
 
   private[graft] def bpeVocabCore(spark: SparkSession, dir: String): DataFrame = {
-    val toks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val toks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     t(spark, dir, "documents").filter(col("text").isNotNull)
       .select(explode(toks).as("token"))
       .groupBy(col("token"))
@@ -1758,9 +1752,6 @@ object TextAnalysis {
     vocabCache.get(spark, s"bpe_vocab:$dir")(
       bpeVocabCore(spark, dir).collect()
         .map(r => r.getString(1) -> r.getInt(0)).toMap)
-
-  private[llmdata] def clearVocab(spark: SparkSession): Unit =
-    vocabCache.clear(spark)
 
   /** The id-level encode column: text → array<int> under the corpus
     * vocab (native [[graft.functions.BpeEncodeIds]]; merge walk + id
@@ -1867,10 +1858,8 @@ object TextAnalysis {
     * (both native codegen, both stateless), then one combinable
     * per-source aggregate. Zero joins, zero extra shuffle. */
   def bpeBytesRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val toks = graft.functions.BpeEncodeBytes(
-      org.apache.spark.sql.GraftColumn.expr(col("text")))
-    val decoded = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeDecodeBytes(toks))
+    val decoded = graft.functions.TextHashFunctions.bpeDecodeBytes(
+      graft.functions.TextHashFunctions.bpeEncodeBytes(col("text")))
     t(spark, dir, "documents").filter(col("text").isNotNull)
       .select(col("source"),
         decoded.as("decoded"),
@@ -1985,9 +1974,7 @@ object TextAnalysis {
     * (map-side combine; |sources| rows). PlanQualitySpec pins
     * one scan + one aggregate, no join. */
   def tokenizerAudit(spark: SparkSession, dir: String): DataFrame = {
-    val toks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val toks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     def ratio(num: Column, den: Column): Column =
       when(den === 0L, lit(null).cast(DoubleType))
         .otherwise(num.cast(DoubleType) / den.cast(DoubleType))
@@ -2260,8 +2247,7 @@ object TextAnalysis {
     * per-domain combinable aggregate; no join.  */
   def bpeDomainAudit(spark: SparkSession, dir: String): DataFrame = {
     val full = BpeMerges.Full.length
-    def enc(c: Column) = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(org.apache.spark.sql.GraftColumn.expr(c), full))
+    def enc(c: Column) = graft.functions.TextHashFunctions.bpeEncode(c, full)
     def ratio(num: Column, den: Column): Column =
       when(den === 0L, lit(null).cast(DoubleType))
         .otherwise(num.cast(DoubleType) / den.cast(DoubleType))
@@ -2499,9 +2485,7 @@ object TextAnalysis {
     * chr(288))`, and non-printable-ASCII pretokens stay opaque/unmapped
     * (same caveat as tx24's U+001F guard: the fixture corpus has none). */
   def bpeBytesEncodeTokens(spark: SparkSession, dir: String): DataFrame = {
-    val tokens = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncodeBytes(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val tokens = graft.functions.TextHashFunctions.bpeEncodeBytes(col("text"))
     t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), tokens.as("tokens"))
@@ -2587,12 +2571,8 @@ object TextAnalysis {
     * case in the battery of the expression-level design beating the
     * SQL-expressible form. */
   def tokenizerSwapAudit(spark: SparkSession, dir: String): DataFrame = {
-    val charToks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
-    val byteToks = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncodeBytes(
-        org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val charToks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
+    val byteToks = graft.functions.TextHashFunctions.bpeEncodeBytes(col("text"))
     def ratio(num: Column, den: Column): Column =
       when(den === 0L, lit(null).cast(DoubleType))
         .otherwise(num.cast(DoubleType) / den.cast(DoubleType))
@@ -2675,9 +2655,7 @@ object TextAnalysis {
     * The twin pays four full recursion chains for the same answer —
     * tx31's argument at 4×. */
   def bpeMergeAblation(spark: SparkSession, dir: String): DataFrame = {
-    def tk(n: Int) = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncode(
-        org.apache.spark.sql.GraftColumn.expr(col("text")), n))
+    def tk(n: Int) = graft.functions.TextHashFunctions.bpeEncode(col("text"), n)
     val perDoc = t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(

@@ -338,8 +338,8 @@ object FuzzyMatch {
     * Levenshtein edits, so DL separates swap-corrupted true matches from
     * genuinely-different names at half the distance. The output carries
     * BOTH metrics per matched pair so the margin is itself under the
-    * oracle. Spark has no Damerau builtin → the (b)-tier custom codegen
-    * Expression [[graft.functions.DamerauLevenshtein]] (O(|a|·|b|) per
+    * oracle. Spark has no Damerau builtin → the (b)-tier native call
+    * [[graft.functions.TextHashFunctions.damerau]] (O(|a|·|b|) per
     * candidate pair, candidates bounded by the df-capped block exactly as
     * fm1/fm3). */
   def fuzzyMatchDamerau(spark: SparkSession, dir: String): DataFrame = {

@@ -24,7 +24,7 @@ case class PackState(offset: Long, maxDocId: Long)
 
 /** STREAMING sequence packing — tx26's placement algebra run as an
   * incremental ingest: documents arrive on a stream (CDC bus, crawl
-  * frontier), each is BPE-encoded scan-side ([[graft.functions.BpeEncode]]
+  * frontier), each is BPE-encoded scan-side ([[graft.functions.TextHashFunctions.bpeEncode]]
   * — the merge table rides in the task binary, streaming or not), and a
   * per-source running token offset carried in keyed state places every
   * document into the same [[graft.llmdata.Constants.PackBudget]]-token
@@ -71,9 +71,7 @@ object PackingIngest {
   private def countTokens(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("source"), col("doc_id"),
-        size(org.apache.spark.sql.GraftColumn.of(
-          graft.functions.BpeEncode(
-            org.apache.spark.sql.GraftColumn.expr(col("text")))))
+        size(graft.functions.TextHashFunctions.bpeEncode(col("text")))
           .cast(LongType).as("n_bpe"))
 
   /** INCREMENTAL shard-segment sink: the streaming closure of the full

@@ -77,7 +77,9 @@ class EntrySpec extends SparkSpec {
     val homes = Seq(
       ("SparkSession" + """\s*\.\s*builder""").r -> "GraftSession.scala",
       // the batch_id partition overwrite (CdcPipeline.exactlyOnceBatchWrite)
-      ("partitionOverwriteMode" + """"\s*,\s*"dynamic""").r -> "CdcPipeline.scala")
+      ("partitionOverwriteMode" + """"\s*,\s*"dynamic""").r -> "CdcPipeline.scala",
+      // every native helper call goes through GraftColumn.staticCall
+      ("StaticInvoke" + """\(""").r -> "shim.scala")
     val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
     val sources = roots.flatMap { root =>

@@ -1315,8 +1315,7 @@ class LlmDataSpec extends SparkSpec {
   test("tx24: BPE tokenization is lossless, never coarser than whitespace, " +
       "and reconciles with tx14's packer accounting") {
     import org.apache.spark.sql.functions.{col, concat_ws, regexp_replace, size, split, filter => ffilter}
-    val toks = org.apache.spark.sql.GraftColumn.of(graft.functions.BpeEncode(
-      org.apache.spark.sql.GraftColumn.expr(col("text"))))
+    val toks = graft.functions.TextHashFunctions.bpeEncode(col("text"))
     val rows = spark.read.parquet(s"${sf()}/documents.parquet")
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -1495,8 +1494,8 @@ class LlmDataSpec extends SparkSpec {
   test("tx30: byte-level tokens round-trip losslessly under the space→Ġ map, " +
       "attach leading spaces GPT-2-style, and never cross pretoken classes") {
     import org.apache.spark.sql.functions.{col, concat_ws}
-    def enc(c: org.apache.spark.sql.Column) = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncodeBytes(org.apache.spark.sql.GraftColumn.expr(c)))
+    def enc(c: org.apache.spark.sql.Column) =
+      graft.functions.TextHashFunctions.bpeEncodeBytes(c)
     val rows = spark.read.parquet(s"${sf()}/documents.parquet")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"), concat_ws("", enc(col("text"))).as("glued"))

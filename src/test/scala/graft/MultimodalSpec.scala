@@ -370,8 +370,7 @@ class MultimodalSpec extends SparkSpec {
       "expression with the designed sample count and rate") {
     val rows = graft.llmdata.Multimodal.wavMediaTable(spark, sf())
       .select($"media_id",
-        org.apache.spark.sql.GraftColumn.of(graft.functions.WavFeatures(
-          org.apache.spark.sql.GraftColumn.expr($"content"))).as("f"))
+        graft.functions.TextHashFunctions.wavFeatures($"content").as("f"))
       .select($"media_id", $"f.n_samples", $"f.sample_rate", $"f.peak_abs")
       .collect()
     assert(rows.nonEmpty)

@@ -210,8 +210,8 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.llmdata.Multimodal.ppmResize(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
     assert(!p.contains("HashAggregate") && !p.contains("Window"))
-    assert(p.contains("ppm_resize_half") && p.contains("ppm_pixels"),
-      "both native codec expressions must be in-plan")
+    assert(p.contains("PpmUtil.resizeHalf") && p.contains("PpmUtil.pixels"),
+      "both native codec calls must be in-plan")
     assert(!p.linesIterator.exists(l => l.contains("Exchange") && l.contains("content")),
       "input payload bytes must not be a shuffle key")
     val scans = p.linesIterator.filter(_.contains("Location"))
@@ -224,7 +224,7 @@ class PlanQualitySpec extends SparkSpec {
       "shuffle key") {
     val p = plan(graft.llmdata.Multimodal.ppmFrameSample(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
-    assert(p.contains("ppm_frame_planes"), "the native frame parse in-plan")
+    assert(p.contains("PpmUtil.framePlaneArray"), "the native frame parse in-plan")
     assert(p.linesIterator.count(_.matches("^\\(\\d+\\) Generate.*")) == 1,
       "one posexplode of the parsed frames")
     assert(!p.linesIterator.exists(l => l.contains("Exchange") && l.contains("content")),
@@ -239,7 +239,7 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.llmdata.Multimodal.wavAudioFeatures(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
     assert(!p.contains("HashAggregate") && !p.contains("Window"))
-    assert(p.contains("wav_features"), "the native parse in-plan")
+    assert(p.contains("WavUtil.featureRow"), "the native parse in-plan")
     assert(!p.linesIterator.exists(l => l.contains("Exchange") && l.contains("content")),
       "container bytes must not be a shuffle key")
     val scans = p.linesIterator.filter(_.contains("Location"))
@@ -907,7 +907,7 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.llmdata.TextAnalysis.bpeBytesRoundtrip(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
     assert(!p.contains("Window"))
-    assert(p.contains("bpe_encode_bytes") && p.contains("bpe_decode_bytes"))
+    assert(p.contains("BpeBytesUtil.encodeText") && p.contains("BpeBytesUtil.decodeText"))
     val aggs = p.linesIterator.count(_.matches("^\\(\\d+\\) HashAggregate.*"))
     assert(aggs == 2, s"partial+final of ONE per-source aggregate: $aggs")
     val scans = p.linesIterator.filter(_.contains("Location"))
