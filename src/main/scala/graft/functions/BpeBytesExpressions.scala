@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    SQL side cannot express losslessly; the fixtures are pure
   *    printable ASCII, so the guard never fires there).
   *
-  * The merge table is the baked [[graft.llmdata.BpeMergesBytes]]
-  * artifact, trained by tools/train_bpe.py in `bytes` mode on the same
+  * The merge table is [[BpeTable.Bytes]], trained by
+  * tools/train_bpe.py in `bytes` mode on the same
   * union corpus as the char table, with the same prefix property:
   * `bpe_encode_bytes(text)` applies the mid-band default prefix and
   * `bpe_encode_bytes(text, n)` an explicit prefix. Same scale shape as
@@ -46,29 +44,6 @@ object BpeBytesUtil {
   /** GPT-2's byte-unicode image of the space byte. */
   final val GDot = 'Ġ'
 
-  private final class Table(n: Int) {
-    val mergeArr: Array[(String, String)] =
-      graft.llmdata.BpeMergesBytes.Full.take(n).toArray
-    val rank: java.util.HashMap[String, Integer] = {
-      val m = new java.util.HashMap[String, Integer]()
-      var i = 0
-      while (i < mergeArr.length) {
-        m.put(mergeArr(i)._1 + "\u0000" + mergeArr(i)._2, Integer.valueOf(i))
-        i += 1
-      }
-      m
-    }
-    val memo = new ConcurrentHashMap[String, Array[UTF8String]]()
-  }
-
-  private val tables = new ConcurrentHashMap[Integer, Table]()
-
-  private def table(n: Int): Table = {
-    require(n > 0 && n <= graft.llmdata.BpeMergesBytes.Full.length,
-      s"bpe_encode_bytes: merge-table prefix $n out of range 1..${graft.llmdata.BpeMergesBytes.Full.length}")
-    tables.computeIfAbsent(Integer.valueOf(n), k => new Table(k.intValue()))
-  }
-
   private def printableAscii(s: String): Boolean = {
     var i = 0
     while (i < s.length) {
@@ -79,18 +54,17 @@ object BpeBytesUtil {
     true
   }
 
-  private def encodePretokenUncached(tab: Table, tok: String): Array[UTF8String] = {
+  private def encodePretokenUncached(tab: BpeTable.Prefix, tok: String): Array[UTF8String] = {
     // opaque guard: bytes outside printable-ASCII+space (see scaladoc)
     if (!printableAscii(tok)) return Array(UTF8String.fromString(tok))
     val mapped = tok.replace(' ', GDot)
     val syms = new Array[String](mapped.length)
     var i = 0
     while (i < mapped.length) { syms(i) = String.valueOf(mapped.charAt(i)); i += 1 }
-    BpeUtil.GreedyBpe.merge(tab.rank, tab.mergeArr, syms)
-      .map(UTF8String.fromString)
+    tab.merge(syms).map(UTF8String.fromString)
   }
 
-  private def encodePretoken(tab: Table, tok: String): Array[UTF8String] = {
+  private def encodePretoken(tab: BpeTable.Prefix, tok: String): Array[UTF8String] = {
     if (tok.length > BpeUtil.MaxWordChars) return encodePretokenUncached(tab, tok)
     val hit = tab.memo.get(tok)
     if (hit != null) return hit
@@ -147,7 +121,7 @@ object BpeBytesUtil {
     * pretokenizer's branches cover every character, so the matches tile
     * the input exactly (lossless round-trip modulo the space→Ġ map). */
   def encodeText(text: UTF8String, n: Int): ArrayData = {
-    val tab = table(n)
+    val tab = BpeTable.Bytes.prefix(n, "bpe_encode_bytes")
     val s = text.toString
     val out = new java.util.ArrayList[AnyRef]()
     val m = Pretokenizer.matcher(s)

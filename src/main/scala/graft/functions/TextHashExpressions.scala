@@ -155,21 +155,6 @@ object TextHashUtil {
     emitBits(votes)
   }
 
-  /** MinHash signature: element s is min over grams of
-    * md5(s + ":" + gram) as hex (lexicographic min == numeric min on
-    * fixed-width hex). */
-  /** Winnowing fingerprints (Schleimer et al. 2003) of a word array in ONE
-    * JVM pass: k-word gram hashes (first 15 md5 hex chars as a 60-bit
-    * long — the engine's standard gram-hash convention), a monotonic-deque
-    * sliding minimum over windows of w grams, distinct selected values,
-    * sorted ascending. BIT-IDENTICAL to the composable form
-    * `sort_array(array_distinct(transform(sequence(1, greatest(nGrams−w+1, 1)),
-    * j -> array_min(slice(hashes, j, w)))))` with
-    * `hashes = transform(sequence(1, nWords−k+1),
-    * i -> conv(substring(md5(concat_ws(' ', slice(words, i, k))), 1, 15), 16, 10))`
-    * — which interpreted to ~nGrams·w lambda frames and a fresh slice
-    * array per window (the dd24 hot path: 10 s → sub-second at sf0.01).
-    * Fewer than k words → empty array (callers filter; kept total). */
   /** The k-word gram hashes behind [[winnowFps]] (and, standalone,
     * [[gramHashes]]): per position, md5 of the space-joined k words,
     * first 15 hex chars (7 full bytes + the high nibble of the 8th) as a
@@ -258,6 +243,18 @@ object TextHashUtil {
     new GenericArrayData(out)
   }
 
+  /** Winnowing fingerprints (Schleimer et al. 2003) of a word array in ONE
+    * JVM pass: k-word gram hashes (first 15 md5 hex chars as a 60-bit
+    * long — the engine's standard gram-hash convention), a monotonic-deque
+    * sliding minimum over windows of w grams, distinct selected values,
+    * sorted ascending. BIT-IDENTICAL to the composable form
+    * `sort_array(array_distinct(transform(sequence(1, greatest(nGrams−w+1, 1)),
+    * j -> array_min(slice(hashes, j, w)))))` with
+    * `hashes = transform(sequence(1, nWords−k+1),
+    * i -> conv(substring(md5(concat_ws(' ', slice(words, i, k))), 1, 15), 16, 10))`
+    * — which interpreted to ~nGrams·w lambda frames and a fresh slice
+    * array per window (the dd24 hot path: 10 s → sub-second at sf0.01).
+    * Fewer than k words → empty array (callers filter; kept total). */
   def winnowFps(words: ArrayData, k: Int, w: Int): ArrayData = {
     val nGrams0 = words.numElements() - k + 1
     if (nGrams0 <= 0) return new GenericArrayData(Array.empty[Long])
@@ -287,6 +284,9 @@ object TextHashUtil {
     new GenericArrayData(out)
   }
 
+  /** MinHash signature: element s is min over grams of
+    * md5(s + ":" + gram) as hex (lexicographic min == numeric min on
+    * fixed-width hex). */
   def minhashSig(grams: ArrayData, numHashes: Int): ArrayData = {
     val d = md5()
     val mins = new Array[String](numHashes)
@@ -787,33 +787,70 @@ object TextHashFunctions {
       Seq(payload), Seq(BinaryType), returnsNull = true)
 
   /** array<string> of BPE tokens under the first-`nMerges` prefix of the
-    * trained table (default: the mid-band
-    * [[graft.llmdata.BpeMerges.BandN]]); see [[BpeUtil]]. The prefix is
-    * checked here because the SQL surface passes it in. */
-  def bpeEncode(text: Column, nMerges: Int = graft.llmdata.BpeMerges.BandN): Column = {
-    val full = graft.llmdata.BpeMerges.Full.length
-    require(nMerges > 0 && nMerges <= full,
-      s"bpe_encode: merge-table prefix $nMerges out of range 1..$full")
+    * trained char table (default: the mid-band band prefix); see
+    * [[BpeUtil]]. The prefix is checked here, at plan time, because the
+    * SQL surface passes it in. */
+  def bpeEncode(text: Column, nMerges: Int = BpeTable.Char.bandN): Column = {
+    BpeTable.Char.prefix(nMerges, "bpe_encode")
     GraftColumn.staticCall(BpeUtil, "encodeText",
       ArrayType(StringType, containsNull = false), Seq(text, lit(nMerges)),
       Seq(StringType, IntegerType), returnsNull = false)
   }
 
   /** array<string> of byte-level BPE tokens under the first-`nMerges`
-    * prefix of the trained byte table (default: the mid-band
-    * [[graft.llmdata.BpeMergesBytes.BandN]]); see [[BpeBytesUtil]]. */
-  def bpeEncodeBytes(text: Column,
-      nMerges: Int = graft.llmdata.BpeMergesBytes.BandN): Column = {
-    val full = graft.llmdata.BpeMergesBytes.Full.length
-    require(nMerges > 0 && nMerges <= full,
-      s"bpe_encode_bytes: merge-table prefix $nMerges out of range 1..$full")
+    * prefix of the trained byte table (default: its band prefix); see
+    * [[BpeBytesUtil]]. */
+  def bpeEncodeBytes(text: Column, nMerges: Int = BpeTable.Bytes.bandN): Column = {
+    BpeTable.Bytes.prefix(nMerges, "bpe_encode_bytes")
     GraftColumn.staticCall(BpeBytesUtil, "encodeText",
       ArrayType(StringType, containsNull = false), Seq(text, lit(nMerges)),
       Seq(StringType, IntegerType), returnsNull = false)
   }
 
+  private val Vocab = ObjectType(classOf[BpeVocab])
+  private def vocabLit(vocab: BpeVocab): Column =
+    GraftColumn.of(Literal.create(vocab, Vocab))
+
+  /** array<int> of token IDS: the [[bpeEncode]] merge walk composed with a
+    * token→id lookup in ONE scan-side pass (tx33 / cur16 — the id-level
+    * payload a training shard actually loads).
+    *
+    * The vocab is DATA-derived (built from the corpus by
+    * `TextAnalysis.bpeVocabCore`, persisted as the parquet artifact a
+    * tokenizer release ships), so unlike the merge table it is not a
+    * per-JVM constant: it is a literal argument, shipped with the task
+    * binary and codegen'd as a reference object — the same posture as the
+    * IVF codebook literals, with O(1) HashMap lookups per token instead of
+    * the O(|vocab|) linear scan an `element_at(map_literal, token)` would
+    * codegen to. Zero shuffle, zero build side; a real 100k-entry vocab is
+    * ~2 MB in the task binary — the degenerate best case of a broadcast.
+    * Tokens outside the vocab map to [[BpeUtil.UnkId]] (impossible when
+    * vocab and corpus coincide; the frozen-vocab contract for new text). */
+  def bpeEncodeIds(text: Column, vocab: BpeVocab,
+      nMerges: Int = BpeTable.Char.bandN): Column = {
+    BpeTable.Char.prefix(nMerges, "bpe_encode_ids")
+    GraftColumn.staticCall(BpeUtil, "encodeTextIds",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(text, lit(nMerges), vocabLit(vocab)),
+      Seq(StringType, IntegerType, Vocab), returnsNull = false)
+  }
+
+  /** The DETOKENIZER: token ids back to their concatenated text through
+    * the inverse vocab (ids are dense 0-based ranks, so the inverse is an
+    * array INDEX, not a map probe). Out-of-range ids (including
+    * [[BpeUtil.UnkId]]) decode to U+FFFD, the standard
+    * replacement-character convention. The round trip is exact up to the
+    * tokenizer's own whitespace normalization: the encoder splits on
+    * single spaces and drops empty words, so
+    * `decode(encode(text)) == text with spaces removed` — tx34 gates
+    * exactly that identity corpus-wide. */
+  def bpeDecodeIds(ids: Column, vocab: BpeVocab): Column =
+    GraftColumn.staticCall(BpeUtil, "decodeIds", StringType,
+      Seq(ids, vocabLit(vocab)), Seq(ArrayType(IntegerType), Vocab),
+      returnsNull = false)
+
   /** The byte-level DETOKENIZER — see [[BpeBytesUtil.decodeText]].
-    * Stateless (no vocab, no table), so unlike [[BpeDecodeIds]] it is
+    * Stateless (no vocab, no table), so unlike [[bpeDecodeIds]] it is
     * registrable on the SQL surface. */
   def bpeDecodeBytes(tokens: Column): Column =
     GraftColumn.staticCall(BpeBytesUtil, "decodeText", StringType, Seq(tokens),

@@ -188,9 +188,7 @@ object Similarity {
   // --------------------------------------------------- IVF coarse quantizer
 
   /** Codebook size — the number of coarse cells (and of sub-centroids
-    * per PQ subspace). Overridable per session via `spark.graft.ivf.k`;
-    * the DuckDB oracles pin the default, so CORRECTNESS runs at
-    * [[DefaultIvfK]] while a library user sizes k to the corpus.
+    * per PQ subspace); the DuckDB twins interpolate the same constant.
     * Deliberately ≠ the fixture's label count (10) so the quantizer is
     * proven label-free.
     *
@@ -210,22 +208,10 @@ object Similarity {
     * masters here, and the graph tier is the one the serve path walks.
     * The measured-future path for the IVF tier at deployment scale is
     * an ss24-style tuning curve at the target corpus with k AND nprobe
-    * co-scaled (FAISS scales both), served through the session pin —
-    * not a unilateral k default the build pays for. Evidence:
-    * SCALING.md "Graph-serve corpus-scale probe" part 5. */
-  private[llmdata] val DefaultIvfK = 16
-
-  private[graft] def ivfK(spark: SparkSession): Int = {
-    val key = "spark.graft.ivf.k"
-    spark.conf.getOption(key).map { s =>
-      val k = try s.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$key must be an integer, got '$s'")
-      }
-      require(k >= 1, s"$key must be >= 1, got $k")
-      k
-    }.getOrElse(DefaultIvfK)
-  }
+    * co-scaled (FAISS scales both) — not a unilateral k default the
+    * build pays for. Evidence: SCALING.md "Graph-serve corpus-scale
+    * probe" part 5. */
+  private[llmdata] val IvfK = 16
 
   /** How many coarse cells a QUERY probes in ss3 (corpus vectors are still
     * single-assigned — the index stays one-cell-per-vector). Multiprobe is
@@ -233,21 +219,8 @@ object Similarity {
     * uniform hash-sampled seeds a true neighbor often sits just across the
     * Voronoi boundary of the query's own cell, so probing the P nearest
     * cells trades P× candidate volume for recall without touching the
-    * index. Overridable via `spark.graft.ivf.probes`; oracles pin the
-    * default. */
-  private[llmdata] val DefaultIvfProbes = 4
-
-  private def ivfProbes(spark: SparkSession): Int = {
-    val key = "spark.graft.ivf.probes"
-    spark.conf.getOption(key).map { s =>
-      val p = try s.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$key must be an integer, got '$s'")
-      }
-      require(p >= 1, s"$key must be >= 1, got $p")
-      p
-    }.getOrElse(DefaultIvfProbes)
-  }
+    * index; the DuckDB twins interpolate the same constant. */
+  private[llmdata] val IvfProbes = 4
 
   /** Hash-sampled codebook: the k vectors of the `embeddings` table with
     * the lowest md5("seed:" + vec_id) — a deterministic uniform sample
@@ -271,7 +244,7 @@ object Similarity {
         Dedup.vecD(col("embedding")).as("cv"),
         md5(concat(lit("seed:"), col("vec_id").cast(StringType))).as("h"))
       .orderBy(col("h"), col("cell"))
-      .limit(ivfK(spark))
+      .limit(IvfK)
       .select(col("cell"), col("cv"))
   }
 
@@ -280,7 +253,7 @@ object Similarity {
   private[llmdata] val exemplarSelectSql: String =
     s"""SELECT vec_id AS cell, v AS cv FROM e
        |       ORDER BY md5('seed:' || CAST(vec_id AS VARCHAR)), vec_id
-       |       LIMIT $DefaultIvfK""".stripMargin
+       |       LIMIT $IvfK""".stripMargin
 
   /** The shared `ex` CTE form of [[exemplarSelectSql]]. Referenced by
     * every oracle in the IVF family (ss3/ss5 here — ss6 wraps the SELECT
@@ -422,7 +395,7 @@ object Similarity {
     // multiprobe: each query searches its P nearest cells; each corpus
     // vector lives in exactly one cell, so (query, neighbor) pairs are
     // already distinct across probes — no dedup step needed
-    val q = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, ivfProbes(spark))
+    val q = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, IvfProbes)
     val scored = c.join(broadcast(q), "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
@@ -496,7 +469,7 @@ object Similarity {
       .filter(col("vec_id") >= NumQueries && col("label") < FilterLabelLt)
       .select(col("vec_id"), Dedup.vecD(col("embedding")).as("v"))
     val c = assignCells(filteredCorpus, "v", ex)
-    val q = assignCellsTopP(queriesDf(spark, dir), "q", ex, ivfProbes(spark))
+    val q = assignCellsTopP(queriesDf(spark, dir), "q", ex, IvfProbes)
     val scored = c.join(broadcast(q), "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
@@ -527,7 +500,7 @@ object Similarity {
        |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |             ORDER BY ${cosSql("e.v", "ex.cv")} DESC, ex.cell) AS rn
        |         FROM e CROSS JOIN ex WHERE e.vec_id < $NumQueries) x
-       |       WHERE rn <= $DefaultIvfProbes),
+       |       WHERE rn <= $IvfProbes),
        |scored AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("q", "v")} AS cos_sim
        |           FROM ca JOIN qa USING (cell))
        |SELECT query_id, rank, neighbor_id, cos_sim FROM (
@@ -550,7 +523,7 @@ object Similarity {
        |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |             ORDER BY ${cosSql("e.v", "ex.cv")} DESC, ex.cell) AS rn
        |         FROM e CROSS JOIN ex WHERE e.vec_id < $NumQueries) x
-       |       WHERE rn <= $DefaultIvfProbes),
+       |       WHERE rn <= $IvfProbes),
        |scored AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("q", "v")} AS cos_sim
        |           FROM ca JOIN qa USING (cell))
        |SELECT query_id, rank, neighbor_id, cos_sim FROM (
@@ -635,7 +608,7 @@ object Similarity {
 
   /** PQ geometry: 64 dims split into [[PqM]] subspaces of [[PqSubDim]];
     * the per-subspace codebook is the hash-sampled IVF exemplar set's
-    * sub-vectors ([[DefaultIvfK]] entries per subspace — deterministic,
+    * sub-vectors ([[IvfK]] entries per subspace — deterministic,
     * shared training with ss3/dd9). */
   private val PqM = 4
   private val PqSubDim = 16
@@ -793,7 +766,7 @@ object Similarity {
   /** IVF+PQ ANN with ADC scoring and exact refine (ss7) — the composed
     * billion-scale index (FAISS `IVFPQ`; Jégou et al. 2011 §V): the coarse
     * quantizer bounds WHICH rows are scored (only the query's
-    * [[DefaultIvfProbes]] nearest cells — candidate volume is the probed
+    * [[IvfProbes]] nearest cells — candidate volume is the probed
     * cells' population, not the corpus) and PQ bounds WHAT each candidate
     * costs (4 code lookups + 3 adds over a 4-int payload instead of a
     * 64-double dot). ss3 bounds candidates but pays full vectors; ss6
@@ -863,7 +836,7 @@ object Similarity {
       exemplars: DataFrame, cand: DataFrame): DataFrame = {
     val ex = collectedExemplars(exemplars)
     require(ex.nonEmpty, "IVF-PQ requires a trained codebook")
-    val probes = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, ivfProbes(spark))
+    val probes = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, IvfProbes)
       .select(col("query_id"), col("cell"))
     val tabs = pqQueryTabs(ex, queriesDf(spark, dir))
     val scored = cand.join(broadcast(probes.join(tabs, "query_id")), "cell")
@@ -910,7 +883,7 @@ object Similarity {
        |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |             ORDER BY ${cosSql("e.v", "ex.cv")} DESC, ex.cell) AS rn
        |         FROM e CROSS JOIN ex WHERE e.vec_id < $NumQueries) x
-       |       WHERE rn <= $DefaultIvfProbes),
+       |       WHERE rn <= $IvfProbes),
        |ms AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
        |enc0 AS (SELECT e.vec_id, ms.m, ex.k, ${subDot("e.v", "ex.cv", "ms.m")} AS s
        |         FROM e CROSS JOIN ms CROSS JOIN ex WHERE e.vec_id >= $NumQueries),
@@ -2875,7 +2848,7 @@ object Similarity {
   // -------------------- ss24: IVF nprobe sweep (the tuning curve)
 
   /** Probe counts the ss24 sweep measures — the configured operating
-    * point ([[DefaultIvfProbes]] = 4) sits inside the grid so the curve
+    * point ([[IvfProbes]] = 4) sits inside the grid so the curve
     * justifies it the way ss19's sweep justifies the graph serve. */
   private val IvfSweepProbes = Seq(1, 2, 4, 8)
 
@@ -2956,7 +2929,7 @@ object Similarity {
           lit((NumQueries * AnnTopK).toDouble)).as("recall3"),
         (col("n_candidates").cast(DoubleType) /
           lit(NumQueries.toDouble * corpusN)).as("visited_share"),
-        (col("nprobe") === lit(DefaultIvfProbes.toLong)).as("is_configured"))
+        (col("nprobe") === lit(IvfProbes.toLong)).as("is_configured"))
       .orderBy(col("nprobe"))
   }
 
@@ -3004,7 +2977,7 @@ object Similarity {
        |  CAST(h.hits3 AS DOUBLE) / ${(NumQueries * AnnTopK).toDouble} AS recall3,
        |  CAST(vv.n_candidates AS DOUBLE) / ($NumQueries.0 * n.corpus_n)
        |    AS visited_share,
-       |  h.nprobe = $DefaultIvfProbes AS is_configured
+       |  h.nprobe = $IvfProbes AS is_configured
        |FROM h JOIN vv USING (nprobe) CROSS JOIN n
        |ORDER BY h.nprobe""".stripMargin
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{BpeTable, BpeVocab}
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline, over the
@@ -1381,9 +1382,9 @@ object TextAnalysis {
     * [[graft.functions.BpeUtil]]), emitting the token count and the
     * space-joined token stream.
     *
-    * The merge table is the offline-trained [[BpeMerges]] artifact baked
-    * into the expression — the degenerate best case of a broadcast
-    * (constant ships with the task binary; zero build side). The plan is
+    * The merge table is the offline-trained [[graft.functions.BpeTable]]
+    * data, a per-JVM constant inside the native call — the degenerate
+    * best case of a broadcast (zero build side). The plan is
     * ONE parquet scan + project, no join and no aggregate: tokenization
     * at 100 TB is embarrassingly parallel and this plan keeps it that
     * way (PlanQualitySpec pins zero joins/aggregates).
@@ -1410,15 +1411,15 @@ object TextAnalysis {
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
 
   /** A merge table as a SQL VALUES literal — single source of truth is
-    * the generated [[BpeMerges]] constant ([[BpeMerges.Band]] for the
-    * documents-family twins, [[BpeMerges.Full]] for the cross-domain
-    * audit's realistic-size table). */
+    * [[graft.functions.BpeTable]] (the band prefix for the
+    * documents-family twins, the full table for the cross-domain audit's
+    * realistic-size table). */
   private def bpeMergesValuesOf(ms: IndexedSeq[(String, String)]): String =
     ms.zipWithIndex
       .map { case ((a, b), i) => s"($i,${sqlLit(a)},${sqlLit(b)})" }
       .mkString(",")
 
-  private def bpeMergesValues: String = bpeMergesValuesOf(BpeMerges.Merges)
+  private def bpeMergesValues: String = bpeMergesValuesOf(BpeTable.Char.band)
 
   /** Shared CTE chain for the BPE twins: ends at `per(doc_id, ts)` — the
     * per-document U+001F-joined token stream. tx24 renders it; tx26
@@ -1740,27 +1741,23 @@ object TextAnalysis {
       .select(col("token_id"), col("token"), col("n_occurrences"))
   }
 
-  /** The vocab as a driver-side map, session-cached per corpus dir — the
-    * IVF-codebook idiom (`Similarity.collectedExemplars`): collected ONCE
-    * (|vocab| rows, control plane), then folded into the id-encode
-    * expression so the per-token lookup is an in-task O(1) hash probe
-    * with zero data movement. Same staleness contract as every
+  /** The vocab as a driver-side [[BpeVocab]], session-cached per corpus
+    * dir — the IVF-codebook idiom (`Similarity.collectedExemplars`):
+    * collected ONCE (|vocab| rows, control plane), then passed to the id
+    * encode and decode as a literal so the per-token lookup is an in-task
+    * O(1) hash probe with zero data movement. Same staleness contract as every
     * SessionCache user. */
-  private val vocabCache = new SessionCache[Map[String, Int]](_ => ())
-  private[graft] def collectedVocab(spark: SparkSession,
-                                    dir: String): Map[String, Int] =
-    vocabCache.get(spark, s"bpe_vocab:$dir")(
+  private val vocabCache = new SessionCache[BpeVocab](_ => ())
+  private def collectedVocab(spark: SparkSession, dir: String): BpeVocab =
+    vocabCache.get(spark, s"bpe_vocab:$dir")(BpeVocab(
       bpeVocabCore(spark, dir).collect()
-        .map(r => r.getString(1) -> r.getInt(0)).toMap)
+        .map(r => r.getString(1) -> r.getInt(0)).toMap))
 
   /** The id-level encode column: text → array<int> under the corpus
-    * vocab (native [[graft.functions.BpeEncodeIds]]; merge walk + id
-    * lookup in one scan-side pass). */
+    * vocab (native [[graft.functions.TextHashFunctions.bpeEncodeIds]];
+    * merge walk + id lookup in one scan-side pass). */
   private def bpeIdsCol(spark: SparkSession, dir: String): Column =
-    org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncodeIds(
-        org.apache.spark.sql.GraftColumn.expr(col("text")),
-        graft.llmdata.BpeMerges.BandN, collectedVocab(spark, dir)))
+    graft.functions.TextHashFunctions.bpeEncodeIds(col("text"), collectedVocab(spark, dir))
 
   /** tx33: per-document token-ID sequences — tx24's apply emitting the
     * INT ids a trainer consumes instead of token strings. Zero-token
@@ -1795,16 +1792,13 @@ object TextAnalysis {
     * reconciliation (decoded chars + dropped spaces == source chars).
     *
     * Scale posture: encode∘decode fuses into ONE scan-side projection
-    * (native [[graft.functions.BpeEncodeIds]] →
-    * [[graft.functions.BpeDecodeIds]], both codegen; the inverse vocab is
-    * a dense array indexed by id — ids are lexicographic ranks — shipped
-    * as a codegen reference object like the forward vocab), then one
+    * (native `bpe_encode_ids` → `bpe_decode_ids`, both codegen; the
+    * inverse vocab is a dense array indexed by id — ids are lexicographic
+    * ranks — shipped in the same vocab literal as the forward map), then one
     * combinable per-source aggregate. Zero joins, zero extra shuffle. */
   def bpeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val decoded = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeDecodeIds(
-        org.apache.spark.sql.GraftColumn.expr(bpeIdsCol(spark, dir)),
-        collectedVocab(spark, dir)))
+    val decoded = graft.functions.TextHashFunctions.bpeDecodeIds(
+      bpeIdsCol(spark, dir), collectedVocab(spark, dir))
     t(spark, dir, "documents").filter(col("text").isNotNull)
       .select(col("source"),
         decoded.as("decoded"),
@@ -2042,7 +2036,7 @@ object TextAnalysis {
 
   /** Number of merges the tx28 QUERY learns over the documents corpus —
     * small enough for the 40-level unrolled DuckDB twin to gate it
-    * exactly. The realistic-size table ([[BpeMerges.Full]], 2000 merges
+    * exactly. The realistic-size table ([[BpeTable.Char]]'s full 2000 merges
     * over [[BpeCorpus.unionWordFreq]]) is gated by trainer parity
     * instead: LlmDataSpec asserts [[bpeTrainOn]] at N=2000 reproduces
     * the baked Python-trained artifact bit-for-bit (the twin cannot
@@ -2227,7 +2221,7 @@ object TextAnalysis {
   // ------------- tx29: cross-domain tokenizer audit (realistic table)
 
   /** tx29: tx27's tokenizer-health dashboard run CROSS-DOMAIN under the
-    * realistic-size merge table ([[BpeMerges.Full]], 2000 merges over the
+    * realistic-size merge table ([[BpeTable.Char]]'s full 2000 merges over the
     * union corpus — see [[BpeCorpus]]): the comparison a tokenizer owner
     * reads before reusing one tokenizer across heterogeneous shards.
     * Domains (one row each): `documents` (prose — a CLOSED 31-word
@@ -2238,15 +2232,15 @@ object TextAnalysis {
     * tails — runs HOT: the digit diversity keeps names multi-token, the
     * published pattern of numeric/ID domains). The documents-family
     * operators deliberately DON'T use this table: the mid-band
-    * [[BpeMerges.Band]] prefix keeps their fertility/packing-drift
-    * signals alive (see [[BpeMerges]] scaladoc for the measured
+    * band prefix keeps their fertility/packing-drift
+    * signals alive (see [[BpeTable]] scaladoc for the measured
     * saturation that forces the split).
     *
     * Scale posture: identical to tx27 — the encode rides in the task
     * binary (zero data movement), one scan per domain table, one tiny
     * per-domain combinable aggregate; no join.  */
   def bpeDomainAudit(spark: SparkSession, dir: String): DataFrame = {
-    val full = BpeMerges.Full.length
+    val full = BpeTable.Char.full.length
     def enc(c: Column) = graft.functions.TextHashFunctions.bpeEncode(c, full)
     def ratio(num: Column, den: Column): Column =
       when(den === 0L, lit(null).cast(DoubleType))
@@ -2283,7 +2277,7 @@ object TextAnalysis {
   }
 
   val bpeDomainAuditSql: String =
-    s"""WITH RECURSIVE merges(rank, a, b) AS (VALUES ${bpeMergesValuesOf(BpeMerges.Full)}),
+    s"""WITH RECURSIVE merges(rank, a, b) AS (VALUES ${bpeMergesValuesOf(BpeTable.Char.full)}),
        |src AS (
        |  SELECT 'documents' AS domain, unnest(string_split(text, ' ')) AS w
        |  FROM documents WHERE text IS NOT NULL
@@ -2379,10 +2373,8 @@ object TextAnalysis {
       ("part_names", t(spark, dir, "part").select(col("p_name").as("s"))),
       ("supplier_names",
         t(spark, dir, "supplier").select(col("s_name").as("s"))))
-    val ids = org.apache.spark.sql.GraftColumn.of(
-      graft.functions.BpeEncodeIds(
-        org.apache.spark.sql.GraftColumn.expr(col("s")),
-        graft.llmdata.BpeMerges.BandN, collectedVocab(spark, dir)))
+    val ids = graft.functions.TextHashFunctions.bpeEncodeIds(col("s"),
+      collectedVocab(spark, dir))
     domains.map { case (d, df) =>
       df.filter(col("s").isNotNull).select(lit(d).as("domain"), col("s"))
     }.reduce(_.unionAll(_))
@@ -2404,7 +2396,7 @@ object TextAnalysis {
     * the vocab was built with), UNK decided by membership against the
     * documents token set. */
   val frozenVocabOovSql: String =
-    s"""WITH RECURSIVE merges(rank, a, b) AS (VALUES ${bpeMergesValuesOf(BpeMerges.Band)}),
+    s"""WITH RECURSIVE merges(rank, a, b) AS (VALUES ${bpeMergesValuesOf(BpeTable.Char.band)}),
        |src AS (
        |  SELECT 'documents' AS domain, unnest(string_split(text, ' ')) AS w
        |  FROM documents WHERE text IS NOT NULL
@@ -2476,7 +2468,7 @@ object TextAnalysis {
     * canonical GPT-2 regex). Same output surface as tx24 (doc_id,
     * n_tokens, joined token text) so the two tokenizers are directly
     * comparable; same scan-side zero-data-movement posture; the byte
-    * merge table ([[BpeMergesBytes.Band]], the mid-band prefix of the
+    * merge table ([[BpeTable.Bytes]]'s band, the mid-band prefix of the
     * 2000-merge bytes-mode artifact) rides in the task binary.
     *
     * Twin: the tx24 recursion over DISTINCT MAPPED PRETOKENS — the
@@ -2501,7 +2493,7 @@ object TextAnalysis {
   private def bpeBytesPerDocCtes(x: String): String = {
     val pat = graft.functions.BpeBytesUtil.PretokenRegex.replace("'", "''")
     s"""${x}merges(rank, a, b) AS (
-       |  VALUES ${bpeMergesValuesOf(BpeMergesBytes.Band)}),
+       |  VALUES ${bpeMergesValuesOf(BpeTable.Bytes.band)}),
        |${x}pret AS (
        |  SELECT doc_id, i, parts[i] AS w
        |  FROM (SELECT doc_id, regexp_extract_all(text, '$pat') AS parts
@@ -2629,8 +2621,8 @@ object TextAnalysis {
     * not encoded: at zero merges every token is one character, so its
     * token total IS the char total — the curve's exact anchor. */
   private val AblationLevels = Seq(
-    BpeMerges.BandN / 4, BpeMerges.BandN / 2,
-    BpeMerges.BandN * 3 / 4, BpeMerges.BandN)
+    BpeTable.Char.bandN / 4, BpeTable.Char.bandN / 2,
+    BpeTable.Char.bandN * 3 / 4, BpeTable.Char.bandN)
 
   /** tx37: MERGE-BUDGET ablation — the vocab-size question a tokenizer
     * owner answers before fixing |V| (vocab-scaling studies ask exactly
@@ -2661,7 +2653,7 @@ object TextAnalysis {
       .select(
         size(filter(split(col("text"), " "), x => x =!= ""))
           .cast(LongType).as("nw") +:
-        length(array_join(tk(BpeMerges.BandN), "")).cast(LongType).as("nc") +:
+        length(array_join(tk(BpeTable.Char.bandN), "")).cast(LongType).as("nc") +:
         AblationLevels.zipWithIndex.map { case (l, i) =>
           size(tk(l)).cast(LongType).as(s"nt$i")
         }: _*)

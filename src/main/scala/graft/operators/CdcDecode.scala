@@ -59,16 +59,20 @@ object CdcDecode {
   def explodeIds(decoded: DataFrame): DataFrame =
     decoded.withColumn("Id", explode(col("recordIds"))).drop("recordIds")
 
-  /** Dead-letter split: rows whose envelope failed to parse (no
-    * entityName/changeType after from_json) go to a quarantine branch
+  /** Over [[decodeJson]]'s columns: the envelope lacks a header field
+    * routing needs. Without `entityName` or `changeType` the enrich
+    * branches drop the row, and without `recordIds` the explode yields
+    * nothing, so such a row must be dead-lettered, never routed. */
+  val missingHeader: Column =
+    col("entityName").isNull || col("changeType").isNull || col("recordIds").isNull
+
+  /** Dead-letter split: rows whose envelope failed to parse or lacks a
+    * header field ([[missingHeader]]) go to a quarantine branch
     * instead of vanishing — the idiomatic upgrade of the reference's
     * swallow-and-log (quirk Q8, `KinesisExample.java:143-147`). Both
     * branches are filters over the same decode, so the scan is shared. */
-  def partitionValid(decoded: DataFrame): (DataFrame, DataFrame) = {
-    val bad = col("entityName").isNull || col("changeType").isNull ||
-      col("recordIds").isNull
-    (decoded.filter(!bad), decoded.filter(bad))
-  }
+  def partitionValid(decoded: DataFrame): (DataFrame, DataFrame) =
+    (decoded.filter(!missingHeader), decoded.filter(missingHeader))
 
   /** Wire-level dead-letter routing with REASONS — the production
     * upgrade of [[partitionValid]]'s post-decode null test. The reference

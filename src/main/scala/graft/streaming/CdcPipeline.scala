@@ -105,18 +105,20 @@ object CdcPipeline {
   def transformWithDlq(rawJson: DataFrame, snapshot: DataFrame): (DataFrame, DataFrame) =
     route(stage(rawJson), snapshot)
 
-  /** One projection over the raw envelopes: the DLQ classification
-    * (`_dlq_reason`, null on good rows) and `CdcDecode.decodeJson`, kept
-    * to the columns the two sinks read. `raw` and `replay_id` are filled
-    * only on dead-letter rows, so a persisted stage does not hold the
-    * envelope text of every good row. */
+  /** One projection over the raw envelopes: `CdcDecode.decodeJson` and
+    * the DLQ classification over its columns (`_dlq_reason`, null on good
+    * rows; a header missing `entityName`, `changeType` or `recordIds` is
+    * the batch path's `CdcDecode.missingHeader` rule), kept to the columns
+    * the two sinks read. `raw` and `replay_id` are filled only on
+    * dead-letter rows, so a persisted stage does not hold the envelope
+    * text of every good row. */
   private def stage(rawJson: DataFrame): DataFrame = {
     val jok = try_parse_json(col("value")).isNotNull
-    val entity = get_json_object(col("value"), "$.payload.ChangeEventHeader.entityName")
     val reason = when(!jok, lit("dlq_bad_json"))
-      .when(entity.isNull, lit("dlq_missing_header"))
+      .when(CdcDecode.missingHeader, lit("dlq_missing_header"))
     val dead = col("_dlq_reason").isNotNull
-    CdcDecode.decodeJson(rawJson.withColumn("_dlq_reason", reason), col("value"))
+    CdcDecode.decodeJson(rawJson, col("value"))
+      .withColumn("_dlq_reason", reason)
       .select(
         col("_dlq_reason"),
         when(dead, col("value")).as("raw"),

@@ -84,6 +84,10 @@ class CdcStagingSpec extends SparkSpec {
   }
 
   test("writeBatchExactlyOnce sinks exactly what transformWithDlq computes") {
+    // an entityName alone is not a header: both are dead letters
+    val noChangeType = env(8, "UPDATE", "001A").replace(""""changeType":"UPDATE",""", "")
+    val noRecordIds = env(9, "UPDATE", "001A").replace(""","recordIds":["001A"]""", "")
+    assert(!noChangeType.contains("changeType") && !noRecordIds.contains("recordIds"))
     val batch = publish("t_stage_equiv", Seq(
       env(1, "CREATE", "001A"),
       env(2, "UPDATE", "001B", "001B"), // repeated id: one row
@@ -92,7 +96,8 @@ class CdcStagingSpec extends SparkSpec {
       env(5, "UPDATE", "001Z"),         // snapshot miss: dropped
       """{"oops""",
       """{"payload":{},"event":{"replayId":7}}""",
-      "[1]"))                           // JSON, but no header
+      "[1]",                            // JSON, but no header
+      noChangeType, noRecordIds))
     val snapshot = Seq(("001A", "Alice"), ("001B", "Bob"), ("001C", "Carol"))
       .toDF("Id", "Name")
     val out = Files.createTempDirectory("stage_equiv").toString
@@ -123,7 +128,9 @@ class CdcStagingSpec extends SparkSpec {
     assert(wantLetters == Seq[Letter](
       ("dlq_bad_json", """{"oops""", None),
       ("dlq_missing_header", "[1]", None),
-      ("dlq_missing_header", """{"payload":{},"event":{"replayId":7}}""", Some(7L)))
+      ("dlq_missing_header", """{"payload":{},"event":{"replayId":7}}""", Some(7L)),
+      ("dlq_missing_header", noChangeType, Some(8L)),
+      ("dlq_missing_header", noRecordIds, Some(9L)))
       .sortBy(_.toString))
   }
 }

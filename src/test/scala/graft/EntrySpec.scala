@@ -79,7 +79,9 @@ class EntrySpec extends SparkSpec {
       // the batch_id partition overwrite (CdcPipeline.exactlyOnceBatchWrite)
       ("partitionOverwriteMode" + """"\s*,\s*"dynamic""").r -> "CdcPipeline.scala",
       // every native helper call goes through GraftColumn.staticCall
-      ("StaticInvoke" + """\(""").r -> "shim.scala")
+      ("StaticInvoke" + """\(""").r -> "shim.scala",
+      // the merge-table resources are read only by the table module
+      ("graft/" + "bpe/").r -> "BpeTable.scala")
     val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
     val sources = roots.flatMap { root =>

@@ -1454,11 +1454,11 @@ class LlmDataSpec extends SparkSpec {
       "N=2000 on the sf0.1 union corpus reproduces the baked Python-trained " +
       "BpeMerges.Full bit-for-bit (the 2000-level table the DuckDB twin " +
       "cannot unroll)") {
-    val full = graft.llmdata.BpeMerges.Full
+    val full = graft.functions.BpeTable.Char.full
     assert(full.length >= 2000, s"baked table has ${full.length} merges")
-    assert(graft.llmdata.BpeMerges.BandN > 0 &&
-      graft.llmdata.BpeMerges.BandN < full.length)
-    assert(graft.llmdata.BpeMerges.Band == full.take(graft.llmdata.BpeMerges.BandN))
+    assert(graft.functions.BpeTable.Char.bandN > 0 &&
+      graft.functions.BpeTable.Char.bandN < full.length)
+    assert(graft.functions.BpeTable.Char.band == full.take(graft.functions.BpeTable.Char.bandN))
     val rows = graft.llmdata.TextAnalysis.bpeTrainOn(
       graft.llmdata.BpeCorpus.unionWordFreq(spark, "/root/testdata/sf0.1"),
       full.length).collect()
@@ -1475,10 +1475,10 @@ class LlmDataSpec extends SparkSpec {
   test("BPE byte-table parity: the Spark trainer in byte mode at N=2000 on " +
       "the sf0.1 union corpus reproduces the baked BpeMergesBytes.Full " +
       "bit-for-bit") {
-    val full = graft.llmdata.BpeMergesBytes.Full
+    val full = graft.functions.BpeTable.Bytes.full
     assert(full.length >= 2000, s"baked byte table has ${full.length} merges")
-    assert(graft.llmdata.BpeMergesBytes.Band ==
-      full.take(graft.llmdata.BpeMergesBytes.BandN))
+    assert(graft.functions.BpeTable.Bytes.band ==
+      full.take(graft.functions.BpeTable.Bytes.bandN))
     val rows = graft.llmdata.TextAnalysis.bpeTrainOn(
       graft.llmdata.BpeCorpus.unionByteWordFreq(spark, "/root/testdata/sf0.1"),
       full.length).collect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{array, col, lit, split}
 import org.apache.spark.sql.types._
 
-import graft.functions.{LshFunctions, TextHashFunctions => F}
+import graft.functions.{BpeTable, BpeUtil, BpeVocab, LshFunctions, TextHashFunctions => F}
 
 /** The native helpers are called through Spark's StaticInvoke, which
   * codegens a direct static call and, with codegen off, evaluates by
@@ -39,21 +39,30 @@ class NativeCallSpec extends SparkSpec {
     StructField("la", ArrayType(LongType)),
     StructField("lb", ArrayType(LongType)),
     StructField("payload", BinaryType),
-    StructField("v", ArrayType(DoubleType))))
+    StructField("v", ArrayType(DoubleType)),
+    StructField("ids", ArrayType(IntegerType))))
 
   private val rows = Seq(
     Row(1L, Seq("the", "quick", "brown", "fox", "jumps"), Seq("fox", "dog"),
       "martha", "the market was HIGH", Seq(1L, 3L, 5L, 7L), Seq(3L, 5L, 9L),
-      onePpm, Seq.tabulate(64)(i => math.sin(i.toDouble))),
+      onePpm, Seq.tabulate(64)(i => math.sin(i.toDouble)), Seq(0, 1)),
     // the null-returning cases: < 2 elements for sorted_pairs, a null
-    // token for clf_total, a payload that is neither P6 nor WAVE
+    // token for clf_total, a payload that is neither P6 nor WAVE; ids
+    // outside the vocab for bpe_decode_ids
     Row(2L, Seq("solo"), Seq("x", null), "ca", "abc", Seq(42L), Seq.empty[Long],
-      "not a media payload".getBytes("US-ASCII"), Seq.fill(64)(-1.0)),
-    Row(3L, null, null, null, null, null, null, null, null),
+      "not a media payload".getBytes("US-ASCII"), Seq.fill(64)(-1.0), Seq(-1, 99)),
+    Row(3L, null, null, null, null, null, null, null, null, null),
     Row(4L, Seq.empty[String], Seq.empty[String], "", "", Seq.empty[Long],
-      Seq(1L), wav, Seq.fill(64)(0.0)),
+      Seq(1L), wav, Seq.fill(64)(0.0), Seq.empty[Int]),
     Row(5L, Seq("a", "b", "a"), Seq("b"), "  two  spaces ", "x", Seq(2L, 4L),
-      Seq(4L), ppm, Seq.fill(64)(0.5)))
+      Seq(4L), ppm, Seq.fill(64)(0.5), Seq(1)))
+
+  /** A vocab of the band-table tokens of "the market": in row 1's
+    * "the market was HIGH", "was" and "HIGH" are out of vocabulary. */
+  private val marketTokens = BpeUtil.encodeText(
+    org.apache.spark.unsafe.types.UTF8String.fromString("the market"),
+    BpeTable.Char.bandN).toArray[AnyRef](StringType).map(_.toString).toSeq
+  private val vocab = BpeVocab(marketTokens.distinct.sorted.zipWithIndex.toMap)
 
   private val calls: Seq[(String, Column)] = {
     val (toks, dirty, a, b, la, lb, payload) =
@@ -85,6 +94,8 @@ class NativeCallSpec extends SparkSpec {
       "bpe_encode" -> F.bpeEncode(a),
       "bpe_encode_bytes" -> F.bpeEncodeBytes(b),
       "bpe_decode_bytes" -> F.bpeDecodeBytes(toks),
+      "bpe_encode_ids" -> F.bpeEncodeIds(b, vocab),
+      "bpe_decode_ids" -> F.bpeDecodeIds(col("ids"), vocab),
       "lsh_code" -> LshFunctions.lshCode(col("v")))
   }
 
@@ -120,6 +131,22 @@ class NativeCallSpec extends SparkSpec {
     } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
+  test("bpe_encode and bpe_encode_bytes reject a merge-table prefix outside " +
+      "1..full, from SQL and through the Column API, with the range message") {
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    for ((fn, table, encode) <- Seq[(String, BpeTable, Int => Column)](
+        ("bpe_encode", BpeTable.Char, n => F.bpeEncode(col("t"), n)),
+        ("bpe_encode_bytes", BpeTable.Bytes, n => F.bpeEncodeBytes(col("t"), n)));
+        n <- Seq(0, table.full.length + 1)) {
+      val want = s"$fn: merge-table prefix $n out of range 1..${table.full.length}"
+      val api = intercept[IllegalArgumentException](encode(n))
+      assert(api.getMessage.contains(want), api.getMessage)
+      val sql = intercept[Exception](spark.sql(s"SELECT $fn('the market', $n)").collect())
+      assert(messages(sql).exists(m => m != null && m.contains(want)), messages(sql))
+    }
+  }
+
   test("every native call returns the same rows, nulls included, with " +
       "codegen on and with the reflective interpreted path") {
     val generated = run(codegen = true)
@@ -141,6 +168,15 @@ class NativeCallSpec extends SparkSpec {
     assert(value(4L, "wav_features") == Seq(8000, 4, 300L * 300 + 25 + 1 + 127 * 127, 300, 3))
     assert(value(5L, "sorted_pairs") == Seq(Seq(2L, 4L)))
     assert(value(2L, "damerau") == 2L)
+    // the vocab rides in as a literal: known tokens get their ids, an
+    // out-of-vocabulary token the UnkId, and an out-of-range id decodes to
+    // the replacement character
+    val known = marketTokens.map(vocab.tokens)
+    val ids1 = value(1L, "bpe_encode_ids").asInstanceOf[scala.collection.Seq[Int]]
+    assert(ids1.take(known.length) == known && ids1.drop(known.length).nonEmpty &&
+      ids1.drop(known.length).forall(_ == BpeUtil.UnkId), ids1)
+    assert(value(2L, "bpe_decode_ids") == "\uFFFD\uFFFD")
+    assert(value(1L, "bpe_decode_ids") == vocab.inverse.take(2).mkString)
     // result nullability: null only where the helper itself can return it
     val nn = spark.range(1).select(array(lit("a")).as("t"))
       .select(F.simhash64(col("t")), F.clfTotal(col("t")), F.sortedPairs(array(lit(1L))))

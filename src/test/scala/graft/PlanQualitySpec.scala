@@ -881,7 +881,10 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.llmdata.TextAnalysis.bpeEncodeIds(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
     assert(!p.contains("HashAggregate") && !p.contains("Window"))
-    assert(p.contains("bpe_encode_ids"), "the native id encode must be in-plan")
+    assert(p.contains("static_invoke(graft.functions.BpeUtil.encodeTextIds("),
+      "the native id encode must be in-plan")
+    assert("""BpeVocab\(\d+ tokens\)""".r.findFirstIn(p).isDefined,
+      "the vocab literal prints its size, not its entries")
     val scans = p.linesIterator.filter(_.contains("Location"))
       .count(_.contains("documents.parquet"))
     assert(scans == 1, s"documents scans: $scans")
@@ -893,7 +896,8 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.llmdata.TextAnalysis.bpeRoundtrip(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
     assert(!p.contains("Window"))
-    assert(p.contains("bpe_encode_ids") && p.contains("bpe_decode_ids"),
+    assert(p.contains("static_invoke(graft.functions.BpeUtil.encodeTextIds(") &&
+      p.contains("static_invoke(graft.functions.BpeUtil.decodeIds("),
       "both native expressions must be in-plan, fused in the same projection")
     val aggs = p.linesIterator.count(_.matches("^\\(\\d+\\) HashAggregate.*"))
     assert(aggs == 2, s"partial+final of ONE per-source aggregate: $aggs")
@@ -920,7 +924,8 @@ class PlanQualitySpec extends SparkSpec {
       "domain table, one aggregate") {
     val p = plan(graft.llmdata.TextAnalysis.frozenVocabOov(spark, sf()))
     assert(!p.matches("(?s).*\\(\\d+\\) [A-Za-z]*Join.*"), "no join of any kind")
-    assert(p.contains("bpe_encode_ids"), "the vocab-folded id encode in-plan")
+    assert(p.contains("static_invoke(graft.functions.BpeUtil.encodeTextIds("),
+      "the vocab-folded id encode in-plan")
     val aggs = p.linesIterator.count(_.matches("^\\(\\d+\\) HashAggregate.*"))
     assert(aggs == 2, s"partial+final of ONE per-domain aggregate: $aggs")
     val scans = p.linesIterator.count(_.contains("Location"))

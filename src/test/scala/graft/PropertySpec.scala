@@ -285,7 +285,7 @@ class PropertySpec extends SparkSpec {
   private def bpeBytes(s: String): Seq[String] =
     graft.functions.BpeBytesUtil.encodeText(
       org.apache.spark.unsafe.types.UTF8String.fromString(s),
-      graft.llmdata.BpeMergesBytes.BandN)
+      graft.functions.BpeTable.Bytes.bandN)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
       .array.map(_.toString).toSeq
 
@@ -295,8 +295,8 @@ class PropertySpec extends SparkSpec {
     val word = Gen.chooseNum(1, 12)
       .flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar)).map(_.mkString)
     val textGen = Gen.listOf(word).map(_.mkString(" "))
-    val nGen = Gen.oneOf(1, 40, graft.llmdata.BpeMerges.BandN,
-      graft.llmdata.BpeMerges.Full.length)
+    val nGen = Gen.oneOf(1, 40, graft.functions.BpeTable.Char.bandN,
+      graft.functions.BpeTable.Char.full.length)
     checkProp(Prop.forAll(textGen, nGen) { (text, n) =>
       val toks = bpeChar(text, n)
       val words = text.split(" ").filter(_.nonEmpty)
@@ -312,28 +312,26 @@ class PropertySpec extends SparkSpec {
       "identity under a corpus-derived vocab; out-of-vocab ids decode to " +
       "U+FFFD (tx34's JVM core)") {
     import org.apache.spark.unsafe.types.UTF8String
-    val n = graft.llmdata.BpeMerges.BandN
+    val n = graft.functions.BpeTable.Char.bandN
     val word = Gen.chooseNum(1, 12)
       .flatMap(k => Gen.listOfN(k, Gen.alphaLowerChar)).map(_.mkString)
     val textGen = Gen.listOf(word).map(_.mkString(" "))
     checkProp(Prop.forAll(textGen) { text =>
       // vocab = lexicographic ranks of the text's own token set — the
       // same construction as TextAnalysis.bpeVocabCore
-      val inverse = bpeChar(text, n).distinct.sorted.toArray
-      val jmap = new java.util.HashMap[UTF8String, Integer]()
-      inverse.zipWithIndex.foreach { case (t, i) =>
-        jmap.put(UTF8String.fromString(t), Integer.valueOf(i))
-      }
+      val vocab = graft.functions.BpeVocab(
+        bpeChar(text, n).distinct.sorted.zipWithIndex.toMap)
       val ids = graft.functions.BpeUtil.encodeTextIds(
-        UTF8String.fromString(text), n, jmap)
-      graft.functions.BpeUtil.decodeIds(ids, inverse).toString ==
+        UTF8String.fromString(text), n, vocab)
+      graft.functions.BpeUtil.decodeIds(ids, vocab).toString ==
         text.replace(" ", "")
     })
     // a frozen vocab meeting NEW text: UnkId and any out-of-range id
     // decode to the replacement character, never throw
     val stray = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(Array(0, graft.functions.BpeUtil.UnkId, 99))
-    assert(graft.functions.BpeUtil.decodeIds(stray, Array("x")).toString ==
+    assert(graft.functions.BpeUtil.decodeIds(stray,
+      graft.functions.BpeVocab(Map("x" -> 0))).toString ==
       "x��")
   }
 
@@ -373,14 +371,14 @@ class PropertySpec extends SparkSpec {
     val textGen = Gen.listOf(chunk).map(_.flatten.mkString)
     checkProp(Prop.forAll(textGen) { text =>
       val toks = graft.functions.BpeBytesUtil.encodeText(
-        UTF8String.fromString(text), graft.llmdata.BpeMergesBytes.BandN)
+        UTF8String.fromString(text), graft.functions.BpeTable.Bytes.bandN)
       graft.functions.BpeBytesUtil.decodeText(toks).toString == text
     })
     // the documented blind spot, pinned so any behavior change is loud:
     // a literal U+0120 is an opaque pretoken indistinguishable from a
     // mapped space at decode time, so it decodes as a space
     val gd = graft.functions.BpeBytesUtil.encodeText(
-      UTF8String.fromString("aĠb"), graft.llmdata.BpeMergesBytes.BandN)
+      UTF8String.fromString("aĠb"), graft.functions.BpeTable.Bytes.bandN)
     assert(graft.functions.BpeBytesUtil.decodeText(gd).toString == "a b")
   }
 

@@ -23,26 +23,30 @@ punctuation merges.
 
 TWO VIEWS OF ONE TABLE (prefix property): merges are learned in global
 frequency order, so the first N entries of the 2000-merge table are
-themselves the exact N-merge table for the same corpus. The generated
-artifact therefore carries:
-  - Full  : all 2000 merges - realistic table size; used by the
-            cross-domain audit (tx29) over entity-name domains where a
-            big table is non-degenerate;
-  - Band  : the prefix whose fertility over `documents` sits mid-band
-            (smallest N with tokens/word <= 1.35; published tokenizers
-            land ~1.1-1.6) - the DEFAULT table for the documents-family
-            operators (tx24/tx26/tx27/mm10/cur13). Beyond ~N=160 the
-            31-word prose vocabulary merges completely (fertility 1.0,
-            whitespace-proxy drift 0 everywhere), which would make the
-            packing-drift audit vacuous - the fixture bounds the
-            DEFAULT table, not the machinery.
+themselves the exact N-merge table for the same corpus. The written
+table therefore carries:
+  - merges : all 2000 merges - realistic table size; used by the
+             cross-domain audit (tx29) over entity-name domains where a
+             big table is non-degenerate;
+  - band   : the size of the prefix whose fertility over `documents`
+             sits mid-band (smallest N with tokens/word <= 1.35;
+             published tokenizers land ~1.1-1.6) - the DEFAULT table for
+             the documents-family operators (tx24/tx26/tx27/mm10/cur13).
+             Beyond ~N=160 the 31-word prose vocabulary merges completely
+             (fertility 1.0, whitespace-proxy drift 0 everywhere), which
+             would make the packing-drift audit vacuous - the fixture
+             bounds the DEFAULT table, not the machinery.
 
-The trained table is an ARTIFACT, baked into generated Scala source
-(`BpeMerges.scala`): the apply operator (tx24) broadcasts it implicitly
-by constant, and the DuckDB twins re-derive it as a VALUES literal from
-the same constant. The in-engine Spark trainer (tx28 machinery) must
-reproduce `Full` bit-for-bit at N=2000 on the same corpus - the
-three-way parity gate asserted by LlmDataSpec.
+The trained table is DATA, not source: this script writes it as JSON,
+`src/main/resources/graft/bpe/merges_char.json` (or `merges_bytes.json`
+in byte mode), shaped `{"band": N, "merges": [[left, right], ...]}` with
+one pair per line in UTF-8. The engine reads it through one loader,
+`graft.functions.BpeTable`: the apply operators (tx24/tx30) hold it as a
+per-JVM constant, and the DuckDB twins re-derive it as a VALUES literal
+from the same loaded table. The in-engine Spark trainer (tx28 machinery)
+must reproduce the full table bit-for-bit at N=2000 on the same corpus -
+the three-way parity gate asserted by LlmDataSpec. Rerunning this script
+on the same fixtures rewrites both files byte-identically.
 
 BYTE MODE (`bytes` as the third arg): the GPT-2-style variant - words
 come from the GPT-2-shaped pretokenizer (leading space attaches to the
@@ -61,20 +65,20 @@ space to the next word.
 Run:  python3 tools/train_bpe.py [sfdir] [n_merges] [char|bytes]
 Defaults: /root/testdata/sf0.1, 2000 merges, char.
 """
-import sys
 import collections
+import json
+import sys
 import duckdb
 
 SFDIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 N_MERGES = int(sys.argv[2]) if len(sys.argv) > 2 else 2000
 MODE = sys.argv[3] if len(sys.argv) > 3 else "char"
 assert MODE in ("char", "bytes"), MODE
-OUT = ("src/main/scala/graft/llmdata/BpeMerges.scala" if MODE == "char"
-       else "src/main/scala/graft/llmdata/BpeMergesBytes.scala")
+OUT = f"src/main/resources/graft/bpe/merges_{MODE}.json"
 BAND_TARGET = 1.35  # smallest prefix with documents fertility <= this
 
 # RE2-safe GPT-2-shaped pretokenizer (keep in sync with
-# graft.functions.BpeBytesUtil.Pretokenizer and the tx30 twin SQL)
+# graft.functions.BpeBytesUtil.PretokenRegex and the tx30 twin SQL)
 PRETOKEN_RE = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+| +"
 GDOT = "Ġ"  # GPT-2's byte-unicode image of the space byte
 
@@ -234,56 +238,11 @@ band_fert = doc_fertility(band_n)
 print(f"band prefix: N={band_n}, documents fertility {band_fert:.3f}")
 
 
-def esc(s: str) -> str:
-    return s.replace("\\", "\\\\").replace('"', '\\"')
-
-
-pairs_src = ",\n    ".join(f'("{esc(a)}", "{esc(b)}")' for a, b in merges)
-obj = "BpeMerges" if MODE == "char" else "BpeMergesBytes"
-alias_src = ("""
-
-  /** Back-compat alias: the default table. */
-  val Merges: IndexedSeq[(String, String)] = Band"""
-             if MODE == "char" else "")
-level = ("Character-level" if MODE == "char"
-         else "BYTE-level (GPT-2-shaped pretokens, space -> U+0120)")
-src = f'''package graft.llmdata
-
-/** GENERATED by tools/train_bpe.py - do not edit by hand.
-  *
-  * {level} BPE merge table trained on the fixtures' full text
-  * surface at {SFDIR} (every VARCHAR column, word-frequency weighted;
-  * see the trainer's corpus rationale). {len(merges)} merges; rank =
-  * position. Regenerate with:
-  *   python3 tools/train_bpe.py {SFDIR} {N_MERGES} {MODE}
-  *
-  * PREFIX PROPERTY: merges are learned in global frequency order, so
-  * `Full.take(n)` is itself the exact n-merge table for this corpus.
-  * [[Band]] ({band_n} merges) is the prefix whose fertility over
-  * `documents` measures {band_fert:.3f} tokens/word (the published
-  * ~1.1-1.6 band; smallest prefix <= {BAND_TARGET}); it is the DEFAULT
-  * table for the documents-family operators. Beyond ~N=160 the
-  * fixture's closed 31-word prose vocabulary merges completely
-  * (fertility exactly 1.0 and packing drift identically 0 - the
-  * measured saturation that bounds the default table; documents-only
-  * training exhausts outright at 89 merges). [[Full]] is used where a
-  * realistic-size table is non-degenerate: the cross-domain audit's
-  * entity-name domains.
-  */
-object {obj} {{
-  /** (left, right) merge pairs in training order; rank = index. */
-  val Full: IndexedSeq[(String, String)] = IndexedSeq(
-    {pairs_src})
-
-  /** Mid-band default-table size (see object scaladoc). */
-  val BandN: Int = {band_n}
-
-  /** The default (documents-family) table: the mid-band prefix. */
-  val Band: IndexedSeq[(String, String)] = Full.take(BandN){alias_src}
-}}
-'''
-with open(OUT, "w") as f:
-    f.write(src)
+# one pair per line, UTF-8 (G-dot stays a literal character), so a
+# regenerated table diffs line by line
+lines = ",\n".join(json.dumps([a, b], ensure_ascii=False) for a, b in merges)
+with open(OUT, "w", encoding="utf-8") as f:
+    f.write(f'{{"band": {band_n}, "merges": [\n{lines}\n]}}\n')
 print(f"wrote {OUT}: {len(merges)} merges (band {band_n})")
 for i, (a, b) in enumerate(merges[:5]):
     print(f"  {i}: {a!r} + {b!r}")
