@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -480,7 +480,7 @@ object Curation {
     *     this — zero Window nodes, no sort-merge join).
     *
     * The scored projection feeds TWO jobs (the histogram collect and the
-    * returned assignment plan), so it is localCheckpoint'ed: tx15's
+    * returned assignment plan), so it is pinned ([[GraftCheckpoint]]): tx15's
     * classifier fold runs ONCE per call instead of twice (the uncached-
     * derived-table trap that made dd21 the slowest query in r8). The
     * pinned frame is 3 narrow columns per doc — per-doc metadata, not
@@ -500,7 +500,7 @@ object Curation {
   def curriculumScheduleSketch(spark: SparkSession, dir: String): DataFrame = {
     val scored = TextAnalysis.classifierScore(spark, dir)
       .select(col("doc_id"), col("n_tokens"), col("clf_score"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val bin = floor(col("clf_score") * CurricBinScale).cast(LongType)
     val hist = scored.select(bin.as("bin"))
       .filter(col("bin").isNotNull)
@@ -1106,13 +1106,13 @@ object Curation {
     // three model count tables are marginals of the CUBE, not re-scans —
     // without this the plan re-exploded the corpus once per model table
     // (6 Generates at sf0.1; 2 corpus passes total now: fit + score)
-    // localCheckpoint pins the cube (|trigram types| rows, ~27k at sf0.1)
+    // the pin holds the cube (|trigram types| rows, ~27k at sf0.1)
     // so its six consumers (tot×2, uni, bi, tri, and m1's cross) read one
     // materialization instead of re-aggregating the corpus — cur5b's
     // single-scoring-scan discipline applied to the model fit
     val ctxCube = toks.filter(col("is_train"))
       .groupBy(col("w2"), col("w1"), col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val totF = ctxCube.agg(sum(col("c")).as("tot"))
     val uni = ctxCube.groupBy(col("w")).agg(sum(col("c")).as("c1"))
     val bi = ctxCube.filter(col("w1").isNotNull)

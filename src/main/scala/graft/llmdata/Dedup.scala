@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -457,14 +457,14 @@ object Dedup {
     * sorted posting lists, pairs off each list (i<j of a sorted array ⇒
     * doc_a < doc_b) — no band self-join, every bucket bounded by the cap. */
   def simhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint: the signature table feeds THREE consumers (block
+    // pinned (GraftCheckpoint.pin): the signature table feeds THREE consumers (block
     // explode + both verify sides) and each re-ran the full per-token
     // simhash scan without the pin (r19 plan audit; per-invocation
     // materialization, not a cross-run cache — mm5 holds its signatures
     // in a session cache because two queries share them, dd5's are its
     // own). The pinned frame is one 64-char string per doc.
     val sh = simhashOf(t(spark, dir, "documents"))
-      .select(col("doc_id"), col("simhash")).localCheckpoint()
+      .select(col("doc_id"), col("simhash")).transform(GraftCheckpoint.pin)
     val blocks = sh.select(col("doc_id"),
       posexplode_outer(array((0 until SimHashBlocks).map(b =>
         substring(col("simhash"), b * BlockBits + 1, BlockBits)): _*))
@@ -1105,8 +1105,8 @@ object Dedup {
     * canonical copy, drop the rest" is `doc_id != cluster_id`).
     *
     * Min-label propagation (the Pregel pattern): each iteration joins
-    * labels across edges and takes the per-node min; `localCheckpoint`
-    * truncates the growing lineage (its per-iteration blocks — a few KB
+    * labels across edges and takes the per-node min; each round is pinned
+    * ([[GraftCheckpoint]]), which truncates the growing lineage (its per-iteration blocks — a few KB
     * of labels each — are reclaimed by Spark's ContextCleaner once the
     * intermediate frames become unreachable, the standard cost of
     * iterative Spark). The driver loop is the documented exception to
@@ -1125,13 +1125,13 @@ object Dedup {
 
   /** dd3's text near-dup components, propagated ONCE per corpus snapshot
     * and session-cached (r16, the cur7 adjudication): the label
-    * propagation is a multi-JOB driver loop (one localCheckpoint job per
+    * propagation is a multi-JOB iteration loop (one checkpoint job per
     * diameter hop), and its per-consumer cost — not any consumer's own
     * plan — was what moved cur7 across battery layouts (dd11 / dd17 /
     * dd22 / cur7 each re-ran the identical loop over the same cached
     * pairs; isolated-warm cur7 read 1.49 s of which ~1 s was this loop).
     * The labels frame is ≪ corpus (only docs in some pair) and already
-    * localCheckpoint-materialized — the canonical SessionCache shape. */
+    * pinned by [[GraftCheckpoint]] — the canonical SessionCache shape. */
   private val textLabelsCache = SessionCache.persisted()
 
   /** dd14's embedding-component labels, cached per (session, dir) exactly
@@ -1147,7 +1147,7 @@ object Dedup {
     * node id of the component. Shared by dd11 (text near-dup clusters)
     * and dd14 (embedding semantic-dedup clusters); see [[dedupClusters]]
     * for why the driver loop is bounded by component DIAMETER, not data
-    * size. The result is localCheckpoint-materialized, so it stays valid
+    * size. The result is pinned ([[GraftCheckpoint]]), so it stays valid
     * after the edge cache is released. Text-pair consumers go through
     * [[textMinLabels]]'s cache, not this directly. */
   private def minLabelComponents(pairs: DataFrame): DataFrame = {
@@ -1155,7 +1155,7 @@ object Dedup {
       pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))).persist()
     try {
       var labels = edges.select(col("doc_a").as("node")).distinct()
-        .withColumn("label", col("node")).localCheckpoint()
+        .withColumn("label", col("node")).transform(GraftCheckpoint.pin)
       var changed = 1L
       var iters = 0
       while (changed > 0 && iters < 50) {
@@ -1170,7 +1170,7 @@ object Dedup {
           .unionByName(neigh)
           .groupBy(col("node"))
           .agg(min(col("label")).as("label"), min(col("old")).as("old"))
-          .localCheckpoint()
+          .transform(GraftCheckpoint.pin)
         changed = updated.filter(col("label") =!= col("old")).count()
         labels = updated.select(col("node"), col("label"))
         iters += 1
@@ -1489,21 +1489,21 @@ object Dedup {
     val pairs = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
     val edges = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").distinct().localCheckpoint()
+      .toDF("src", "dst").distinct().transform(GraftCheckpoint.pin)
     // n0 — the STATIC (doc_id, deg, n) node frame — is checkpointed once;
     // each iteration's new rank joins contribs back to n0, NOT to the
     // previous rank frame, so r is consumed exactly ONCE per iteration
     // (deg/n ride in via n0). That makes the unrolled lineage LINEAR —
     // the r8 4.07 s blow-up came from r feeding both the contrib join and
     // the rebuild (2^iters re-execution), which the old code fixed with a
-    // localCheckpoint JOB per iteration; consuming r once removes the
+    // checkpoint JOB per iteration; consuming r once removes the
     // need for either (r19 verdict item 9: 3 fixed iterations now run as
     // one job chain instead of 3 eager checkpoint jobs + the final
     // action). Integer trajectory unchanged — same joins, same div order.
     val nodes = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("doc_id"), col("deg"))
     val nFrame = nodes.agg(count(lit(1)).as("n"))
-    val n0 = nodes.crossJoin(broadcast(nFrame)).localCheckpoint()
+    val n0 = nodes.crossJoin(broadcast(nFrame)).transform(GraftCheckpoint.pin)
     var r = n0.select(col("doc_id"), col("deg"), col("n"),
       expr("1000000 div n").as("r"))
     for (_ <- 1 to iters) {

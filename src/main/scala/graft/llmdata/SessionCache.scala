@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped materialization cache — the "materialize once per corpus
@@ -52,15 +52,37 @@ private[graft] object SessionCache {
     registry.forEach(_.clear(spark))
 
   /** Release a cached frame's storage: unpersist the frame, then the RDD
-    * behind every `LogicalRDD` leaf of its plan. A `localCheckpoint()`ed
-    * frame is such a leaf, and `Dataset.unpersist` alone frees neither it
-    * nor a union or persisted frame built over it — those blocks stay in
-    * `getPersistentRDDs` until the session ends. */
+    * behind every `LogicalRDD` leaf of its plan. A pinned frame
+    * (`GraftCheckpoint.pin`) is such a leaf, and `Dataset.unpersist`
+    * alone frees neither it nor a union or persisted frame built over it —
+    * those blocks stay in `getPersistentRDDs` until the session ends. */
   def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     df.queryExecution.logical
       .collectWithSubqueries { case r: LogicalRDD => r.rdd }
       .foreach(_.unpersist(blocking = false))
+  }
+
+  /** The frames one unit of work pinned or holds; see [[withPins]]. */
+  final class Pins private[SessionCache] () {
+    private[SessionCache] val held =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `GraftCheckpoint.pin`, released when the scope ends. */
+    def pin(df: DataFrame): DataFrame = hold(GraftCheckpoint.pin(df))
+
+    /** Release `df` when the scope ends: for a frame built over pieces
+      * pinned elsewhere (a serve walk's visited union). */
+    def hold(df: DataFrame): DataFrame = { held += df; df }
+  }
+
+  /** Run `body`, then [[release]] every frame it pinned or held through
+    * its [[Pins]], also when it throws: what a micro-batch pins is freed
+    * within that batch instead of waiting for a garbage collection to
+    * let the ContextCleaner reclaim it. */
+  def withPins[T](body: Pins => T): T = {
+    val pins = new Pins
+    try body(pins) finally pins.held.foreach(release)
   }
 
   /** The common case: cached DataFrames, storage released on clear. */

@@ -1,7 +1,7 @@
 package graft.llmdata
 
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1498,11 +1498,9 @@ object Similarity {
         .select(col("src_id"), posexplode(col("top")).as(Seq("pos", "e")))
         .select(col("src_id"), (col("pos") + 1).cast(LongType).as("rank"),
           col("e.id").as("neighbor_id"), col("e.score").as("cos_sim"))
-        // localCheckpoint, not persist: a persisted frame keeps the full
-        // build lineage, and Catalyst re-analyzes it on EVERY downstream
-        // action (~3 s of SF-independent planning for the descent/prune
-        // chain); truncating here keeps every consumer's plan flat
-        .localCheckpoint()
+        // pinned: persisted instead, the descent/prune chain paid ~3 s of
+        // SF-independent planning on every downstream action
+        .transform(GraftCheckpoint.pin)
     }
 
   /** One sampled NN-descent round over an arbitrary seed edge set
@@ -1596,17 +1594,20 @@ object Similarity {
     knnDescentCache.get(spark, dir)(
       descentRound(spark, dir,
         corpusSeedGraph(spark, dir).select(col("src_id"), col("neighbor_id")))
-        .orderBy(col("src_id"), col("rank")).localCheckpoint())
+        .orderBy(col("src_id"), col("rank")).transform(GraftCheckpoint.pin))
 
   /** Iterated NN-descent to convergence (Dong et al. 2011's outer loop):
     * repeat [[descentRound]] until the count of changed edges falls to or
     * below delta·|V|·K — the paper's δ termination. Each round is
-    * localCheckpoint-pinned (the dd11 iteration discipline: flat lineage,
-    * no re-execution of prior rounds). Not oracle-gated — the round count
-    * is data-dependent — but spec-pinned (LlmDataSpec): per-node floors
-    * monotone across rounds, a fixed point is reached, and one more round
-    * past termination changes nothing at delta = 0. `discovered` in the
-    * result is relative to the ORIGINAL ss5 corpus seed. */
+    * pinned by [[GraftCheckpoint]] (the dd11 iteration discipline: flat
+    * lineage, no re-execution of prior rounds), and so is the result: it
+    * is an index artifact read by several consumers, and pinned it plans
+    * at its measured size rather than the seed join's product estimate.
+    * Not oracle-gated — the round count is data-dependent — but
+    * spec-pinned (LlmDataSpec): per-node floors monotone across rounds, a
+    * fixed point is reached, and one more round past termination changes
+    * nothing at delta = 0. `discovered` in the result is relative to the
+    * ORIGINAL ss5 corpus seed. */
   def knnGraphConverged(spark: SparkSession, dir: String,
                         maxRounds: Int = 24,
                         delta: Double = 0.0): DataFrame = {
@@ -1616,14 +1617,14 @@ object Similarity {
     val threshold = delta * nV.toDouble * buildDegree(spark, dir)
     val seed0 = corpusSeedGraph(spark, dir)
       .select(col("src_id"), col("neighbor_id"))
-    var g = seed0.localCheckpoint()
+    var g = seed0.transform(GraftCheckpoint.pin)
     var full: DataFrame = null
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
       val next = descentRound(spark, dir, g)
         .select(col("src_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
-        .localCheckpoint()
+        .transform(GraftCheckpoint.pin)
       val edges = next.select(col("src_id"), col("neighbor_id"))
       val updates = edges.except(g).count()
       done = updates <= threshold
@@ -1636,6 +1637,7 @@ object Similarity {
       .select(col("src_id"), col("rank"), col("neighbor_id"), col("cos_sim"),
         coalesce(!col("seen"), lit(true)).as("discovered"))
       .orderBy(col("src_id"), col("rank"))
+      .transform(GraftCheckpoint.pin)
   }
 
   /** One descent round's full SQL over an arbitrary seed: `extraCtes`
@@ -1790,11 +1792,11 @@ object Similarity {
   def graphDiversify(spark: SparkSession, dir: String): DataFrame =
     divGraphCache.get(spark, dir) {
       graphDiversifyUncached(spark, dir)
-        // localCheckpoint for the same planning-cost reason as the seed:
-        // this frame is the INDEX ARTIFACT — its consumers (ss17/ss19
+        // pinned for the same planning-cost reason as the seed: this
+        // frame is the INDEX ARTIFACT — its consumers (ss17/ss19
         // serve, the battery count, the persisted-index writer) must not
         // re-analyze the whole two-round build per action
-        .localCheckpoint()
+        .transform(GraftCheckpoint.pin)
     }
 
   /** The un-truncated build plan — what the plan-quality pin inspects
@@ -2045,14 +2047,14 @@ object Similarity {
     serveHopsOf(corpusCount(spark, dir))
 
   /** The cached undirected serve adjacency over the ss18 diversified
-    * edges — shared by ss17 and the ss19 sweep. localCheckpoint, not
-    * persist: the adjacency rides into every hop's task closure, and
-    * truncating the build lineage keeps the per-hop plans (and task
-    * binaries) flat. */
+    * edges — shared by ss17 and the ss19 sweep. Pinned
+    * ([[GraftCheckpoint]]): the adjacency rides into every hop's task
+    * closure, and a flat leaf keeps the per-hop plans (and task
+    * binaries) small. */
   private def serveAdjacency(spark: SparkSession, dir: String): DataFrame =
     serveGraphCache.get(spark, dir)(
       undirected(graphDiversify(spark, dir)
-        .select(col("src_id"), col("neighbor_id"))).localCheckpoint())
+        .select(col("src_id"), col("neighbor_id"))).transform(GraftCheckpoint.pin))
 
   private[graft] def undirected(edges: DataFrame): DataFrame =
     edges.union(edges.select(col("neighbor_id").as("src_id"),
@@ -2067,7 +2069,7 @@ object Similarity {
                                     beam: Int = ServeBeam,
                                     hops: Int = -1,
                                     entries: Int = ServeEntries): DataFrame =
-    serveCore(spark, dir, undirected(edges).localCheckpoint(), beam,
+    serveCore(spark, dir, undirected(edges).transform(GraftCheckpoint.pin), beam,
       if (hops > 0) hops else serveHops(spark, dir), entries)
 
   /** Persist the DIVERSIFIED serving graph as parquet — the graph-index
@@ -2098,7 +2100,7 @@ object Similarity {
       else stored
     serveCore(spark, dir,
       undirected(current.select(col("src_id"), col("neighbor_id")))
-        .localCheckpoint(),
+        .transform(GraftCheckpoint.pin),
       ServeBeam, serveHops(spark, dir), ServeEntries)
   }
 
@@ -2132,7 +2134,7 @@ object Similarity {
       .withColumn("rn", row_number().over(entW))
       .filter(col("rn") <= entries).drop("rn")
     // each hop's scored set is consumed by two downstream branches
-    // (visited-union and next-frontier); localCheckpoint-pin per hop (the
+    // (visited-union and next-frontier); pin per hop (the
     // cur12/dd11 shared-subtree discipline) or the unrolled lineage
     // re-executes every prior hop 2^h times
     serveWalk(entry, undP, beam, hops, cands => cands
@@ -2159,7 +2161,7 @@ object Similarity {
   private def serveWalk(entry: DataFrame, undP: DataFrame, beam: Int,
                         hops: Int,
                         score: DataFrame => DataFrame): Seq[DataFrame] = {
-    val entryP = entry.localCheckpoint()
+    val entryP = entry.transform(GraftCheckpoint.pin)
     var visited = entryP
     var frontier = entryP.select(col("query_id"), col("node_id"))
     val pieces = Seq.newBuilder[DataFrame]
@@ -2176,7 +2178,7 @@ object Similarity {
         .distinct()
         .join(visited.select(col("query_id"), col("node_id")),
           Seq("query_id", "node_id"), "left_anti")
-      val scored = score(cands).localCheckpoint()
+      val scored = score(cands).transform(GraftCheckpoint.pin)
       // visited is a union of already-checkpointed pieces — its lineage is
       // flat, no extra pin needed
       visited = visited.union(scored)
@@ -2911,7 +2913,7 @@ object Similarity {
       .agg(graft.functions.TopKByScore.topK(
         col("cos_sim"), col("neighbor_id"), AnnTopK).as("top"),
         count(lit(1)).as("ncand"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val top3 = g1
       .select(col("nprobe"), col("query_id"), explode(col("top")).as("e"))
       .select(col("nprobe"), col("query_id"), col("e.id").as("neighbor_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -186,7 +186,7 @@ object CdcQueries {
     val snapshot = t(spark, dir, "customer").select(
       concat(lit("001"), ks).as("Id"),
       col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    // localCheckpoint: CdcEnrich consumes the decoded change rows TWICE
+    // pinned (GraftCheckpoint.pin): CdcEnrich consumes the decoded change rows TWICE
     // (enrichment branch ∪ tombstone branch) and Catalyst does not share
     // common subtrees, so the whole synth→base64→JSON-decode→explode
     // chain ran once per branch (r19 plan audit: 3 customer scans → 1).
@@ -194,7 +194,7 @@ object CdcQueries {
     // checkpoint. There the foreachBatch writer persists one decoded stage
     // per micro-batch and reads the source once; only a direct
     // CdcPipeline.transform call still reads it once per branch (twice).
-    CdcEnrich(changes(spark, dir).localCheckpoint(), snapshot)
+    CdcEnrich(changes(spark, dir).transform(GraftCheckpoint.pin), snapshot)
       .select(
         col("attributes.type").as("attr_type"),
         col("Id").as("record_id"),
@@ -238,9 +238,9 @@ object CdcQueries {
     val snapshot = t(spark, dir, "customer").select(
       concat(lit("001"), ks).as("Id"),
       col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    // localCheckpoint: two enrich/tombstone branches, one decode (see
+    // pinned: two enrich/tombstone branches, one decode (see
     // routeEnrich)
-    CdcEnrich(CdcDecode.explodeIds(good).localCheckpoint(), snapshot)
+    CdcEnrich(CdcDecode.explodeIds(good).transform(GraftCheckpoint.pin), snapshot)
       .select(
         col("attributes.type").as("attr_type"),
         col("Id").as("record_id"),
@@ -344,10 +344,10 @@ object CdcQueries {
     val snapshot = t(spark, dir, "customer").select(
       concat(lit("001"), ks).as("Id"),
       col("c_name"), col("c_nationkey"), col("c_mktsegment"))
-    // localCheckpoint: two enrich/tombstone branches, one decode (see
+    // pinned: two enrich/tombstone branches, one decode (see
     // routeEnrich)
     graft.streaming.CdcPipeline.toJsonLines(
-      CdcEnrich(changes(spark, dir).localCheckpoint(), snapshot))
+      CdcEnrich(changes(spark, dir).transform(GraftCheckpoint.pin), snapshot))
       .select(col("entityName").as("entity_name"), col("value").as("json_line"))
       .orderBy(col("json_line"))
   }
@@ -379,13 +379,13 @@ object CdcQueries {
       .select(base64(to_json(suppEnv).cast(BinaryType)).as("data"))
     val custRaw = synthRaw(t(spark, dir, "customer"), lit("fp_v1"), Seq(custName.as("Name")))
 
-    // localCheckpoint: multiEntity consumes the decoded rows THREE times
+    // pinned: multiEntity consumes the decoded rows THREE times
     // (one enrichment branch per entity + the tombstone branch); without
     // the pin both entities' synth→decode chains ran per branch (r19
     // plan audit: 8 scans → 2 + the snapshots)
     val decoded = CdcDecode.explodeIds(
       CdcDecode.decodeBase64(custRaw.unionByName(suppRaw), col("data")).drop("data"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val custSnap = t(spark, dir, "customer").select(
       concat(lit("001"), ks).as("Id"), col("c_name"), col("c_mktsegment"))
     val suppSnap = t(spark, dir, "supplier").select(
@@ -411,12 +411,12 @@ object CdcQueries {
     val tier = when(k % 2 === 1, concat(lit("T"), (k % 3).cast(StringType)))
     val raw = synthRaw(t(spark, dir, "customer"), fp,
       Seq(custName.as("Name"), tier.as("Tier")))
-    // localCheckpoint: typedBodyEvolving re-types the batch once per
+    // pinned: typedBodyEvolving re-types the batch once per
     // coexisting fingerprint and unions the slices — the decode chain ran
     // once per fingerprint branch without the pin (r19: 3 scans → 1)
     val decoded = CdcDecode.explodeIds(
       CdcDecode.decodeBase64(raw, col("data")).drop("data"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val registry = new EntitySchemaRegistry
     val v1 = StructType(Seq(StructField("Name", StringType)))
     val v2 = StructType(Seq(
@@ -471,7 +471,7 @@ object CdcQueries {
     val suppRaw = t(spark, dir, "supplier")
       .select(base64(to_json(suppEnv).cast(BinaryType)).as("data"))
 
-    // NO localCheckpoint here (r19 verdict item 4): cdc13 got the same
+    // NO pin here (r19 verdict item 4): cdc13 got the same
     // decode-once pin as its siblings in r19 but was the one query it
     // made SLOWER in the builder's own same-window battery (0.64 → 0.83 s
     // at sf0.1) — its two typedBody branches are CHEAP consumers (one

@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -699,14 +699,14 @@ object EventsAnalytics {
     import graft.functions.CountMinSketch
     val d = CountMinSketch.DefaultDepth
     val w = CountMinSketch.DefaultWidth
-    // localCheckpoint ×2 (r19 plan audit: 3 event passes → 1): `ev` feeds
+    // pinned ×2 (r19 plan audit: 3 event passes → 1): `ev` feeds
     // the daily sketch build AND the exact key counts; `daily` feeds the
     // monoid merge AND the day census. Catalyst shares neither subtree;
     // the pinned frames are the narrow event projection and the
     // |days|×d×w-cell artifact table.
     val ev = t(spark, dir, "events").filter(col("event_type").isNotNull)
       .select(col("event_type"), date_trunc("day", col("ts")).cast(DateType).as("day"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     def bucketOf(i: Column, key: Column): Column =
       conv(substring(md5(concat(i.cast(StringType), lit(":"), key)), 1, 15), 16, 10)
         .cast(LongType) % w
@@ -716,7 +716,7 @@ object EventsAnalytics {
         explode(sequence(lit(0), lit(d - 1))).as("i"))
       .withColumn("b", bucketOf(col("i"), col("event_type")))
       .groupBy(col("day"), col("i"), col("b")).agg(count(lit(1)).as("v"))
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     // range query: cell-wise monoid merge, no event re-scan
     val merged = daily.groupBy(col("i"), col("b")).agg(sum(col("v")).as("v"))
     val nDays = daily.agg(countDistinct(col("day")).as("n_days"))
@@ -1025,14 +1025,14 @@ object EventsAnalytics {
     val K = ThetaK
     val elem = concat(col("user_id").cast(StringType), lit("#"),
       col("ts").cast(DateType).cast(StringType))
-    // localCheckpoint: the distinct activity set feeds the sketch build
+    // pinned: the distinct activity set feeds the sketch build
     // AND both sides of the exact-intersection audit self-join — without
     // the pin the events scan + distinct ran three times (r19 plan
     // audit: 6 scans → 1). The pinned frame is the distinct (type,
     // user-day) set, ≪ events.
     val evu = t(spark, dir, "events")
       .select(col("event_type"), elem.as("e")).distinct()
-      .localCheckpoint()
+      .transform(GraftCheckpoint.pin)
     val ev = evu.select(col("event_type"), md5(col("e")).substr(1, 12).as("h"))
       .distinct()
     // exact count and KMV sketch in ONE aggregate over the hashed set —

@@ -815,7 +815,7 @@ object Relational {
       .select(col("s_suppkey"))
     // r19 optimization audit: measured, then left alone — perPart's two
     // consumers share one IDENTICAL per-part exchange, which AQE stage
-    // reuse executes once at runtime; a localCheckpoint pin added an
+    // reuse executes once at runtime; a checkpoint pin added an
     // eager materialization job and measured WORSE (0.64 s → 0.87 s
     // isolated, sf0.1).
     val perPart = t(spark, dir, "lineitem")
@@ -854,7 +854,7 @@ object Relational {
   def q37TopSupplier(spark: SparkSession, dir: String): DataFrame = {
     // r19 optimization audit: measured, then left alone — the revenue
     // view's two consumers share one identical per-supplier exchange
-    // (AQE stage reuse); a localCheckpoint pin measured worse (0.24 s →
+    // (AQE stage reuse); a checkpoint pin measured worse (0.24 s →
     // 0.32 s isolated, sf0.1) for the same reason as q36.
     val perSupp = t(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1996-04-01"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.llmdata.{Dedup, Similarity}
+import graft.llmdata.{Dedup, SessionCache, Similarity}
 
 /** INCREMENTAL ANN-INDEX MAINTENANCE (r12 verdict task 3 — the
   * dd12-for-vectors), r14: VERSIONED DELTA-LOG ARTIFACTS. Admitted
@@ -149,99 +149,102 @@ object AnnIngest {
     * partition with the identical delta; a crash between the three
     * artifact writes heals on replay. `failpoint(i)` fires before the
     * i-th artifact write (0 = graph, 1 = cells, 2 = vectors) — the
-    * crash-adjudication spec's hook, a no-op in production. */
+    * crash-adjudication spec's hook, a no-op in production. Every frame
+    * the upsert pins, the serve walk's per-hop pieces included, is
+    * released before it returns or throws. */
   def upsertVectors(spark: SparkSession, indexDir: String,
                     batch: DataFrame, batchId: Long,
-                    failpoint: Int => Unit = _ => ()): Unit = {
-    val newV = batch
-      .select(col("vec_id"), Dedup.vecD(col("embedding")).as("v"))
-      .localCheckpoint()
-    val newIds = newV.select(col("vec_id"))
-    def prior(name: String, key: String): DataFrame =
-      latestView(spark.read.parquet(s"$indexDir/$name"), key, batchId - 1)
+                    failpoint: Int => Unit = _ => ()): Unit =
+    SessionCache.withPins { pins =>
+      val newV = batch
+        .select(col("vec_id"), Dedup.vecD(col("embedding")).as("v"))
+        .transform(pins.pin)
+      val newIds = newV.select(col("vec_id"))
+      def prior(name: String, key: String): DataFrame =
+        latestView(spark.read.parquet(s"$indexDir/$name"), key, batchId - 1)
 
-    // prior state EXCLUDING the batch ids: for an UPDATE batch the old
-    // version of each vector leaves the searchable store (else the
-    // re-insert would find its own stale self as a neighbor)
-    val vectors = prior("vectors", "vec_id")
-      .join(newIds, Seq("vec_id"), "left_anti").localCheckpoint()
-    val graph = prior("graph", "src_id").localCheckpoint()
-    val ex = spark.read.parquet(s"$indexDir/exemplars")
-    val nPrior = vectors.count()
-    // the stored graph's own out-degree is the trim bound (max out_rank —
-    // one scalar, deterministic from the artifact); a degenerate empty
-    // prior graph (tiny index fully covered by the batch) falls back to
-    // the build formula instead of NPE-ing the stream
-    val rRow = graph.agg(max(col("out_rank"))).collect()(0)
-    val r =
-      if (rRow.isNullAt(0))
-        Similarity.pruneDegreeOf(Similarity.degreeOf(math.max(nPrior, 2L)))
-      else rRow.getLong(0).toInt
+      // prior state EXCLUDING the batch ids: for an UPDATE batch the old
+      // version of each vector leaves the searchable store (else the
+      // re-insert would find its own stale self as a neighbor)
+      val vectors = prior("vectors", "vec_id")
+        .join(newIds, Seq("vec_id"), "left_anti").transform(pins.pin)
+      val graph = prior("graph", "src_id").transform(pins.pin)
+      val ex = spark.read.parquet(s"$indexDir/exemplars")
+      val nPrior = vectors.count()
+      // the stored graph's own out-degree is the trim bound (max out_rank —
+      // one scalar, deterministic from the artifact); a degenerate empty
+      // prior graph (tiny index fully covered by the batch) falls back to
+      // the build formula instead of NPE-ing the stream
+      val rRow = graph.agg(max(col("out_rank"))).collect()(0)
+      val r =
+        if (rRow.isNullAt(0))
+          Similarity.pruneDegreeOf(Similarity.degreeOf(math.max(nPrior, 2L)))
+        else rRow.getLong(0).toInt
 
-    // 1) HNSW insert = serve-search: new vectors as queries against the
-    //    prior graph/vector store; entries restricted to exemplar cells
-    //    that are still prior nodes (a batch could contain an exemplar
-    //    id). Nodes whose vector left the store (updated ids reachable
-    //    via stale in-edges) drop out at the score join.
-    val undP = Similarity.undirected(
-      graph.select(col("src_id"), col("neighbor_id"))).localCheckpoint()
-    val exPrior = ex.join(vectors.select(col("vec_id").as("cell")), "cell")
-    val q = newV.select(col("vec_id").as("query_id"), col("v").as("q"))
-    val visited = Similarity.serveUnion(Similarity.serveVisitedByHopFrames(
-      vectors, q, exPrior, undP,
-      beam = 8, entries = 3, hops = Similarity.serveHopsOf(nPrior)))
-    val found = visited.groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.topK(
-        col("score"), col("node_id"), r).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id").as("src_id"),
-        (col("pos") + 1).cast(LongType).as("out_rank"),
-        col("e.id").as("neighbor_id"), col("e.score").as("cos_sim"),
-        lit(false).as("diversified"))
-      .localCheckpoint()
+      // 1) HNSW insert = serve-search: new vectors as queries against the
+      //    prior graph/vector store; entries restricted to exemplar cells
+      //    that are still prior nodes (a batch could contain an exemplar
+      //    id). Nodes whose vector left the store (updated ids reachable
+      //    via stale in-edges) drop out at the score join.
+      val undP = Similarity.undirected(
+        graph.select(col("src_id"), col("neighbor_id"))).transform(pins.pin)
+      val exPrior = ex.join(vectors.select(col("vec_id").as("cell")), "cell")
+      val q = newV.select(col("vec_id").as("query_id"), col("v").as("q"))
+      val visited = pins.hold(Similarity.serveUnion(
+        Similarity.serveVisitedByHopFrames(vectors, q, exPrior, undP,
+          beam = 8, entries = 3, hops = Similarity.serveHopsOf(nPrior))))
+      val found = visited.groupBy(col("query_id"))
+        .agg(graft.functions.TopKByScore.topK(
+          col("score"), col("node_id"), r).as("top"))
+        .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
+        .select(col("query_id").as("src_id"),
+          (col("pos") + 1).cast(LongType).as("out_rank"),
+          col("e.id").as("neighbor_id"), col("e.score").as("cos_sim"),
+          lit(false).as("diversified"))
+        .transform(pins.pin)
 
-    // 2) back-edges: every found neighbor re-trims its list to top-r by
-    //    similarity with the new vectors as candidates; its prior edges
-    //    INTO batch ids (stale versions, update case) leave the list
-    val backCand = found
-      .select(col("neighbor_id").as("src_id"), col("src_id").as("neighbor_id"),
-        col("cos_sim"), lit(false).as("diversified"))
-    val touchedIds = backCand.select(col("src_id")).distinct()
-    val touchedOld = graph.join(touchedIds, Seq("src_id"), "left_semi")
-      .join(newIds.withColumnRenamed("vec_id", "neighbor_id"),
-        Seq("neighbor_id"), "left_anti")
-      .select(col("src_id"), col("neighbor_id"), col("cos_sim"),
-        col("diversified"))
-    val w = Window.partitionBy(col("src_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    val touchedNew = touchedOld.union(backCand)
-      .withColumn("out_rank", row_number().over(w).cast(LongType))
-      .filter(col("out_rank") <= r)
-      .select(col("src_id"), col("out_rank"), col("neighbor_id"),
-        col("cos_sim"), col("diversified"))
+      // 2) back-edges: every found neighbor re-trims its list to top-r by
+      //    similarity with the new vectors as candidates; its prior edges
+      //    INTO batch ids (stale versions, update case) leave the list
+      val backCand = found
+        .select(col("neighbor_id").as("src_id"), col("src_id").as("neighbor_id"),
+          col("cos_sim"), lit(false).as("diversified"))
+      val touchedIds = backCand.select(col("src_id")).distinct()
+      val touchedOld = graph.join(touchedIds, Seq("src_id"), "left_semi")
+        .join(newIds.withColumnRenamed("vec_id", "neighbor_id"),
+          Seq("neighbor_id"), "left_anti")
+        .select(col("src_id"), col("neighbor_id"), col("cos_sim"),
+          col("diversified"))
+      val w = Window.partitionBy(col("src_id"))
+        .orderBy(col("cos_sim").desc, col("neighbor_id"))
+      val touchedNew = touchedOld.union(backCand)
+        .withColumn("out_rank", row_number().over(w).cast(LongType))
+        .filter(col("out_rank") <= r)
+        .select(col("src_id"), col("out_rank"), col("neighbor_id"),
+          col("cos_sim"), col("diversified"))
 
-    // 3) the batch's DELTA: new + re-trimmed lists only — untouched
-    //    nodes' lists stay in their prior partitions (the latest view
-    //    supersedes per src_id, so nothing else needs rewriting)
-    val graphDelta = touchedNew.union(found.select(touchedNew.columns
-        .map(col).toIndexedSeq: _*))
-      .orderBy(col("src_id"), col("out_rank")).localCheckpoint()
-    val cellsDelta = Similarity.assignCellsWith(newV, "v", ex)
-      .select(col("vec_id"), col("cell")).orderBy(col("vec_id"))
-      .localCheckpoint()
-    val vectorsDelta = newV.orderBy(col("vec_id")).localCheckpoint()
+      // 3) the batch's DELTA: new + re-trimmed lists only — untouched
+      //    nodes' lists stay in their prior partitions (the latest view
+      //    supersedes per src_id, so nothing else needs rewriting)
+      val graphDelta = touchedNew.union(found.select(touchedNew.columns
+          .map(col).toIndexedSeq: _*))
+        .orderBy(col("src_id"), col("out_rank")).transform(pins.pin)
+      val cellsDelta = Similarity.assignCellsWith(newV, "v", ex)
+        .select(col("vec_id"), col("cell")).orderBy(col("vec_id"))
+        .transform(pins.pin)
+      val vectorsDelta = newV.orderBy(col("vec_id")).transform(pins.pin)
 
-    // localCheckpoints above pin every delta BEFORE any overwrite (the
-    // deltas' lineage reads the same parquet roots being written);
-    // vectors last preserves the r13 reader convention (a fully-present
-    // vectors partition implies the sibling partitions landed)
-    failpoint(0)
-    writeDelta(graphDelta, s"$indexDir/graph", batchId)
-    failpoint(1)
-    writeDelta(cellsDelta, s"$indexDir/cells", batchId)
-    failpoint(2)
-    writeDelta(vectorsDelta, s"$indexDir/vectors", batchId)
-  }
+      // the pins above materialize every delta BEFORE any overwrite (the
+      // deltas' lineage reads the same parquet roots being written);
+      // vectors last preserves the r13 reader convention (a fully-present
+      // vectors partition implies the sibling partitions landed)
+      failpoint(0)
+      writeDelta(graphDelta, s"$indexDir/graph", batchId)
+      failpoint(1)
+      writeDelta(cellsDelta, s"$indexDir/cells", batchId)
+      failpoint(2)
+      writeDelta(vectorsDelta, s"$indexDir/vectors", batchId)
+    }
 
   // -------------------------------------------------------------------
   // Version-tail management (r15): the latest view is one window over
@@ -304,16 +307,18 @@ object AnnIngest {
     val bound = math.min(committedBatchId(spark, indexDir), upTo)
     if (bound == BaseBatchId) return
     // pin every view BEFORE any overwrite (their lineage reads the same
-    // parquet roots being replaced)
-    def view(name: String, key: String): DataFrame =
-      latestView(spark.read.parquet(s"$indexDir/$name"), key, bound)
-        .localCheckpoint()
-    val g = view("graph", "src_id")
-    val c = view("cells", "vec_id")
-    val v = view("vectors", "vec_id")
-    writeBase(g, s"$indexDir/graph")
-    writeBase(c, s"$indexDir/cells")
-    writeBase(v, s"$indexDir/vectors")
+    // parquet roots being replaced); released once the bases are written
+    SessionCache.withPins { pins =>
+      def view(name: String, key: String): DataFrame =
+        latestView(spark.read.parquet(s"$indexDir/$name"), key, bound)
+          .transform(pins.pin)
+      val g = view("graph", "src_id")
+      val c = view("cells", "vec_id")
+      val v = view("vectors", "vec_id")
+      writeBase(g, s"$indexDir/graph")
+      writeBase(c, s"$indexDir/cells")
+      writeBase(v, s"$indexDir/vectors")
+    }
   }
 
   /** Compact if the committed tail crossed either trigger. Returns

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.llmdata.SessionCache
 import graft.operators.{CdcDecode, CdcMaterialize}
 
 /** The composed production ingest the whole repo implies (SURVEY §9): a
@@ -68,14 +69,20 @@ object CurationIngest {
 
   /** One micro-batch of the composed ingest; wire as
     * `.writeStream.foreachBatch(CurationIngest.foreachBatchCurate(corpusDir, ledgerDir) _)`
-    * on the cdc-replay (or any raw-envelope `value`) stream. */
+    * on the cdc-replay (or any raw-envelope `value`) stream. The three
+    * pinned frames are released before the batch returns. */
   def foreachBatchCurate(corpusDir: String, ledgerDir: String,
                          textField: String = "Name")
-                        (batch: DataFrame, batchId: Long): Unit = {
-    // per-hop artifacts feed several branches below — pin once (the
-    // cur12/dd11 shared-subtree discipline)
-    val decoded = decodeText(batch, textField).localCheckpoint()
-    if (decoded.isEmpty) return
+                        (batch: DataFrame, batchId: Long): Unit =
+    SessionCache.withPins { pins =>
+      // the decoded rows feed the admission pass, the ledger and the
+      // corpus upsert — pin once (the cur12/dd11 shared-subtree discipline)
+      val decoded = decodeText(batch, textField).transform(pins.pin)
+      if (!decoded.isEmpty) curate(decoded, corpusDir, ledgerDir, batchId, pins)
+    }
+
+  private def curate(decoded: DataFrame, corpusDir: String, ledgerDir: String,
+                     batchId: Long, pins: SessionCache.Pins): Unit = {
     // one admission verdict per DOCUMENT per batch: admit on the latest
     // version in the batch (two versions of one doc in one trigger get
     // the newest text's verdict, and the ledger records it on every row)
@@ -93,18 +100,18 @@ object CurationIngest {
     // in-batch — deterministic, so a replayed batch agrees with itself.
     val intra = graft.llmdata.Dedup
       .dedupWithinSlice(incoming.select(col("doc_id"), col("text"), col("clock")))
-      .localCheckpoint()
+      .transform(pins.pin)
     val keptIncoming = incoming
       .join(intra.filter(col("status") === "kept").select(col("doc_id")), "doc_id")
       .select(col("doc_id"), col("text"))
     val verdicts = graft.llmdata.Dedup
-      .admitAgainstWithBloom(corpusOf(batch, corpusDir), keptIncoming)
+      .admitAgainstWithBloom(corpusOf(decoded, corpusDir), keptIncoming)
       // in-batch rejects enter the ledger with their own statuses; the
       // Bloom was never consulted for them (null, not false)
       .union(intra.filter(col("status") =!= "kept")
         .select(col("doc_id"), lit(null).cast("boolean").as("bloom_maybe"),
           col("status")))
-      .localCheckpoint()
+      .transform(pins.pin)
     // 1) admission ledger: every decoded event row + its doc's verdict,
     //    deduped on the envelope clock (idempotent under batch replay)
     val ledgerRows = decoded

@@ -81,7 +81,9 @@ class EntrySpec extends SparkSpec {
       // every native helper call goes through GraftColumn.staticCall
       ("StaticInvoke" + """\(""").r -> "shim.scala",
       // the merge-table resources are read only by the table module
-      ("graft/" + "bpe/").r -> "BpeTable.scala")
+      ("graft/" + "bpe/").r -> "BpeTable.scala",
+      // every checkpoint goes through GraftCheckpoint.pin, the one policy
+      ("localCheckpoint" + """\(""").r -> "shim.scala")
     val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
     val sources = roots.flatMap { root =>

@@ -2891,7 +2891,7 @@ class LlmDataSpec extends SparkSpec {
     val conv = graft.llmdata.Similarity.knnGraphConverged(spark, d)
       .select(org.apache.spark.sql.functions.col("src_id"),
         org.apache.spark.sql.functions.col("neighbor_id"))
-      .localCheckpoint()
+      .transform(org.apache.spark.sql.GraftCheckpoint.pin)
     // fixed point: one more descent round changes no edge (delta = 0)
     val again = graft.llmdata.Similarity.descentRound(spark, d, conv)
       .select(org.apache.spark.sql.functions.col("src_id"),
