@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -57,20 +58,38 @@ object GraftColumn {
   *
   * Release: `SessionCache.release` frees the blocks behind every
   * `LogicalRDD` leaf of a frame, so releasing a frame built over pinned
-  * pieces frees them all. A session cache releases its entries on
-  * `Dedup.uncacheShingles`; a `foreachBatch` function pins through
-  * `SessionCache.withPins`, which releases its pins before the batch
-  * returns. */
+  * pieces frees them all. `Dedup.uncacheShingles` releases every session
+  * cache's entries and then every pin still reachable ([[releaseAll]]),
+  * also those a query pinned for its own plan; a `foreachBatch` function
+  * pins through `SessionCache.withPins`, which releases its pins before
+  * the batch returns. */
 object GraftCheckpoint {
+  // weakly held, so an unreachable pin is still left to the ContextCleaner
+  private val live = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[RDD[_], java.lang.Boolean]))
+
   /** Pin `df` and materialize it with one job — the row count, which is
     * the job Spark's eager checkpoint runs anyway. */
   def pin(df: DataFrame): DataFrame = {
     val leaf = df.localCheckpoint(eager = false).queryExecution.logical
       .asInstanceOf[LogicalRDD]
+    live.add(leaf.rdd)
     val rows = leaf.rdd.count()
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val size = EstimationUtils.getSizePerRow(leaf.output) * rows
     classic.Dataset.ofRows(session, leaf.copy()(session,
       Some(Statistics(size, Some(BigInt(rows)))), Some(leaf.constraints)))
+  }
+
+  /** Free the blocks of every pin of `spark`'s context that is still
+    * reachable. A frame that reads one of them fails afterwards. */
+  def releaseAll(spark: SparkSession): Unit = {
+    val pins = live.synchronized(new java.util.ArrayList[RDD[_]](live))
+    pins.forEach { rdd =>
+      if (rdd.sparkContext eq spark.sparkContext) {
+        rdd.unpersist(blocking = false)
+        live.remove(rdd)
+      }
+    }
   }
 }

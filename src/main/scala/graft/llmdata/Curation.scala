@@ -162,8 +162,9 @@ object Curation {
       .when(col("cont_id").isNotNull, lit("removed_contaminated"))
       .otherwise(lit("kept"))
     t(spark, dir, "documents")
+      // hint kept (inflated estimate): unhinted, the join to dd3's drop ids sort-merges
       .join(broadcast(dupDocs), col("doc_id") === col("dup_id"), "left")
-      .join(broadcast(contaminated), col("doc_id") === col("cont_id"), "left")
+      .join(contaminated, col("doc_id") === col("cont_id"), "left")
       .select(outcome.as("outcome"), col("doc_id"),
         size(words).cast(LongType).as("n_tokens"))
       .groupBy(col("outcome"))
@@ -222,7 +223,7 @@ object Curation {
     val totals = perSource.agg(
       sum(col("n_tokens")).as("tot_tokens"),
       sum(col("w_micro")).as("tot_w"))
-    perSource.crossJoin(broadcast(totals))
+    perSource.crossJoin(totals)
       .select(
         col("source"), col("n_docs"), col("n_tokens"),
         (col("n_tokens").cast(DoubleType) / col("tot_tokens")).as("token_share"),
@@ -336,7 +337,7 @@ object Curation {
       .select(col("doc_id"), col("source"), size(words).cast(LongType).as("nt"))
     val isEval = col("doc_id") % Constants.EvalMod === 0
     val eff = d.join(sizes, Seq("doc_id"))
-      .join(broadcast(contaminated), col("doc_id") === col("cont_id"), "left")
+      .join(contaminated, col("doc_id") === col("cont_id"), "left")
       .select(col("source"), col("nt"), isEval.as("is_eval"),
         col("cont_id").isNotNull.as("is_cont"),
         when(isEval || col("cont_id").isNotNull, 0L)
@@ -353,7 +354,7 @@ object Curation {
           .cast(LongType))
     val totals = perSource.agg(
       sum(col("n_tokens")).as("tot_tokens"), sum(col("w_micro")).as("tot_w"))
-    perSource.crossJoin(broadcast(totals))
+    perSource.crossJoin(totals)
       .select(col("source"), col("n_docs"), col("n_eval"), col("n_contaminated"),
         col("n_tokens"), col("eff_tokens_micro"),
         (col("n_tokens").cast(DoubleType) / col("tot_tokens")).as("token_share"),
@@ -534,11 +535,11 @@ object Curation {
     // a broadcast triangular self-join, total via a broadcast 1-row agg
     val tot = agg.agg(sum(col("n_tokens")).as("tot_tokens"))
     val parts = agg.select(col("epoch").as("e2"), col("n_tokens").as("nt2"))
-    agg.join(broadcast(parts), col("e2") <= col("epoch"))
+    agg.join(parts, col("e2") <= col("epoch"))
       .groupBy(col("epoch"), col("n_docs"), col("n_tokens"),
         col("min_score"), col("max_score"))
       .agg(sum(col("nt2")).as("cum_tokens"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("epoch"), col("n_docs"), col("n_tokens"), col("cum_tokens"),
         col("min_score"), col("max_score"),
         (col("n_tokens").cast(DoubleType) / col("tot_tokens").cast(DoubleType))
@@ -769,13 +770,13 @@ object Curation {
         .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val tots = masses.agg(count(lit(1)).cast(LongType).as("n"),
       (sum(col("m")) * lit(BudgetEpochs)).as("budget"))
-    val feas = ordered.crossJoin(broadcast(tots))
+    val feas = ordered.crossJoin(tots)
       .withColumn("feasible",
         col("cumcap") - col("cap") + col("cap") * (col("n") - col("i") + 1) <= col("budget"))
     val ks = feas.agg(
       coalesce(max(when(col("feasible"), col("i"))), lit(0L)).as("kstar"),
       coalesce(max(when(col("feasible"), col("cumcap"))), lit(0L)).as("capsum"))
-    feas.crossJoin(broadcast(ks))
+    feas.crossJoin(ks)
       .withColumn("alloc",
         when(col("i") <= col("kstar"), col("cap"))
           .when(col("n") - col("kstar") === 0, col("cap"))
@@ -865,10 +866,11 @@ object Curation {
       explode(split(col("text"), " ")).as("w"))
     val totFrame = toks.agg(count(lit(1)).as("tot"))
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .crossJoin(broadcast(totFrame))
+      .crossJoin(totFrame)
       .select(col("w"),
         round(-log(col("cnt").cast(DoubleType) / col("tot").cast(DoubleType))
           * lit(1000000.0)).cast(LongType).as("surprisal_micro"))
+    // hint kept (backwards estimate): unhinted, the token stream is the build side
     val perDoc = toks.join(broadcast(vocab), "w")
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_tokens"),
@@ -988,7 +990,7 @@ object Curation {
     val fitted = dsirModelCache.get(spark, s"dsir_buckets:$dir")(fitBuckets())
     import spark.implicits._
     val buckets = fitted.toSeq.toDF("b", "lr_micro")
-    val perDoc = feats.join(broadcast(buckets), "b")
+    val perDoc = feats.join(buckets, "b")
       .groupBy(col("doc_id"), col("source"), col("lang"))
       .agg(count(lit(1)).as("n_feats"), sum(col("lr_micro")).as("logw_micro"))
     perDoc
@@ -1130,7 +1132,7 @@ object Curation {
         col("p") === col("_uw"))
       .select(col("p"), col("w"),
         q(col("c2").cast(DoubleType) / col("_uc1").cast(DoubleType)).as("s2"))
-    val m1 = uni.crossJoin(broadcast(totF))
+    val m1 = uni.crossJoin(totF)
       .select(col("w"),
         q(col("c1").cast(DoubleType) / col("tot").cast(DoubleType)).as("s1"))
     val oovF = totF.select(
@@ -1163,12 +1165,13 @@ object Curation {
         Seq("w"), "left")
       .withColumnRenamed("w", "_w1c")
     val scored = scoreToks
+      // hint kept (inflated estimate): at sf0.1, unhinted, this join sort-merges
       .join(broadcast(fused), col("w") === col("_w1c"), "left")
       .withColumn("s3", when(col("w2").isNotNull,
         try_element_at(col("_m3"), concat(col("w2"), lit(" "), col("w1")))))
       .withColumn("s2", when(col("w1").isNotNull,
         try_element_at(col("_m2"), col("w1"))))
-      .crossJoin(broadcast(oovF))
+      .crossJoin(oovF)
       .select(col("doc_id"), col("source"), col("is_train"),
         (coalesce(col("s3"), col("s2"), col("s1"), col("s_oov")) +
           (lvl - hit).cast(LongType) * lit(P)).as("surpr"),

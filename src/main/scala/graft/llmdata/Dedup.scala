@@ -95,10 +95,10 @@ object Dedup {
 
   /** Release this session's entries in EVERY session cache (shingle
     * tables, pair sets, signatures, codebooks, graph indexes, vocabularies
-    * — [[SessionCache.clearAll]]) — e.g. before a phase that needs the
-    * storage memory, after a dedup pass completes, or after rewriting the
-    * parquet under a dir this session already read. Subsequent queries
-    * transparently rebuild them. */
+    * — [[SessionCache.clearAll]]) and every checkpoint still pinned —
+    * e.g. before a phase that needs the storage memory, after a dedup pass
+    * completes, or after rewriting the parquet under a dir this session
+    * already read. Subsequent queries transparently rebuild them. */
   def uncacheShingles(spark: SparkSession): Unit = SessionCache.clearAll(spark)
 
   /** Exact Jaccard on distinct shingle arrays — native one-pass expression
@@ -582,14 +582,14 @@ object Dedup {
     // verify (the query's hot loop: ~400 long comparisons per pair plus a
     // ~1.6 KB grams_a copy per matched row) ran at the doc scan's
     // parallelism, a near-single-partition InMemoryTableScan. With the
-    // doc side pinned as the build side, the pair stream keeps the
-    // postings exchange's partitioning and the verify spreads over every
-    // core (guide §3.1 "broadcast the side that fits" — the pair stream
+    // doc side pinned as the build side (the planner already builds the
+    // `gb` join on the doc side), the pair stream keeps the postings
+    // exchange's partitioning and the verify spreads over every core (guide §3.1 "broadcast the side that fits" — the pair stream
     // is always the bigger side: |pairs| ≥ docs·(cap−1)/2 shared grams).
+    // hint kept (backwards estimate): unhinted, the pair stream is broadcast (above)
     val ga = broadcast(
       hdocs.select(col("doc_id").as("doc_a"), col("hg").as("grams_a")))
-    val gb = broadcast(
-      hdocs.select(col("doc_id").as("doc_b"), col("hg").as("grams_b")))
+    val gb = hdocs.select(col("doc_id").as("doc_b"), col("hg").as("grams_b"))
     cands.join(ga, "doc_a").join(gb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         graft.functions.TextHashFunctions.jaccardSorted(col("grams_a"), col("grams_b"))
@@ -875,7 +875,7 @@ object Dedup {
   def admitAgainstWithBloom(corpus: DataFrame, incoming: DataFrame): DataFrame = {
     val bits = corpus.select(explode(bloomPositions(col("text"))).as("p"))
       .distinct().agg(sort_array(collect_list(col("p"))).as("bits"))
-    val flagged = incoming.crossJoin(broadcast(bits))
+    val flagged = incoming.crossJoin(bits)
       .withColumn("bloom_maybe",
         forall(bloomPositions(col("text")), p => array_contains(col("bits"), p)))
       .select(col("doc_id"), col("text"), col("bloom_maybe"))
@@ -898,7 +898,7 @@ object Dedup {
     val existingH = corpus.select(md5(col("text")).as("h")).distinct()
     val exactDup = inH.join(existingH, Seq("h"), "left_semi").select(col("doc_id"))
     val cand = bandedOf(corpusGrams).as("x")
-      .join(broadcast(bandedOf(incomingGrams).as("y")),
+      .join(bandedOf(incomingGrams).as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("y.doc_id").as("in_id"), col("x.doc_id").as("ex_id"))
       .distinct()
@@ -963,12 +963,12 @@ object Dedup {
     * nearest. Multiprobe assignment (ss4/ss7's pattern) is the recall
     * knob when cells are fine-grained.
     *
-    * Broadcast contract: the small side must be the ADMISSION BATCH —
+    * Broadcast contract: the small side should be the ADMISSION BATCH —
     * bounded by ingest cadence, not by corpus size. The fixture's
-    * `vec_id % 10` slice stands in for that batch at test scale; a real
-    * incoming side that is a corpus FRACTION would OOM the broadcast
-    * build, and callers admitting one must drop the hint and let AQE
-    * pick the join (the rest of the shape is unchanged). */
+    * `vec_id % 10` slice stands in for that batch at test scale; the join
+    * carries no hint, so an incoming side that is a corpus FRACTION is
+    * shuffled once it outgrows the threshold (the rest of the shape is
+    * unchanged). */
   def semanticAdmission(spark: SparkSession, dir: String): DataFrame = {
     val isIncoming = col("vec_id") % 10 === 0
     val cells = Similarity.ivfCells(spark, dir)
@@ -976,7 +976,7 @@ object Dedup {
       .select(col("cell"), col("vec_id"), col("v").as("vi"))
     val ex = cells.filter(!isIncoming)
       .select(col("cell"), col("vec_id").as("ex_id"), col("v").as("ve"))
-    val best = ex.join(broadcast(inc), "cell")
+    val best = ex.join(inc, "cell")
       .select(col("vec_id"),
         struct(cosine(col("vi"), col("ve")).as("c"), (-col("ex_id")).as("ni")).as("s"))
       .groupBy(col("vec_id"))
@@ -1061,7 +1061,7 @@ object Dedup {
     docs.filter(isIncoming)
       .select(col("doc_id"), md5(col("text")).as("h"),
         bloomPositions(col("text")).as("pos"))
-      .crossJoin(broadcast(bits))
+      .crossJoin(bits)
       .withColumn("bloom_maybe",
         forall(col("pos"), p => array_contains(col("bits"), p)))
       .join(corpusH, Seq("h"), "left")
@@ -1320,7 +1320,7 @@ object Dedup {
       .filter(col("gram").isNotNull).distinct()
     val corpus = g.filter(!isEval)
     val shared = corpus.select(col("doc_id"), explode_outer(col("grams")).as("gram"))
-      .join(broadcast(evalGrams), Seq("gram"))
+      .join(evalGrams, Seq("gram"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
     corpus.select(col("doc_id"), size(col("grams")).cast(LongType).as("n_grams"))
       .join(shared, Seq("doc_id"), "left")
@@ -1503,7 +1503,7 @@ object Dedup {
     val nodes = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("doc_id"), col("deg"))
     val nFrame = nodes.agg(count(lit(1)).as("n"))
-    val n0 = nodes.crossJoin(broadcast(nFrame)).transform(GraftCheckpoint.pin)
+    val n0 = nodes.crossJoin(nFrame).transform(GraftCheckpoint.pin)
     var r = n0.select(col("doc_id"), col("deg"), col("n"),
       expr("1000000 div n").as("r"))
     for (_ <- 1 to iters) {
@@ -1877,7 +1877,7 @@ object Dedup {
     val t50 = pow(lit(1.0) - pow(lit(0.5),
         lit(1.0) / col("bands").cast(DoubleType)),
       lit(1.0) / col("rows_per_band").cast(DoubleType))
-    pairs.crossJoin(broadcast(combos))
+    pairs.crossJoin(combos)
       .select(col("bands"), col("rows_per_band"),
         round(pCol * lit(1000000.0)).cast(LongType).as("p_micro"))
       .groupBy(col("bands"), col("rows_per_band"))
@@ -1972,7 +1972,7 @@ object Dedup {
       .select(col("bands"), col("rows_per_band"), col("expected_recall"))
     combos.join(flagged, Seq("bands", "rows_per_band"), "left")
       .join(expected, Seq("bands", "rows_per_band"))
-      .crossJoin(broadcast(nVer))
+      .crossJoin(nVer)
       .select(col("bands"), col("rows_per_band"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("n_found"), lit(0L)).as("n_found"),

@@ -47,9 +47,14 @@ private[graft] object SessionCache {
 
   /** Clear this session's entries in every cache constructed so far. One
     * list, so caches that share checkpointed leaves (a union over another
-    * cache's walk pieces) are always released together. */
-  def clearAll(spark: SparkSession): Unit =
+    * cache's walk pieces) are always released together. Then free every
+    * pin no cache owns, such as the subtree a query pins for its own two
+    * consumers, so a family's release returns the storage ledger to its
+    * baseline without waiting for a garbage collection. */
+  def clearAll(spark: SparkSession): Unit = {
     registry.forEach(_.clear(spark))
+    GraftCheckpoint.releaseAll(spark)
+  }
 
   /** Release a cached frame's storage: unpersist the frame, then the RDD
     * behind every `LogicalRDD` leaf of its plan. A pinned frame

@@ -56,7 +56,7 @@ object Similarity {
   /** Exact top-k cosine neighbors per query: broadcast the query set, one
     * scan of the corpus, per-query ranking. The ground truth for ss2/ss3. */
   def knnBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val scored = corpus(spark, dir).crossJoin(broadcast(queriesDf(spark, dir)))
+    val scored = corpus(spark, dir).crossJoin(queriesDf(spark, dir))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
@@ -110,7 +110,7 @@ object Similarity {
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir).withColumn("code", lshCode(col("v")))
     val q = queriesDf(spark, dir).withColumn("code", lshCode(col("q")))
-    val scored = c.join(broadcast(q), "code")
+    val scored = c.join(q, "code")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
@@ -150,7 +150,7 @@ object Similarity {
     val probeArr = array(col("code") +: (1 to NumHyperplanes).map(j => flip(col("code"), j)): _*)
     val q = queriesDf(spark, dir).withColumn("code", lshCode(col("q")))
       .select(col("query_id"), col("q"), explode_outer(probeArr).as("probe"))
-    val scored = c.join(broadcast(q), c("code") === q("probe"))
+    val scored = c.join(q, c("code") === q("probe"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
       .distinct() // a neighbor can match via several probes
@@ -396,7 +396,7 @@ object Similarity {
     // vector lives in exactly one cell, so (query, neighbor) pairs are
     // already distinct across probes — no dedup step needed
     val q = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, IvfProbes)
-    val scored = c.join(broadcast(q), "cell")
+    val scored = c.join(q, "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
@@ -470,7 +470,7 @@ object Similarity {
       .select(col("vec_id"), Dedup.vecD(col("embedding")).as("v"))
     val c = assignCells(filteredCorpus, "v", ex)
     val q = assignCellsTopP(queriesDf(spark, dir), "q", ex, IvfProbes)
-    val scored = c.join(broadcast(q), "cell")
+    val scored = c.join(q, "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
     val w = Window.partitionBy(col("query_id"))
@@ -698,6 +698,7 @@ object Similarity {
     val codes = pqCodesCached(spark, dir)
 
     val tabs = pqQueryTabs(ex, queriesDf(spark, dir))
+    // hint kept (backwards estimate): unhinted, the persisted PQ codes are broadcast
     val scored = codes.crossJoin(broadcast(tabs))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adcScore.as("approx_score"))
@@ -710,7 +711,7 @@ object Similarity {
       // the refine stage: exact cosine touches only the ADC shortlist
       .join(corpus(spark, dir).select(col("vec_id").as("neighbor_id"), col("v")),
         "neighbor_id")
-      .join(broadcast(queriesDf(spark, dir)), "query_id")
+      .join(queriesDf(spark, dir), "query_id")
       .withColumn("cos_sim", Dedup.cosine(col("q"), col("v")))
       .withColumn("rank", row_number().over(wExact).cast(LongType))
       .filter(col("rank") <= AnnTopK)
@@ -839,6 +840,7 @@ object Similarity {
     val probes = assignCellsTopP(queriesDf(spark, dir), "q", exemplars, IvfProbes)
       .select(col("query_id"), col("cell"))
     val tabs = pqQueryTabs(ex, queriesDf(spark, dir))
+    // hint kept (inflated estimate): unhinted, the candidate index is the build side
     val scored = cand.join(broadcast(probes.join(tabs, "query_id")), "cell")
       .select(col("query_id"), col("neighbor_id"), adcScore.as("approx_score"))
     val short = scored.groupBy(col("query_id"))
@@ -850,8 +852,9 @@ object Similarity {
     val wExact = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     corpus(spark, dir).select(col("vec_id").as("neighbor_id"), col("v"))
+      // hint kept (inflated estimate): unhinted, the corpus is the build side
       .join(broadcast(short), "neighbor_id")
-      .join(broadcast(queriesDf(spark, dir)), "query_id")
+      .join(queriesDf(spark, dir), "query_id")
       .withColumn("cos_sim", Dedup.cosine(col("q"), col("v")))
       .withColumn("rank", row_number().over(wExact).cast(LongType))
       .filter(col("rank") <= AnnTopK)
@@ -954,7 +957,7 @@ object Similarity {
       val bounds = c.agg(
         array((1 to VecDim).map(i => min(element_at(col("v"), i))): _*).as("lo"),
         array((1 to VecDim).map(i => max(element_at(col("v"), i))): _*).as("hi"))
-      c.crossJoin(broadcast(bounds))
+      c.crossJoin(bounds)
         .select(col("vec_id").as("neighbor_id"), col("lo"), col("hi"),
           transform(sequence(lit(1), lit(VecDim)), i => {
             val x = element_at(col("v"), i)
@@ -974,7 +977,7 @@ object Similarity {
     // inside the query crossJoin it would re-interpret per (row × query))
     val decoded = sqIndex(spark, dir)
       .select(col("neighbor_id"), xq.as("xq"))
-    val scored = decoded.crossJoin(broadcast(queriesDf(spark, dir)))
+    val scored = decoded.crossJoin(queriesDf(spark, dir))
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.VectorFunctions.dotProduct(col("q"), col("xq"))
           .as("approx_score"))
@@ -987,8 +990,9 @@ object Similarity {
     val wExact = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     corpus(spark, dir).select(col("vec_id").as("neighbor_id"), col("v"))
+      // hint kept (inflated estimate): unhinted, the corpus is the build side
       .join(broadcast(short), "neighbor_id")
-      .join(broadcast(queriesDf(spark, dir)), "query_id")
+      .join(queriesDf(spark, dir), "query_id")
       .withColumn("cos_sim", Dedup.cosine(col("q"), col("v")))
       .withColumn("rank", row_number().over(wExact).cast(LongType))
       .filter(col("rank") <= AnnTopK)
@@ -1169,14 +1173,14 @@ object Similarity {
     val c = corpus(spark, dir)
     val mF = c.agg(max(Dedup.norm(col("v"))).as("m"))
     val scaled = transform(col("v"), x => x / col("m"))
-    val ca = c.crossJoin(broadcast(mF))
+    val ca = c.crossJoin(mF)
       .select(col("vec_id"), col("v"),
         concat(scaled, array(sqrt(greatest(lit(0.0),
           lit(1.0) - Dedup.dot(scaled, scaled))))).as("va"))
     val qa = queriesDf(spark, dir)
       .select(col("query_id"), col("q"),
         concat(col("q"), array(lit(0.0))).as("qa"))
-    val scored = ca.crossJoin(broadcast(qa))
+    val scored = ca.crossJoin(qa)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.dot(col("q"), col("v")).as("ip"),
         Dedup.cosine(col("qa"), col("va")).as("aug_cos"))
@@ -1327,6 +1331,7 @@ object Similarity {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("label").as("q_label"),
         Dedup.vecD(col("embedding")).as("q"))
+    // hint kept (backwards estimate): unhinted, the corpus is broadcast
     val scored = c.crossJoin(broadcast(q))
       .select(col("query_id"), col("q_label"),
         col("vec_id").as("neighbor_id"), col("neighbor_label"),
@@ -1336,6 +1341,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     scored.filter(col("neighbor_label") =!= col("q_label"))
+      // hint kept (inflated estimate): unhinted, the join to the per-query MAX sort-merges
       .join(broadcast(pos), "query_id")
       .filter(col("cos_sim") < lit(HardNegMarginFactor) * col("pos_sim"))
       .withColumn("rank", row_number().over(w).cast(LongType))
@@ -1521,7 +1527,7 @@ object Similarity {
     val sampK = sampleWidthOf(kDeg)
     val e0 = t(spark, dir, "embeddings").select(col("vec_id"))
     val nF = e0.agg((max(col("vec_id")) + 1L).as("nv"))
-    val rnd = e0.filter(col("vec_id") >= NumQueries).crossJoin(broadcast(nF))
+    val rnd = e0.filter(col("vec_id") >= NumQueries).crossJoin(nF)
       .select(col("vec_id").as("src_id"),
         explode(array((1 to DescentRandomR).map(j =>
           lit(NumQueries.toLong) +
@@ -2128,7 +2134,7 @@ object Similarity {
                                 hops: Int): Seq[DataFrame] = {
     val entW = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("node_id"))
-    val entry = q.crossJoin(broadcast(ex))
+    val entry = q.crossJoin(ex)
       .select(col("query_id"), col("cell").as("node_id"),
         Dedup.cosine(col("q"), col("cv")).as("score"))
       .withColumn("rn", row_number().over(entW))
@@ -2139,7 +2145,7 @@ object Similarity {
     // re-executes every prior hop 2^h times
     serveWalk(entry, undP, beam, hops, cands => cands
       .join(e.withColumnRenamed("vec_id", "node_id"), "node_id")
-      .join(broadcast(q), "query_id")
+      .join(q, "query_id")
       .select(col("query_id"), col("node_id"),
         Dedup.cosine(col("q"), col("v")).as("score")))
   }
@@ -2360,7 +2366,7 @@ object Similarity {
     val q = queriesDf(spark, dir)
     val sqOf: DataFrame => DataFrame = cands => cands
       .join(decoded, "node_id")
-      .join(broadcast(q), "query_id")
+      .join(q, "query_id")
       .select(col("query_id"), col("node_id"),
         graft.functions.VectorFunctions.dotProduct(col("q"), col("xq"))
           .as("score"))
@@ -2368,7 +2374,7 @@ object Similarity {
       .orderBy(col("score").desc, col("node_id"))
     val exCells = exemplarsOf(spark, dir).filter(col("cell") >= NumQueries)
       .select(col("cell").as("node_id"))
-    val entry = sqOf(q.select(col("query_id")).crossJoin(broadcast(exCells)))
+    val entry = sqOf(q.select(col("query_id")).crossJoin(exCells))
       .withColumn("rn", row_number().over(entW))
       .filter(col("rn") <= ServeEntries).drop("rn")
     // the SQ-scored walk caches per (session, dir) like ss17's exact
@@ -2389,7 +2395,7 @@ object Similarity {
     val res = short
       .join(corpus(spark, dir).select(col("vec_id").as("neighbor_id"), col("v")),
         "neighbor_id")
-      .join(broadcast(q), "query_id")
+      .join(q, "query_id")
       .withColumn("cos_sim", Dedup.cosine(col("q"), col("v")))
       .withColumn("rank", row_number().over(wExact).cast(LongType))
       .filter(col("rank") <= AnnTopK)
@@ -2499,7 +2505,7 @@ object Similarity {
       .select(col("vec_id"), Dedup.vecD(col("embedding")).as("v"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    val exact = exF.crossJoin(broadcast(queriesDf(spark, dir)))
+    val exact = exF.crossJoin(queriesDf(spark, dir))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
       .withColumn("rn", row_number().over(w))
@@ -2602,9 +2608,7 @@ object Similarity {
         col("score"), col("node_id"), AnnTopK).as("top"))
       .select(keys :+ col("query_id") :+ explode(col("top")).as("e"): _*)
       .select(keys :+ col("query_id") :+ col("e.id").as("neighbor_id"): _*)
-    // broadcast the exact top-k (|queries|·k rows at any scale) — size
-    // estimation over the window+filter subtree otherwise picks a
-    // shuffle join for a 30-row frame
+    // hint kept (inflated estimate): the |queries|·k-row top-k would sort-merge unhinted
     val hits = top3.join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
       .groupBy(keys: _*)
       .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("hits3"))
@@ -2687,7 +2691,7 @@ object Similarity {
     val exact = knnBruteForce(spark, dir).filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("neighbor_id"))
     def prefixTopK(d: Int): DataFrame = {
-      val scored = corpus(spark, dir).crossJoin(broadcast(queriesDf(spark, dir)))
+      val scored = corpus(spark, dir).crossJoin(queriesDf(spark, dir))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           Dedup.cosine(slice(col("q"), 1, d), slice(col("v"), 1, d)).as("cos_sim"))
       val w = Window.partitionBy(col("query_id"))
@@ -2789,7 +2793,7 @@ object Similarity {
   def mrlFunnel(spark: SparkSession, dir: String): DataFrame = {
     val exact = knnBruteForce(spark, dir).filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val scored = corpus(spark, dir).crossJoin(broadcast(queriesDf(spark, dir)))
+    val scored = corpus(spark, dir).crossJoin(queriesDf(spark, dir))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Dedup.cosine(slice(col("q"), 1, FunnelDim), slice(col("v"), 1, FunnelDim))
           .as("pre_sim"),
@@ -2813,7 +2817,7 @@ object Similarity {
         count(lit(1)).over(Window.partitionBy(col("query_id"))).cast(DoubleType))
       .filter(col("rank") <= AnnTopK)
       .join(exact, Seq("query_id", "neighbor_id"), "left")
-      .crossJoin(broadcast(corpusN))
+      .crossJoin(corpusN)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"),
         coalesce(col("hit"), lit(0L)).as("hit"),
         (col("n_sl") / col("corpus_n")).as("scored_share"))
@@ -2893,7 +2897,7 @@ object Similarity {
     val q = queriesDf(spark, dir)
       .select(col("query_id"), col("q"), posexplode(probeCells).as(Seq("p0", "cell")))
       .withColumn("prank", col("p0") + 1)
-    val cand = c.join(broadcast(q), "cell")
+    val cand = c.join(q, "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("prank"),
         Dedup.cosine(col("q"), col("v")).as("cos_sim"))
     // levels nest, so a candidate at probe rank r belongs to every level
@@ -2917,15 +2921,14 @@ object Similarity {
     val top3 = g1
       .select(col("nprobe"), col("query_id"), explode(col("top")).as("e"))
       .select(col("nprobe"), col("query_id"), col("e.id").as("neighbor_id"))
-    // exact is NumQueries*k rows and vols is |levels| rows — bounded by
-    // the audit's own constants at any corpus size, so both broadcast
+    // hint kept (inflated estimate): the |queries|·k-row top-k would sort-merge unhinted
     val hits = top3.join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("nprobe"))
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits3"))
     val vols = g1.groupBy(col("nprobe"))
       .agg(sum(col("ncand")).as("n_candidates"))
     val corpusN = corpusCount(spark, dir).toDouble
-    hits.join(broadcast(vols), "nprobe")
+    hits.join(vols, "nprobe")
       .select(col("nprobe"), col("n_candidates"), col("hits3"),
         (col("hits3").cast(DoubleType) /
           lit((NumQueries * AnnTopK).toDouble)).as("recall3"),

@@ -203,11 +203,11 @@ object TextAnalysis {
     val tf = tfAgg
       .withColumn("nw", sum(col("tc")).over(Window.partitionBy(col("doc_id"))))
     val df_ = tfAgg.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // corpus size as a broadcast 1-row aggregate (ev5 pattern) — keeps the
+    // corpus size as a 1-row aggregate (ev5 pattern) — keeps the
     // whole query one lazy DAG instead of an eager driver-side count() scan
     val n = t(spark, dir, "documents")
       .agg(count(lit(1)).cast(DoubleType).as("n_total"))
-    val scored = tf.join(df_, "term").crossJoin(broadcast(n))
+    val scored = tf.join(df_, "term").crossJoin(n)
       .withColumn("tfidf",
         (col("tc").cast(DoubleType) / col("nw").cast(DoubleType)) *
           (col("n_total") / col("df").cast(DoubleType)))
@@ -480,7 +480,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode_outer(words).as("w"))
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("wc"))
       .orderBy(col("wc").desc, col("w").asc).limit(VocabTopV)
-    toks.join(broadcast(vocab), Seq("w"), "left")
+    toks.join(vocab, Seq("w"), "left")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_tokens"),
@@ -568,7 +568,7 @@ object TextAnalysis {
       .select(col("bg"), col("c12"),
         floor(col("c12").cast(DoubleType) * lit(1e6) /
           col("c1").cast(DoubleType)).cast(LongType).as("cond_micro"))
-    docBigrams.join(broadcast(bigrams), Seq("bg"), "left")
+    docBigrams.join(bigrams, Seq("bg"), "left")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_bigrams"),
@@ -914,7 +914,7 @@ object TextAnalysis {
     val isEval = col("doc_id") % Constants.EvalMod === 0
     val evalKeys = windowKeys(d.filter(isEval)).select(col("wk")).distinct()
     val starts = windowKeys(d.filter(!isEval))
-      .join(broadcast(evalKeys), "wk").select(col("doc_id"), col("pos"))
+      .join(evalKeys, "wk").select(col("doc_id"), col("pos"))
     val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val prevEnd = max(col("pos") + (Constants.SubstrW - 1))
       .over(wOrd.rowsBetween(Window.unboundedPreceding, -1))
@@ -1252,14 +1252,14 @@ object TextAnalysis {
     val docs = t(spark, dir, "documents")
     val nFrame = docs.agg((max(col("doc_id")) + 1).as("n"))
     val bucket = expr(s"least((doc_id * $VocabBuckets) div n, ${VocabBuckets - 1})")
-    val perBucket = docs.crossJoin(broadcast(nFrame))
+    val perBucket = docs.crossJoin(nFrame)
       .select(bucket.as("bucket"), size(grams).cast(LongType).as("nw"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nw")).as("tokens"))
     val firstSeen = docs
       .select(col("doc_id"), explode(grams).as("w"))
       .groupBy(col("w")).agg(min(col("doc_id")).as("fd"))
-    val newTypes = firstSeen.crossJoin(broadcast(nFrame))
+    val newTypes = firstSeen.crossJoin(nFrame)
       .select(expr(s"least((fd * $VocabBuckets) div n, ${VocabBuckets - 1})").as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("new_types"))
     val cum = Window.orderBy(col("bucket"))

@@ -45,6 +45,7 @@ object CdcEnrich {
     val ids = changes.filter(col("changeType") =!= ChangeType.Delete)
       .select(col("entityName"), col("changeType"), col("Id"))
     val snapCols = snapshot.columns.filter(_ != "Id").map(col)
+    // hint kept (backwards estimate): unhinted, the snapshot is broadcast, not the ids
     snapshot.join(broadcast(ids), Seq("Id"))
       .select(
         Seq(struct(col("entityName").as("type")).as("attributes"), col("Id")) ++

@@ -208,7 +208,7 @@ object EventsAnalytics {
         .cast(LongType) % w
     val est = least((0 until d).map(i =>
       element_at(col("cells"), (lit(i * w) + bucket(i) + 1).cast(IntegerType))): _*)
-    exact.crossJoin(broadcast(sketch))
+    exact.crossJoin(sketch)
       .select(col("event_type"), col("exact_count"), est.as("cms_estimate"),
         (est - col("exact_count")).as("overcount"))
       .orderBy(col("event_type"))
@@ -728,7 +728,7 @@ object EventsAnalytics {
     kb.join(merged, Seq("i", "b"))
       .groupBy(col("event_type"), col("exact_count"))
       .agg(min(col("v")).as("cms_estimate"))
-      .crossJoin(broadcast(nDays))
+      .crossJoin(nDays)
       .select(col("event_type"), col("n_days"), col("exact_count"),
         col("cms_estimate"),
         (col("cms_estimate") - col("exact_count")).as("overcount"))
@@ -1052,7 +1052,7 @@ object EventsAnalytics {
         least(element_at(col("ska"), K), element_at(col("skb"), K)))
       .when(size(col("ska")) >= K, element_at(col("ska"), K))
       .when(size(col("skb")) >= K, element_at(col("skb"), K))
-    val pr = a.join(broadcast(b), col("type_a") < col("type_b"))
+    val pr = a.join(b, col("type_a") < col("type_b"))
       .withColumn("th", th)
       .withColumn("th_norm", when(col("th").isNull, lit(1.0))
         .otherwise(conv(col("th"), 16, 10).cast(DoubleType) /
@@ -1240,7 +1240,7 @@ object EventsAnalytics {
       expr(s"shiftleft(cast(1 as bigint), " +
         s"cast($DecayScale - ((t_ms - ms) DIV 604800000) as int))"))
       .otherwise(lit(0L))
-    e.crossJoin(broadcast(tF))
+    e.crossJoin(tF)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(w).as("w_units"),

@@ -98,4 +98,30 @@ class EntrySpec extends SparkSpec {
       assert(hits == Seq(home), s"'$pattern' outside $home: ${hits.mkString(", ")}")
     }
   }
+
+  test("broadcast hints stay within the recorded budget, each with its " +
+      "reason on the line above (join policy: GraftSession)") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val budget = Map("Similarity.scala" -> 8, "Curation.scala" -> 3,
+      "Relational.scala" -> 3, "Dedup.scala" -> 1, "CdcEnrich.scala" -> 1)
+    val call = """\bbroadcast\(""".r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val found = files.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.filter { i =>
+        val l = lines(i).trim
+        !l.startsWith("//") && !l.startsWith("*") && !l.startsWith("/*") &&
+          call.findFirstIn(l).isDefined
+      }.map(i => (f.getFileName.toString, i, lines.lift(i - 1).getOrElse("").trim))
+    }
+    val counts = found.groupBy(_._1).map { case (k, v) => k -> v.size }
+    assert(counts == budget, s"broadcast( calls per file: $counts")
+    val unexplained = found.filterNot(_._3.startsWith("// hint kept ("))
+      .map { case (f, i, _) => s"$f:${i + 1}" }
+    assert(unexplained.isEmpty, s"hints without a '// hint kept (<kind>): " +
+      s"<reason>' line above: ${unexplained.mkString(", ")}")
+  }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.llmdata.{Dedup, Similarity}
-import graft.relational.Relational
+import graft.llmdata.{Dedup, Similarity, TextAnalysis}
+import graft.relational.{EventsAnalytics, Relational}
 
 /** Physical-plan quality gates — the 100 TB posture, asserted, not hoped:
   * filters reach the parquet scan, column pruning holds, dimension joins
@@ -57,6 +57,29 @@ class PlanQualitySpec extends SparkSpec {
       "q18 must not hint-broadcast the HAVING set or customer")
     assert(hintCount(Relational.q5NationRevenue(spark, sf())) == 2,
       "q5 hints exactly nation + region (fixed 25/5 rows)")
+    // the planner already broadcasts these sides at fixture scale; a hint
+    // would only stop the shuffle fallback once they outgrow the threshold
+    assert(hintCount(Relational.q42ProfitRollup(spark, sf())) == 0,
+      "q42 must not hint-broadcast supplier or nation")
+    assert(hintCount(Dedup.decontaminate(spark, sf())) == 0,
+      "dd13 must not hint-broadcast the eval gram set")
+    assert(hintCount(Dedup.incrementalDedup(spark, sf())) == 0,
+      "dd12 must not hint-broadcast the incoming bands")
+    assert(hintCount(TextAnalysis.bigramQuality(spark, sf())) == 0,
+      "tx19 must not hint-broadcast the bigram table")
+    assert(hintCount(EventsAnalytics.thetaSetOps(spark, sf())) == 0,
+      "ev19 must not hint-broadcast the per-type sketches")
+  }
+
+  test("q42: with broadcast joins switched off, the supplier join shuffles " +
+      "instead of being forced into memory") {
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val p = plan(Relational.q42ProfitRollup(spark, sf()))
+      assert(!p.contains("BroadcastHashJoin"),
+        "no join may broadcast past the threshold:\n" + p.linesIterator.take(40).mkString("\n"))
+      assert(p.contains("SortMergeJoin"), "the dimension joins must fall back to a shuffle")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("q18: AQE chooses broadcast for the qualifying set at test SF without a hint") {
@@ -365,6 +388,16 @@ class PlanQualitySpec extends SparkSpec {
     // corpus positions collapse via hash aggregate (map-side combinable),
     // not a sort-based distinct
     assert(p.contains("HashAggregate"))
+    // the streaming admission path (no fixture: two in-memory frames) builds
+    // on its 1-row bitset the same way
+    import spark.implicits._
+    val corpus = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("doc_id", "text")
+    val incoming = Seq((3L, "alpha beta gamma delta"), (4L, "red orange yellow green"))
+      .toDF("doc_id", "text")
+    val admit = plan(Dedup.admitAgainstWithBloom(corpus, incoming))
+    assert(admit.contains("BroadcastNestedLoopJoin Cross BuildRight"),
+      admit.linesIterator.take(60).mkString("\n"))
   }
 
   test("tx13: repetition stats are two hash aggregates — no window, no sort before agg") {

@@ -27,6 +27,24 @@ class SessionCacheSpec extends SparkSpec {
     assert(left.isEmpty, s"RDDs still pinned after the release: $left")
   }
 
+  test("storage ledger: one battery query per family, then uncacheShingles, " +
+      "leaves no persisted RDD beyond the family's baseline") {
+    val sc = spark.sparkContext
+    val families = Seq("cdc2_route_enrich", "cur9_token_budget", "dd5_simhash_neardup",
+      "ev2_sessionize", "fm2_fuzzy_match_minhash", "mm10_interleaved_packing",
+      "q30_range_join", "ss20_graph_serve_filtered", "tx4_quality_score")
+    val leaks = families.flatMap { q =>
+      // a difference, not an equality: the ContextCleaner may drop older
+      // unreachable RDDs meanwhile
+      val before = sc.getPersistentRDDs.keySet.toSet
+      SparkEntry.queries(q)(spark, sf()).write.format("noop").mode("overwrite").save()
+      Dedup.uncacheShingles(spark)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      if (left.isEmpty) None else Some(s"$q: ${left.toSeq.sorted.mkString(",")}")
+    }
+    assert(leaks.isEmpty, s"RDDs still pinned after the release: ${leaks.mkString("; ")}")
+  }
+
   test("each micro-batch releases what it pins: AnnIngest.upsertVectors, " +
       "AnnIngest.compact and CurationIngest.foreachBatchCurate leave no " +
       "new persisted RDD") {
