@@ -17,8 +17,9 @@ object TopKByScore {
   final case class Entry(score: Double, id: Long)
   final case class Buf(entries: List[Entry])
 
-  /** (score desc, id asc) — matches ORDER BY score DESC, id. */
-  private val ord: Ordering[Entry] =
+  /** (score desc, id asc) — matches ORDER BY score DESC, id. Also the
+    * serve walk's frontier order ([[ServeWalk]]). */
+  val ord: Ordering[Entry] =
     Ordering.by[Entry, (Double, Long)](e => (-e.score, e.id))
 
   class Agg(k: Int) extends Aggregator[Entry, Buf, Seq[Entry]] {

@@ -46,8 +46,8 @@ private[graft] object SessionCache {
     new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_]]()
 
   /** Clear this session's entries in every cache constructed so far. One
-    * list, so caches that share checkpointed leaves (a union over another
-    * cache's walk pieces) are always released together. Then free every
+    * list, so caches that share checkpointed leaves (a frame built over
+    * another cache's pinned frame) are always released together. Then free every
     * pin no cache owns, such as the subtree a query pins for its own two
     * consumers, so a family's release returns the storage ledger to its
     * baseline without waiting for a garbage collection. */
@@ -68,21 +68,21 @@ private[graft] object SessionCache {
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** The frames one unit of work pinned or holds; see [[withPins]]. */
+  /** The frames one unit of work pinned; see [[withPins]]. */
   final class Pins private[SessionCache] () {
     private[SessionCache] val held =
       scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     /** `GraftCheckpoint.pin`, released when the scope ends. */
-    def pin(df: DataFrame): DataFrame = hold(GraftCheckpoint.pin(df))
-
-    /** Release `df` when the scope ends: for a frame built over pieces
-      * pinned elsewhere (a serve walk's visited union). */
-    def hold(df: DataFrame): DataFrame = { held += df; df }
+    def pin(df: DataFrame): DataFrame = {
+      val p = GraftCheckpoint.pin(df)
+      held += p
+      p
+    }
   }
 
-  /** Run `body`, then [[release]] every frame it pinned or held through
-    * its [[Pins]], also when it throws: what a micro-batch pins is freed
+  /** Run `body`, then [[release]] every frame it pinned through its
+    * [[Pins]], also when it throws: what a micro-batch pins is freed
     * within that batch instead of waiting for a garbage collection to
     * let the ContextCleaner reclaim it. */
   def withPins[T](body: Pins => T): T = {

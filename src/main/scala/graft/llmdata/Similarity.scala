@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{ServeIndex, ServeWalk}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` fixture (64-dim unit vectors):
@@ -1799,9 +1800,9 @@ object Similarity {
     divGraphCache.get(spark, dir) {
       graphDiversifyUncached(spark, dir)
         // pinned for the same planning-cost reason as the seed: this
-        // frame is the INDEX ARTIFACT — its consumers (ss17/ss19
-        // serve, the battery count, the persisted-index writer) must not
-        // re-analyze the whole two-round build per action
+        // frame is the INDEX ARTIFACT — its consumers (the serve
+        // index collect, the battery count, the persisted-index writer)
+        // must not re-analyze the whole two-round build per action
         .transform(GraftCheckpoint.pin)
     }
 
@@ -1894,7 +1895,17 @@ object Similarity {
     * plateaus at ~23% instead of falling — i.e. beam-widening is the
     * EXPENSIVE substitute for the degree the build should have had.
     * Spec-pinned with the (degree, beam, hops) triple at the probe
-    * corpora (LlmDataSpec). */
+    * corpora (LlmDataSpec).
+    *
+    * SCALE BOUND (decision): the walk searches a driver-built
+    * [[ServeIndex]] — the undirected adjacency and every node's vector,
+    * shipped with the plan as a literal — so the index is O(corpus) in the
+    * driver heap and in each stage's task binary: at most 8·dim + 16·R
+    * bytes per node for stored out-degree R, 1.3 MB at sf0.1's 1 990
+    * vectors (SCALING.md). Past a
+    * few hundred MB the corpus outgrows this posture and needs a
+    * partition-local index per corpus shard instead; per-query work stays
+    * O(hops·beam·degree) either way. */
   private[graft] val ServeBeam = 9
 
   /** Serve hop budget scales with the corpus, with a MEASURED knee at
@@ -1991,10 +2002,16 @@ object Similarity {
     * in the structure, not the frontier). */
   private[graft] val ServeEntries = 2
 
-  /** The undirected serve adjacency caches per (session, dir) alongside
-    * the descent graph it is derived from — it IS the index artifact the
-    * search walks, so each query batch must not re-derive it. */
-  private val serveGraphCache = SessionCache.persisted()
+  /** The serve index per (session, dir): the ss18 diversified graph and
+    * the corpus vectors, collected once (see [[ServeIndex]]); ss21 adds
+    * the same graph over the dequantized SQ8 codes under `dir#sq`. It IS
+    * the index artifact the search walks, so each query batch must not
+    * re-collect it. */
+  private val serveIndexCache = new SessionCache[ServeIndex](_ => ())
+
+  private def serveIndex(spark: SparkSession, dir: String): ServeIndex =
+    serveIndexCache.get(spark, dir)(
+      serveIndexOf(graphDiversify(spark, dir), corpus(spark, dir)))
 
   /** ss17: GRAPH-ANN SERVE — greedy best-first search over the cached
     * DIVERSIFIED graph (ss18 — the HNSW/NSG serving path that makes the
@@ -2011,72 +2028,71 @@ object Similarity {
     * HALVED when the corpus 4×ed (0.63 → 0.30); the corpus-scaled
     * diversified graph is the published cure.
     *
-    * Scale: the corpus is touched only through vec_id-keyed joins against
-    * the visited/frontier sets — per query O(hops·beam·degree) candidate
-    * rows, NOT a corpus scan; queries broadcast; the per-query keeps are
-    * the O(k) bounded-heap aggregate. The exact-recall join is the audit
-    * tier (one corpus scan, same as ss1) — drop it in production serving
-    * and no full scan remains. */
+    * Scale: the walk is one [[ServeWalk]] call per query over the
+    * driver-built [[ServeIndex]] — per query O(hops·beam·degree) scored
+    * nodes, NOT a corpus scan; the index itself is O(corpus) (see
+    * [[ServeBeam]]); the result keep is the O(k) bounded-heap aggregate.
+    * The exact-recall join is the audit tier (one corpus scan, same as
+    * ss1) — drop it in production serving and no full scan remains. */
   def graphServe(spark: SparkSession, dir: String): DataFrame =
     serveResult(spark, dir, standardVisited(spark, dir))
 
-  /** ALL per-hop PIECES of one (beam, entries) traversal to
-    * [[MaxServeHops]] depth (element 0 = entry, element h = hop h's newly
-    * scored nodes — see [[serveWalk]]), cached per (session, dir,
-    * setting): ss17 and ss20 read the standard setting's prefix union,
-    * ss19 reads every prefix of every swept setting — so each setting's
-    * hop chain executes once per battery no matter how many consumers
-    * measure it (r13 verdict task 2: the sweep used to re-run the
-    * standard walk it shared with ss17). Each piece is checkpointed;
-    * [[SessionCache.release]] frees each piece's blocks. */
-  private val serveStatesCache = new SessionCache[Seq[DataFrame]](
-    _.foreach(SessionCache.release))
+  /** One (beam, entries) walk's visited rows to [[MaxServeHops]] depth,
+    * or to the corpus-scaled depth where that is deeper (past 2048
+    * vectors hops keep scaling beyond the twin unroll, see
+    * [[ServeHopsCap]]): ss17 and ss20 read the standard setting to
+    * [[serveHopsOf]], ss19 every swept setting at each depth
+    * 1..[[MaxServeHops]].
+    *
+    * Cached per (session, dir, setting) as driver-local rows (at most
+    * queries × hops·beam·degree of them). Re-running the walk on every
+    * serve pass measured ss20 at 1.49 s `battery.ss.wall_s` against 0.86 s
+    * at the parent (perfbench `--trace 1`, 4 cores). A persisted frame
+    * is no cheaper: its lineage carries the [[ServeIndex]] literal into
+    * the task binary of every stage that reads it. */
+  private val visitedCache = new SessionCache[DataFrame](_ => ())
 
-  private def servePieces(spark: SparkSession, dir: String,
-                          beam: Int, entries: Int): Seq[DataFrame] =
-    serveStatesCache.get(spark, s"$dir#b${beam}e$entries")(
-      serveVisitedByHop(spark, dir, serveAdjacency(spark, dir),
-        beam, entries,
-        // the ss19 sweep reads every prefix to MaxServeHops; a corpus
-        // past 2048 vectors needs the deeper scaled states too (r18 —
-        // hops keep scaling past the twin unroll, see ServeHopsCap).
-        // Gate corpora: max(6, ≤6) = 6, bit-identical to r17.
-        math.max(MaxServeHops, serveHops(spark, dir))))
+  private def serveVisited(spark: SparkSession, dir: String,
+                           beam: Int, entries: Int): DataFrame =
+    visitedCache.get(spark, s"$dir#b${beam}e$entries") {
+      val v = serveSearch(queriesDf(spark, dir),
+        exemplarsOf(spark, dir).filter(col("cell") >= NumQueries),
+        serveIndex(spark, dir), beam, entries,
+        math.max(MaxServeHops, serveHops(spark, dir)))
+      spark.createDataFrame(java.util.Arrays.asList(v.collect(): _*), v.schema)
+    }
 
-  private def standardVisited(spark: SparkSession, dir: String): DataFrame = {
-    // visited after `serveHops` hops = entry piece + pieces 1..serveHops
-    serveUnion(servePieces(spark, dir, ServeBeam, ServeEntries)
-      .take(serveHops(spark, dir) + 1))
-  }
+  private def standardVisited(spark: SparkSession, dir: String): DataFrame =
+    serveVisited(spark, dir, ServeBeam, ServeEntries)
+      .filter(col("hop") <= serveHops(spark, dir))
 
   private def serveHops(spark: SparkSession, dir: String): Int =
     serveHopsOf(corpusCount(spark, dir))
 
-  /** The cached undirected serve adjacency over the ss18 diversified
-    * edges — shared by ss17 and the ss19 sweep. Pinned
-    * ([[GraftCheckpoint]]): the adjacency rides into every hop's task
-    * closure, and a flat leaf keeps the per-hop plans (and task
-    * binaries) small. */
-  private def serveAdjacency(spark: SparkSession, dir: String): DataFrame =
-    serveGraphCache.get(spark, dir)(
-      undirected(graphDiversify(spark, dir)
-        .select(col("src_id"), col("neighbor_id"))).transform(GraftCheckpoint.pin))
+  /** A cosine-scored [[ServeIndex]] over directed (src_id, neighbor_id)
+    * `edges` and (id, vector) rows, both collected to the driver. */
+  private[graft] def serveIndexOf(edges: DataFrame, vectors: DataFrame): ServeIndex =
+    ServeIndex.build(
+      edges.select(col("src_id"), col("neighbor_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))),
+      collectVectors(vectors), cosine = true)
 
-  private[graft] def undirected(edges: DataFrame): DataFrame =
-    edges.union(edges.select(col("neighbor_id").as("src_id"),
-        col("src_id").as("neighbor_id")))
-      .distinct()
+  private def collectVectors(vectors: DataFrame): Seq[(Long, Array[Double])] =
+    vectors.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   /** Serve over an arbitrary edge set — the convergence spec passes
     * [[knnGraphConverged]]'s edges here; [[graphServe]] itself goes
-    * through the cached adjacency. */
+    * through the cached index. */
   private[graft] def graphServeOver(spark: SparkSession, dir: String,
                                     edges: DataFrame,
                                     beam: Int = ServeBeam,
                                     hops: Int = -1,
                                     entries: Int = ServeEntries): DataFrame =
-    serveCore(spark, dir, undirected(edges).transform(GraftCheckpoint.pin), beam,
-      if (hops > 0) hops else serveHops(spark, dir), entries)
+    serveResult(spark, dir,
+      serveSearch(queriesDf(spark, dir),
+        exemplarsOf(spark, dir).filter(col("cell") >= NumQueries),
+        serveIndexOf(edges, corpus(spark, dir)), beam, entries,
+        if (hops > 0) hops else serveHops(spark, dir)))
 
   /** Persist the DIVERSIFIED serving graph as parquet — the graph-index
     * artifact a deployment builds once (descent + ss18 prune, optionally
@@ -2104,34 +2120,18 @@ object Similarity {
       if (stored.columns.contains("batch_id"))
         graft.streaming.AnnIngest.latestGraph(spark, indexPath)
       else stored
-    serveCore(spark, dir,
-      undirected(current.select(col("src_id"), col("neighbor_id")))
-        .transform(GraftCheckpoint.pin),
-      ServeBeam, serveHops(spark, dir), ServeEntries)
+    graphServeOver(spark, dir, current)
   }
 
-  /** One bounded traversal at (beam, entries) to `hops` depth, returning
-    * the DISJOINT per-hop pieces (see [[serveWalk]]) — the state after
-    * hop h is `serveUnion(pieces.take(h + 1))`. Shared by the ss17 serve
-    * (which formats only the final state) and the ss19 sweep (which
-    * measures every prefix — a hop-depth sweep costs ONE traversal, not
-    * one per depth). */
-  private def serveVisitedByHop(spark: SparkSession, dir: String,
-                                undP: DataFrame, beam: Int, entries: Int,
-                                hops: Int): Seq[DataFrame] =
-    serveVisitedByHopFrames(corpus(spark, dir), queriesDf(spark, dir),
-      exemplarsOf(spark, dir).filter(col("cell") >= NumQueries),
-      undP, beam, entries, hops)
-
-  /** The traversal over ARBITRARY (vec_id, v) corpus / (query_id, q)
-    * query / (cell, cv) entry frames — the serve path above binds the
-    * fixture tables; [[graft.streaming.AnnIngest]] binds a persisted
-    * index's vector store with NEW vectors as queries (the HNSW insert
-    * primitive: an insert IS a search for the insertion neighborhood). */
-  private[graft] def serveVisitedByHopFrames(e: DataFrame, q: DataFrame,
-                                ex: DataFrame, undP: DataFrame,
-                                beam: Int, entries: Int,
-                                hops: Int): Seq[DataFrame] = {
+  /** The search over ARBITRARY (query_id, q) query, (cell, cv) entry and
+    * index inputs — the serve path above binds the fixture tables;
+    * [[graft.streaming.AnnIngest]] binds a persisted index's vector store
+    * with NEW vectors as queries (the HNSW insert primitive: an insert IS
+    * a search for the insertion neighborhood). The entries are each
+    * query's `entries` nearest cells by exact cosine (score desc, then
+    * cell), as in the twin's v0. */
+  private[graft] def serveSearch(q: DataFrame, ex: DataFrame, index: ServeIndex,
+                                 beam: Int, entries: Int, hops: Int): DataFrame = {
     val entW = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("node_id"))
     val entry = q.crossJoin(ex)
@@ -2139,74 +2139,24 @@ object Similarity {
         Dedup.cosine(col("q"), col("cv")).as("score"))
       .withColumn("rn", row_number().over(entW))
       .filter(col("rn") <= entries).drop("rn")
-    // each hop's scored set is consumed by two downstream branches
-    // (visited-union and next-frontier); pin per hop (the
-    // cur12/dd11 shared-subtree discipline) or the unrolled lineage
-    // re-executes every prior hop 2^h times
-    serveWalk(entry, undP, beam, hops, cands => cands
-      .join(e.withColumnRenamed("vec_id", "node_id"), "node_id")
+    beamSearch(q, entry, index, beam, hops)
+  }
+
+  /** The walk itself, scorer-agnostic: the index scores candidates by
+    * exact cosine (ss17/ss19/ss20, inserts) or by the dot against SQ8
+    * codes (ss21). Takes (query_id, node_id, score) entries and
+    * (query_id, q) queries, and returns every node the walk scores as
+    * (query_id, node_id, score, hop), the entries at hop 0: the visited
+    * set after hop h is the rows with `hop <= h`. One [[ServeWalk]] call
+    * per query row — no per-hop job, no pinned piece. */
+  private def beamSearch(q: DataFrame, entry: DataFrame, index: ServeIndex,
+                         beam: Int, hops: Int): DataFrame =
+    entry.groupBy(col("query_id"))
+      .agg(collect_list(struct(col("node_id"), col("score"))).as("entries"))
       .join(q, "query_id")
-      .select(col("query_id"), col("node_id"),
-        Dedup.cosine(col("q"), col("v")).as("score")))
-  }
-
-  /** The walk itself, scorer-agnostic: ss17/ss19/ss20 score candidates
-    * by exact cosine against the corpus scan; ss21 scores them by PQ
-    * ADC lookups against the code table (DiskANN's in-memory tier). The
-    * `score` callback maps a (query_id, node_id) candidate frame to
-    * (query_id, node_id, score).
-    *
-    * Returns the DISJOINT per-hop PIECES — element 0 is the checkpointed
-    * entry state, element h the nodes first scored at hop h (the left-anti
-    * against visited makes pieces disjoint by construction). The visited
-    * set after hop h is `serveUnion(pieces.take(h + 1))`. r20: the walk
-    * used to return CUMULATIVE unions per hop, so ss19's 18-state sweep
-    * union held 81 checkpointed-RDD leaves and every aggregate pass over
-    * it ran ~81 tasks each hauling a ~2.5 MB task binary (measured ~25 s
-    * of task time per timed run on ~45k rows); pieces are each read once. */
-  private def serveWalk(entry: DataFrame, undP: DataFrame, beam: Int,
-                        hops: Int,
-                        score: DataFrame => DataFrame): Seq[DataFrame] = {
-    val entryP = entry.transform(GraftCheckpoint.pin)
-    var visited = entryP
-    var frontier = entryP.select(col("query_id"), col("node_id"))
-    val pieces = Seq.newBuilder[DataFrame]
-    pieces += entryP
-    for (_ <- 1 to hops) {
-      // NOTE: no broadcast() hints here — measured WORSE (3.3 s vs 2.0 s
-      // per serve): every broadcast of a lazy small frame is its own
-      // collect+broadcast job, and at 4 hops the per-JOB fixed cost
-      // dominates the tiny shuffles these joins otherwise do. One
-      // checkpoint job per hop is the minimum job count.
-      val cands = frontier
-        .join(undP.withColumnRenamed("src_id", "node_id"), "node_id")
-        .select(col("query_id"), col("neighbor_id").as("node_id"))
-        .distinct()
-        .join(visited.select(col("query_id"), col("node_id")),
-          Seq("query_id", "node_id"), "left_anti")
-      val scored = score(cands).transform(GraftCheckpoint.pin)
-      // visited is a union of already-checkpointed pieces — its lineage is
-      // flat, no extra pin needed
-      visited = visited.union(scored)
-      frontier = scored.groupBy(col("query_id"))
-        .agg(graft.functions.TopKByScore.topK(
-          col("score"), col("node_id"), beam).as("top"))
-        .select(col("query_id"), explode(col("top")).as("e"))
-        .select(col("query_id"), col("e.id").as("node_id"))
-      pieces += scored
-    }
-    pieces.result()
-  }
-
-  /** Flat union of checkpointed walk pieces — the visited state after
-    * `pieces.size - 1` hops. */
-  private[graft] def serveUnion(pieces: Seq[DataFrame]): DataFrame =
-    pieces.reduce(_.union(_))
-
-  private def serveCore(spark: SparkSession, dir: String, undP: DataFrame,
-                        beam: Int, hops: Int, entries: Int): DataFrame =
-    serveResult(spark, dir,
-      serveUnion(serveVisitedByHop(spark, dir, undP, beam, entries, hops)))
+      .select(col("query_id"), explode(ServeWalk.visited(col("q"),
+        col("entries"), index, beam, hops)).as("w"))
+      .select(col("query_id"), col("w.node_id"), col("w.score"), col("w.hop"))
 
   private def serveResult(spark: SparkSession, dir: String,
                           visited: DataFrame): DataFrame = {
@@ -2253,7 +2203,7 @@ object Similarity {
 
   /** One serve traversal's CTE chain at (beam, entries) to `hops` depth,
     * prefix-named so the sweep twin can stack several chains over the
-    * shared CTEs — the SQL rendering of [[serveVisitedByHop]]. `gate(h)`
+    * shared CTEs — the SQL unroll of [[ServeWalk]]'s loop. `gate(h)`
     * injects an extra per-hop candidate predicate: the ss17 twin gates
     * hop h on the data-computed scaled depth (hops beyond it produce
     * empty candidate sets, so v_h stalls at v_{hops(n)} — a static
@@ -2331,11 +2281,6 @@ object Similarity {
     * vectors. */
   private val DiskRefineR = 10
 
-  /** The SQ-scored walk's visited union (ss21); its checkpointed pieces
-    * are the union's `LogicalRDD` leaves, which [[SessionCache.release]]
-    * frees. */
-  private val sqVisitedCache = SessionCache.persisted()
-
   /** ss21: COMPRESSED-SCORED GRAPH SERVE WITH EXACT REFINE — the DiskANN
     * memory-hierarchy split (Jayaram Subramanya et al. 2019) on the ss18
     * graph: walk exactly like ss17, but score every candidate (entries
@@ -2364,24 +2309,21 @@ object Similarity {
     val decoded = sqIndex(spark, dir)
       .select(col("neighbor_id").as("node_id"), xq.as("xq"))
     val q = queriesDf(spark, dir)
-    val sqOf: DataFrame => DataFrame = cands => cands
-      .join(decoded, "node_id")
-      .join(q, "query_id")
-      .select(col("query_id"), col("node_id"),
-        graft.functions.VectorFunctions.dotProduct(col("q"), col("xq"))
-          .as("score"))
     val entW = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("node_id"))
     val exCells = exemplarsOf(spark, dir).filter(col("cell") >= NumQueries)
       .select(col("cell").as("node_id"))
-    val entry = sqOf(q.select(col("query_id")).crossJoin(exCells))
+    val entry = q.crossJoin(exCells).join(decoded, "node_id")
+      .select(col("query_id"), col("node_id"),
+        graft.functions.VectorFunctions.dotProduct(col("q"), col("xq"))
+          .as("score"))
       .withColumn("rn", row_number().over(entW))
       .filter(col("rn") <= ServeEntries).drop("rn")
-    // the SQ-scored walk caches per (session, dir) like ss17's exact
-    // walk — one traversal per battery, assemblies re-read it
-    val visited = sqVisitedCache.get(spark, dir)(
-      serveUnion(serveWalk(entry, serveAdjacency(spark, dir),
-        ServeBeam, serveHops(spark, dir), sqOf)))
+    // the walk scores against the same graph's dequantized codes: one
+    // collect per (session, dir), like ss17's index
+    val index = serveIndexCache.get(spark, s"$dir#sq")(
+      serveIndex(spark, dir).withVectors(collectVectors(decoded), cosine = false))
+    val visited = beamSearch(q, entry, index, ServeBeam, serveHops(spark, dir))
     val vis = visited.groupBy(col("query_id"))
       .agg(count(lit(1)).as("visited_count"))
     val short = visited.groupBy(col("query_id"))
@@ -2482,8 +2424,8 @@ object Similarity {
     * scored node including routed-through non-matching ones — the
     * navigability price, visible under the gate.
     *
-    * Scale: shares ss17's cached traversal verbatim (one walk per
-    * battery serves both assemblies); the label attach is a key join of
+    * Scale: shares ss17's walk verbatim (same index, same setting, same
+    * depth); the label attach is a key join of
     * the visited set (≤ hops·beam·degree rows per query) against the
     * embeddings scan; the filtered exact audit is ss1's one scan. */
   def graphServeFiltered(spark: SparkSession, dir: String): DataFrame = {
@@ -2563,45 +2505,26 @@ object Similarity {
     * itself a hash-gated query, so it re-runs whenever the index build
     * changes). For each (beam, entries) in [[SweepSettings]] and each
     * hop depth 1..[[MaxServeHops]], the ACHIEVED recall@3 and visited work
-    * off the cached ss18 adjacency — per-hop numbers come from the one
-    * traversal's prefixes, not separate runs. Ratios divide exact
+    * over the cached serve index — per-hop numbers come from each walk's
+    * `hop` column, not separate runs. Ratios divide exact
     * BIGINTs once (hits/30, visited/10), so the doubles are engine-
     * identical. */
   def serveSweep(spark: SparkSession, dir: String): DataFrame = {
     val exact = knnBruteForce(spark, dir).filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-    // every setting's traversal comes from the per-(session, dir,
-    // setting) cache — the standard setting is the SAME checkpointed
-    // walk ss17/ss20 serve from, so per battery each setting's hop chain
-    // runs once, in the family warm-up, on the calling thread (the r13
-    // Future fan-out died with the cache: no unbounded Await, no
-    // concurrent first-touch double-build — r13 ADVICE).
-    //
-    // r20 assembly: each DISJOINT piece p (0 = entry) contributes to the
-    // cumulative state of every hop ≥ max(p, 1), so the per-hop rows come
-    // from ONE read of each piece exploded over its hop range instead of
-    // a union of 18 cumulative states (81 checkpointed leaves, each
-    // scanned per aggregate pass with a ~2.5 MB task binary — measured
-    // ~25 s task time per timed run on ~45k rows). Row-for-row the same
-    // multiset `hop h ⇒ pieces 0..h` as before.
-    val tagged = SweepSettings.flatMap { case (beam, entries) =>
-      servePieces(spark, dir, beam, entries).take(MaxServeHops + 1)
-        .zipWithIndex.map { case (piece, p) =>
-          piece.select(lit(beam.toLong).as("beam"),
-            lit(entries.toLong).as("entries"),
-            explode(sequence(lit(math.max(p, 1).toLong),
-              lit(MaxServeHops.toLong))).as("hop"),
-            col("query_id"), col("node_id"), col("score"))
-        }
-    }
-    // ONE union of the disjoint tagged pieces, ONE repartition exchange
-    // (width from the cluster — AQE stage reuse executes the 21-leaf scan
-    // once and both keyed aggregates below read the same compact shuffle
-    // output), and TWO keyed aggregates — not 12 separate scalar-
-    // aggregate branches, whose per-stage fixed cost dominated the
-    // sweep's final action
-    val all = tagged.reduce(_.union(_))
-      .repartition(spark.sparkContext.defaultParallelism)
+    // a node first scored at hop p belongs to the visited state of every
+    // depth h >= max(p, 1): each setting's walk is read once and its rows
+    // exploded over their depth range, then TWO keyed aggregates — not 18
+    // cumulative states, nor 12 scalar-aggregate branches whose per-stage
+    // fixed cost dominated the sweep's final action
+    val all = SweepSettings.map { case (beam, entries) =>
+      serveVisited(spark, dir, beam, entries)
+        .filter(col("hop") <= MaxServeHops)
+        .select(lit(beam.toLong).as("beam"), lit(entries.toLong).as("entries"),
+          explode(sequence(greatest(col("hop"), lit(1)).cast(LongType),
+            lit(MaxServeHops.toLong))).as("hop"),
+          col("query_id"), col("node_id"), col("score"))
+    }.reduce(_.union(_))
     val keys = Seq(col("beam"), col("entries"), col("hop"))
     val top3 = all.groupBy(keys :+ col("query_id"): _*)
       .agg(graft.functions.TopKByScore.topK(

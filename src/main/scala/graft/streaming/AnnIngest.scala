@@ -150,8 +150,9 @@ object AnnIngest {
     * artifact writes heals on replay. `failpoint(i)` fires before the
     * i-th artifact write (0 = graph, 1 = cells, 2 = vectors) — the
     * crash-adjudication spec's hook, a no-op in production. Every frame
-    * the upsert pins, the serve walk's per-hop pieces included, is
-    * released before it returns or throws. */
+    * the upsert pins is released before it returns or throws; the
+    * insert search collects the prior graph and vector store into one
+    * driver-side index (O(index), like the serve path) and pins nothing. */
   def upsertVectors(spark: SparkSession, indexDir: String,
                     batch: DataFrame, batchId: Long,
                     failpoint: Int => Unit = _ => ()): Unit =
@@ -185,14 +186,12 @@ object AnnIngest {
       //    prior graph/vector store; entries restricted to exemplar cells
       //    that are still prior nodes (a batch could contain an exemplar
       //    id). Nodes whose vector left the store (updated ids reachable
-      //    via stale in-edges) drop out at the score join.
-      val undP = Similarity.undirected(
-        graph.select(col("src_id"), col("neighbor_id"))).transform(pins.pin)
+      //    via stale in-edges) are skipped by the walk, never visited.
       val exPrior = ex.join(vectors.select(col("vec_id").as("cell")), "cell")
       val q = newV.select(col("vec_id").as("query_id"), col("v").as("q"))
-      val visited = pins.hold(Similarity.serveUnion(
-        Similarity.serveVisitedByHopFrames(vectors, q, exPrior, undP,
-          beam = 8, entries = 3, hops = Similarity.serveHopsOf(nPrior))))
+      val visited = Similarity.serveSearch(q, exPrior,
+        Similarity.serveIndexOf(graph, vectors),
+        beam = 8, entries = 3, hops = Similarity.serveHopsOf(nPrior))
       val found = visited.groupBy(col("query_id"))
         .agg(graft.functions.TopKByScore.topK(
           col("score"), col("node_id"), r).as("top"))

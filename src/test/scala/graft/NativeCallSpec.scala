@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{array, col, lit, split}
+import org.apache.spark.sql.functions.{array, col, lit, split, struct, transform}
 import org.apache.spark.sql.types._
 
-import graft.functions.{BpeTable, BpeUtil, BpeVocab, LshFunctions, TextHashFunctions => F}
+import graft.functions.{BpeTable, BpeUtil, BpeVocab, LshFunctions, ServeIndex, ServeWalk,
+  TextHashFunctions => F}
 
 /** The native helpers are called through Spark's StaticInvoke, which
   * codegens a direct static call and, with codegen off, evaluates by
@@ -64,6 +65,14 @@ class NativeCallSpec extends SparkSpec {
     BpeTable.Char.bandN).toArray[AnyRef](StringType).map(_.toString).toSeq
   private val vocab = BpeVocab(marketTokens.distinct.sorted.zipWithIndex.toMap)
 
+  /** A serve graph over nodes 1..9 (node 6 has no vector): edges i–i+1
+    * and i–i+3, 64-dim vectors. Row 1 enters at 1, 3, 5 and 7, row 2 at
+    * node 42 (not in the graph), row 5 at 2 and 4. */
+  private val serveIndex = ServeIndex.build(
+    (1L to 8L).map(i => i -> (i + 1)) ++ (1L to 6L).map(i => i -> (i + 3)),
+    (1L to 9L).filter(_ != 6L).map(i => i -> Array.tabulate(64)(j => math.cos(i * j + 1.0))),
+    cosine = true)
+
   private val calls: Seq[(String, Column)] = {
     val (toks, dirty, a, b, la, lb, payload) =
       (col("toks"), col("dirty"), col("a"), col("b"), col("la"), col("lb"), col("payload"))
@@ -96,7 +105,10 @@ class NativeCallSpec extends SparkSpec {
       "bpe_decode_bytes" -> F.bpeDecodeBytes(toks),
       "bpe_encode_ids" -> F.bpeEncodeIds(b, vocab),
       "bpe_decode_ids" -> F.bpeDecodeIds(col("ids"), vocab),
-      "lsh_code" -> LshFunctions.lshCode(col("v")))
+      "lsh_code" -> LshFunctions.lshCode(col("v")),
+      "serve_walk" -> ServeWalk.visited(col("v"),
+        transform(la, x => struct(x.as("node_id"), x.cast(DoubleType).as("score"))),
+        serveIndex, 2, 3))
   }
 
   /** Binary values as byte lists, so nested arrays compare by content
@@ -177,6 +189,12 @@ class NativeCallSpec extends SparkSpec {
       ids1.drop(known.length).forall(_ == BpeUtil.UnkId), ids1)
     assert(value(2L, "bpe_decode_ids") == "\uFFFD\uFFFD")
     assert(value(1L, "bpe_decode_ids") == vocab.inverse.take(2).mkString)
+    // the serve index rides in as a literal too: an entry outside the graph
+    // is visited alone, no entry walks nothing, and row 1 reaches hop 1
+    assert(value(2L, "serve_walk") == Seq(Seq(42L, 42.0, 0)))
+    assert(value(4L, "serve_walk") == Seq.empty)
+    assert(value(1L, "serve_walk").asInstanceOf[scala.collection.Seq[Seq[Any]]]
+      .exists(_(2) == 1))
     // result nullability: null only where the helper itself can return it
     val nn = spark.range(1).select(array(lit("a")).as("t"))
       .select(F.simhash64(col("t")), F.clfTotal(col("t")), F.sortedPairs(array(lit(1L))))

@@ -313,10 +313,14 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       "serve must never cartesian the corpus")
     assert(p.contains("cosine_sim"), "native cosine expected")
-    // the final top-k and per-hop frontier keeps are bounded-heap
-    // aggregates (TopKByScore), never a corpus-wide window
+    // the final top-k keep is a bounded-heap aggregate (TopKByScore),
+    // never a corpus-wide window; the walk's frontier keeps happen inside
+    // the per-query beam search
     assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"),
       "bounded-heap keeps expected")
+    // the walk reads no checkpointed piece: one per-query search, not a
+    // union of pinned per-hop frames
+    assert(!p.contains("ExistingRDD"), "serve must not scan pinned walk pieces")
   }
 
   test("dd26/mm9: sweep and census are window-free with no cartesian joins") {
