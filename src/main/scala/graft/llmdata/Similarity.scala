@@ -1902,10 +1902,9 @@ object Similarity {
     * shipped with the plan as a literal — so the index is O(corpus) in the
     * driver heap and in each stage's task binary: at most 8·dim + 16·R
     * bytes per node for stored out-degree R, 1.3 MB at sf0.1's 1 990
-    * vectors (SCALING.md). Past a
-    * few hundred MB the corpus outgrows this posture and needs a
-    * partition-local index per corpus shard instead; per-query work stays
-    * O(hops·beam·degree) either way. */
+    * vectors (SCALING.md). Past a few hundred MB the corpus outgrows this
+    * posture and needs a partition-local index per corpus shard instead;
+    * per-query work stays O(hops·beam·degree) either way. */
   private[graft] val ServeBeam = 9
 
   /** Serve hop budget scales with the corpus, with a MEASURED knee at
@@ -2047,9 +2046,10 @@ object Similarity {
     * Cached per (session, dir, setting) as driver-local rows (at most
     * queries × hops·beam·degree of them). Re-running the walk on every
     * serve pass measured ss20 at 1.49 s `battery.ss.wall_s` against 0.86 s
-    * at the parent (perfbench `--trace 1`, 4 cores). A persisted frame
-    * is no cheaper: its lineage carries the [[ServeIndex]] literal into
-    * the task binary of every stage that reads it. */
+    * for the hop-unrolled walk's cached pieces (perfbench `--trace 1`, 4
+    * cores). A persisted frame is no cheaper: its lineage carries the
+    * [[ServeIndex]] literal into the task binary of every stage that
+    * reads it. */
   private val visitedCache = new SessionCache[DataFrame](_ => ())
 
   private def serveVisited(spark: SparkSession, dir: String,
